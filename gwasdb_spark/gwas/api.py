@@ -4,6 +4,12 @@ Every function mirrors one reactive query in the app; each returns a LAZY
 DataFrame — collect stays at the caller, exactly like `collect()` in app.R
 (SURVEY.md §3 entry-point 1). All predicates bind `chr` (partition pruning)
 and `pos` ranges (row-group skipping on the pos-sorted layout).
+
+The queries are driver-bound (a few small pruned scans each), so each is
+shaped to one Spark job per step: tables come from the warehouse's
+resolved-relation memo, the locus-window anchor is one `collect`, and
+results bounded by their pushed predicates sort in a single partition
+instead of paying a global sort's range-sampling job and exchange.
 """
 
 from __future__ import annotations
@@ -21,7 +27,8 @@ def markers_by_region(wh: Warehouse, chrom: int, start: int, end: int) -> DataFr
         wh.read("b37")
         .filter((F.col("chr") == chrom) & F.col("pos").between(start, end))
         .select("chr", "pos", "kgp_id")
-        .orderBy("pos")
+        .coalesce(1)
+        .sortWithinPartitions("pos")
     )
 
 
@@ -58,13 +65,20 @@ def markers_by_probe(wh: Warehouse, probe_regex: str) -> DataFrame:
     to the parquet scan (StringStartsWith), so min/max name stats skip
     every non-overlapping row group — the b-tree-probe replacement
     (R/gwas_ddl.sql:5). Unanchored regexes still scan, but only the
-    skinny 3-column index, not wide b37."""
+    skinny 3-column index, not wide b37.
+
+    An anchored probe's result is bounded by its pushed prefix and sorts
+    in one partition; an unanchored one scans the whole index in parallel
+    and keeps the global sort."""
     src = _marker_source(wh)
     cond = F.col("kgp_id").rlike(probe_regex)
     prefix = _literal_prefix(probe_regex)
     if prefix:
         cond = F.col("kgp_id").startswith(prefix) & cond
-    return src.filter(cond).select("chr", "pos", "kgp_id").orderBy("chr", "pos")
+    out = src.filter(cond).select("chr", "pos", "kgp_id")
+    if prefix:
+        return out.coalesce(1).sortWithinPartitions("chr", "pos")
+    return out.orderBy("chr", "pos")
 
 
 def marker_exact(wh: Warehouse, kgp_id: str) -> DataFrame:
@@ -93,16 +107,20 @@ def locus_window(
     the window query binds chr + pos BETWEEN, so partition pruning + row-
     group skipping leave a few MB scanned regardless of warehouse size.
     The app's post-collect `filter(name %in% studies)` (app.R:176) is
-    folded into the plan (SURVEY.md §3 note)."""
+    folded into the plan (SURVEY.md §3 note).
+
+    The anchor is one `collect` of the pushed-down kgp_id equality: kgp_id
+    is the PK, so at most one row comes back, and `first()` would instead
+    run a take that scans one partition and then grows (1-3 jobs)."""
     anchor = (
         _marker_source(wh)
         .filter(F.col("kgp_id") == kgp_id)
         .select("chr", "pos")
-        .first()
+        .collect()
     )
-    if anchor is None:
+    if not anchor:
         return wh.read("combined").limit(0)
-    chrom, pos = anchor["chr"], anchor["pos"]
+    chrom, pos = anchor[0]["chr"], anchor[0]["pos"]
     out = wh.read("combined").filter(
         (F.col("chr") == chrom) & F.col("pos").between(pos - flank, pos + flank)
     )

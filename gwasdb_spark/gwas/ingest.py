@@ -26,6 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gwasdb_spark import schemas as S
 from gwasdb_spark.functions.scalar import maf_expr, neg_log10
@@ -48,7 +49,17 @@ class RawStudyInputs:
 
 
 def read_raw(spark: SparkSession, inputs: RawStudyInputs) -> dict[str, DataFrame]:
-    gwas = read_delim(spark, inputs.gwas_tsv, schema=S.GWAS_RAW)
+    # the effect column (plink's OR or BETA) is named after `stat_col`,
+    # so the DAG below binds whichever statistic the study carries
+    gwas_schema = T.StructType(
+        [
+            T.StructField(inputs.stat_col, f.dataType, f.nullable)
+            if f.name == "or"
+            else f
+            for f in S.GWAS_RAW.fields
+        ]
+    )
+    gwas = read_delim(spark, inputs.gwas_tsv, schema=gwas_schema)
     hwe = read_delim(spark, inputs.hwe_tsv, schema=S.HWE_RAW)
     mfi = read_delim(spark, inputs.mfi_tsv, schema=S.MFI_RAW, header=False)
     out = {"gwas": gwas, "hwe": hwe, "mfi": mfi}

@@ -12,6 +12,21 @@ Physical design for the 93M-variant / 100 TB case (SURVEY.md §4):
 - gold `combined` is the persisted denormalized view (the reference's
   `combined` table / export view, R/postgres_process.Rmd:137) — persisted
   because Spark views re-execute while the app re-queries interactively.
+
+Read path: a `Warehouse` resolves each table once. `read(name)` memoizes
+the `spark.read.parquet` relation per instance, so file listing,
+partition discovery and the schema-inference job happen on the first
+read only; every later query plans against the cached file index. The
+app's interactive queries were driver-bound on exactly that work.
+
+Invalidation contract (the one Spark's catalog file-status cache has):
+every `Warehouse` method that changes a table drops its memo entry once
+the write has finished — `write`, `append`, `build_marker_index`, and
+`build_combined`'s rename swap (`combined` and `combined_tmp_`). A writer
+that changes a table's files out of band (another process, another
+`Warehouse` on the same root, a manual `rm`) must call `refresh(name)`
+before this instance reads that table again, as Spark requires a
+`REFRESH TABLE` after an external write.
 """
 
 from __future__ import annotations
@@ -32,6 +47,7 @@ class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._relations: dict[str, DataFrame] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -52,14 +68,26 @@ class Warehouse:
         if name in CHR_PARTITIONED and "chr" in df.columns:
             df = df.sortWithinPartitions("chr", "pos") if "pos" in df.columns else df
             writer = df.write.mode(mode).partitionBy("chr")
-        writer.parquet(self.path(name))
+        try:
+            writer.parquet(self.path(name))
+        finally:
+            self.refresh(name)
 
     def append(self, name: str, df: DataFrame) -> None:
         """INSERT INTO ... SELECT (SURVEY.md U2) as a partitioned append."""
         self.write(name, df, mode="append")
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        """The table's resolved relation, listed and schema-inferred on
+        the first read only (module docstring: invalidation contract)."""
+        df = self._relations.get(name)
+        if df is None:
+            df = self._relations[name] = self.spark.read.parquet(self.path(name))
+        return df
+
+    def refresh(self, name: str) -> None:
+        """Drop `name`'s resolved relation; the next read re-lists it."""
+        self._relations.pop(name, None)
 
     def register_views(self) -> None:
         """Expose every table to SQL-text queries (entry-point 3)."""
@@ -88,12 +116,15 @@ class Warehouse:
         group. Delta/Iceberg z-order+bloom is the transactional upgrade;
         no Delta jar ships in this container (documented ROADMAP.md)."""
         idx = self.read("b37").select("kgp_id", "chr", "pos")
-        (
-            idx.repartitionByRange(n_files, "kgp_id")
-            .sortWithinPartitions("kgp_id")
-            .write.mode("overwrite")
-            .parquet(self.path("marker_index"))
-        )
+        try:
+            (
+                idx.repartitionByRange(n_files, "kgp_id")
+                .sortWithinPartitions("kgp_id")
+                .write.mode("overwrite")
+                .parquet(self.path("marker_index"))
+            )
+        finally:
+            self.refresh("marker_index")
         return self.read("marker_index")
 
     # -- gold -------------------------------------------------------------
@@ -148,7 +179,11 @@ class Warehouse:
         import shutil
 
         final = self.path("combined")
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(self.path("combined_tmp_"), final)
+        try:
+            if os.path.exists(final):
+                shutil.rmtree(final)
+            os.rename(self.path("combined_tmp_"), final)
+        finally:
+            # `write` already dropped combined_tmp_'s entry
+            self.refresh("combined")
         return self.read("combined")

@@ -132,21 +132,20 @@ def upsert_cell_index(
     # touched-cell probe, two broadcast anti-joins, the union into the
     # merged layout, and the returned count. The old path re-evaluated
     # the batch subtree for each of those (four scans of the source).
-    # LAZY checkpoint (r14, guide §1.4): the cell-count collect below is
-    # the op's first action over the batch — it materializes the
-    # checkpoint as a side effect, so pinning costs zero extra jobs
-    # (eager=True paid a dedicated materialization job first).
+    # EAGER on purpose: the op's first action over the batch (the fused
+    # probe collect below) reaches it through two concurrent consumers,
+    # the groupBy branch and the broadcast of `upd_ids`. A lazy pin would
+    # let each consumer evaluate the batch on its own, so a
+    # nondeterministic batch could count and write different rows.
     updates = updates.select(
         "vec_id", "embedding", axis_cell(F.col("embedding")).alias("cell")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     upd_ids = updates.select("vec_id")
     # ONE bounded action answers the batch's new cells, its row count,
     # AND the replaced rows' old cells (r14, guide §1.4): the two probe
     # subtrees (batch cell-counts; manifest semi-join) are independent,
     # so unioned under a single collect their stages run CONCURRENTLY
-    # inside one job — the r13 shape paid two sequential jobs, and this
-    # collect is also the action that materializes the lazy batch
-    # checkpoint above.
+    # inside one job — the r13 shape paid two sequential jobs.
     manifest = spark.read.parquet(_manifest_path(base))
     probe_rows = (
         updates.groupBy("cell").count()

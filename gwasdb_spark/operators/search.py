@@ -459,7 +459,8 @@ def update_text_index(
       and delta alike).
     - doclen: pure append (new doc ids by contract).
     - consts: n_docs += |batch|; avgdl recomputed from the doc-grain
-      doclen table (an aggregate over |docs| rows, not the corpus).
+      doclen table minus tombstoned docs (an aggregate over |docs| rows,
+      not the corpus).
 
     Cost ∝ the BATCH: tokenize + two shuffles over new docs only, plus a
     doc-grain aggregate. `bm25_topk_indexed` needs no changes — it reads
@@ -509,15 +510,19 @@ def update_text_index(
     # action their stages run concurrently inside one job (the r13
     # shape paid three sequential driver round-trips). The batch count
     # reads the already-materialized checkpoint; avgdl reads the doclen
-    # dir AFTER its append, as before.
+    # dir AFTER its append, as before, over the live docs only: n_docs
+    # already excludes tombstoned docs, and so must the mean length.
+    live_doclen = spark.read.parquet(f"{index_dir}/doclen")
+    tomb = _read_tombstones(spark, index_dir)
+    if tomb is not None:
+        live_doclen = live_doclen.join(F.broadcast(tomb), "doc", "left_anti")
     stats = {
         r["k"]: float(r["v"])
         for r in (
             spark.read.parquet(f"{index_dir}/consts")
             .select(F.col("n_docs").alias("v"), F.lit("old_n").alias("k"))
             .unionByName(
-                spark.read.parquet(f"{index_dir}/doclen")
-                .agg((F.sum("dl") / F.count(F.lit(1))).alias("v"))
+                live_doclen.agg((F.sum("dl") / F.count(F.lit(1))).alias("v"))
                 .select("v", F.lit("avgdl").alias("k"))
             )
             .unionByName(
@@ -621,8 +626,11 @@ def recover_text_index(index_dir: str) -> None:
     exists, the compact had fully written the replacement (the .compact
     write commits before any rename), so renaming it in completes the
     interrupted swap; a leftover `<rel>.old` beside a live `<rel>` is the
-    post-swap crash window and is just garbage to reap. Idempotent and
-    cheap (two stats per relation) — compact_text_index runs it first."""
+    post-swap crash window and is just garbage to reap, and so is a
+    `<rel>.compact` beside a live `<rel>`: the compact died before its
+    first rename, so the live relation is still the committed one.
+    Idempotent and cheap (three stats per relation) — compact_text_index
+    runs it first."""
     import os
     import shutil
 
@@ -634,8 +642,10 @@ def recover_text_index(index_dir: str) -> None:
         )
         if not os.path.exists(live) and os.path.exists(tmp):
             os.rename(tmp, live)
-        if os.path.exists(live) and os.path.exists(old):
-            shutil.rmtree(old)
+        if os.path.exists(live):
+            for stray in (old, tmp):
+                if os.path.exists(stray):
+                    shutil.rmtree(stray)
 
 
 def compact_text_index(spark, index_dir: str) -> None:

@@ -37,9 +37,10 @@ def _snp_universe(rng: random.Random):
     return snps
 
 
-def write_raw_study(tmpdir: str, seed: int = 42) -> dict:
+def write_raw_study(tmpdir: str, seed: int = 42, quantitative: bool = False) -> dict:
     """Write one study's raw inputs (gwas/hwe/mfi TSVs) + return expected
-    facts for assertions."""
+    facts for assertions. A quantitative study carries plink's BETA
+    (normal, around 0) where a case/control study carries OR."""
     rng = random.Random(seed)
     snps = _snp_universe(rng)
     os.makedirs(tmpdir, exist_ok=True)
@@ -56,11 +57,11 @@ def write_raw_study(tmpdir: str, seed: int = 42) -> dict:
         wg = csv.writer(fg, delimiter="\t")
         wh = csv.writer(fh, delimiter="\t")
         wm = csv.writer(fm, delimiter="\t")
-        wg.writerow(["CHR", "SNP", "A1", "A2", "OR", "SE", "P"])
+        wg.writerow(["CHR", "SNP", "A1", "A2", "BETA" if quantitative else "OR", "SE", "P"])
         wh.writerow(["CHR", "SNP", "TEST", "A1", "A2", "GENO", "O_HET", "E_HET", "P"])
         # mfi is headerless (R/wrangle_data.Rmd:234)
         for s in snps:
-            or_val = round(rng.lognormvariate(0, 0.1), 4)
+            or_val = round(rng.gauss(0, 0.05) if quantitative else rng.lognormvariate(0, 0.1), 4)
             p = max(rng.random(), 1e-12)
             null_or = rng.random() < 0.05
             if null_or:
@@ -125,6 +126,42 @@ def b37_rows(snps) -> list[dict]:
         {"kgp_id": s["kgp_id"], "chr": s["chr"], "pos": s["pos"], "ref": s["ref"], "alt": s["alt"]}
         for s in snps
     ]
+
+
+def marker_rows(snps) -> list[dict]:
+    """The rs-name → kgp_id alias rows of the fixture's rs-named markers."""
+    return [
+        {"kgp_id": s["kgp_id"], "marker_name": s["snp"]}
+        for s in snps
+        if s["snp"].startswith("rs")
+    ]
+
+
+def build_warehouse(spark, root: str, raw_dir: str):
+    """A warehouse built the operator's way from one raw study: the b37,
+    study and marker dimensions, the study's ingest into gwas +
+    no_gwas_result, then the gold `combined`. The raw study's facts ride
+    along as `fixture_facts`."""
+    from gwasdb_spark import schemas as S
+    from gwasdb_spark.gwas.ingest import RawStudyInputs, ingest_study
+    from gwasdb_spark.gwas.warehouse import Warehouse
+
+    fx = write_raw_study(raw_dir)
+    w = Warehouse(spark, root)
+    w.write("b37", spark.createDataFrame(b37_rows(fx["snps"]), schema=S.B37))
+    w.write("study", spark.createDataFrame(study_rows(), schema=S.STUDY))
+    w.write("marker", spark.createDataFrame(marker_rows(fx["snps"]), schema=S.MARKER))
+    inputs = RawStudyInputs(
+        gwas_tsv=fx["gwas_tsv"], hwe_tsv=fx["hwe_tsv"], mfi_tsv=fx["mfi_tsv"]
+    )
+    gwas_rows, tombstones = ingest_study(
+        spark, inputs, study_id=1, marker=w.read("marker")
+    )
+    w.write("gwas", gwas_rows)
+    w.write("no_gwas_result", tombstones)
+    w.build_combined()
+    w.fixture_facts = fx
+    return w
 
 
 def study_rows() -> list[dict]:

@@ -302,3 +302,42 @@ def test_codebook_retrain_after_biased_delete(spark, tmp_path):
         for r in brute_force_topk(q, survivors, k=5).collect()
     }
     assert got == want
+
+
+def test_upsert_of_nondeterministic_batch_reports_written_rows(spark, tmp_path):
+    """The batch pin is eager: the probe collect reaches it through two
+    concurrent consumers (the cell-count branch and the broadcast of its
+    ids), so a nondeterministic batch is drawn once, and the returned
+    touched_cells / n_updates describe exactly the rows written."""
+    import random
+
+    base = str(tmp_path / "idx")
+    build_cell_index(_corpus(spark, n=200, dim=4), base)
+    acc = spark.sparkContext.accumulator(0)
+    dim, n = 4, 40
+
+    def draw(_vec_id):
+        acc.add(1)
+        return [random.random() for _ in range(dim)]
+
+    draw_udf = F.udf(draw, "array<float>").asNondeterministic()
+    # ids 180..219: 20 replacements, 20 additions, over 4 partitions
+    batch = spark.range(180, 180 + n, numPartitions=4).select(
+        F.col("id").alias("vec_id"), draw_udf("id").alias("embedding")
+    )
+    info = upsert_cell_index(spark, base, batch)
+
+    written = (
+        read_cell_index(spark, base)
+        .filter(F.col("vec_id") >= 180)
+        .withColumn("want_cell", axis_cell(F.col("embedding")))
+        .collect()
+    )
+    assert acc.value == n  # one draw per batch row
+    assert info["n_updates"] == len(written) == n
+    assert all(r["cell"] == r["want_cell"] for r in written)
+    assert {r["cell"] for r in written} <= set(info["touched_cells"])
+    manifest = spark.read.parquet(os.path.join(base, "manifest"))
+    assert sorted(
+        (r["vec_id"], r["cell"]) for r in manifest.filter("vec_id >= 180").collect()
+    ) == sorted((r["vec_id"], r["cell"]) for r in written)

@@ -11,38 +11,17 @@ from gwasdb_spark import schemas as S
 from gwasdb_spark.gwas import api
 from gwasdb_spark.gwas.audit import chr_distribution, warehouse_audit
 from gwasdb_spark.gwas.ingest import RawStudyInputs, ingest_study, next_study_id
-from gwasdb_spark.gwas.warehouse import Warehouse
 
-from tests.gwas_fixtures import b37_rows, study_rows, write_raw_study
+from tests.gwas_fixtures import build_warehouse, marker_rows, write_raw_study
 
 
 @pytest.fixture(scope="module")
 def wh(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("gwas_wh"))
-    fx = write_raw_study(str(tmp_path_factory.mktemp("raw")))
-    w = Warehouse(spark, root)
-
-    w.write("b37", spark.createDataFrame(b37_rows(fx["snps"]), schema=S.B37))
-    w.write("study", spark.createDataFrame(study_rows(), schema=S.STUDY))
-    marker = spark.createDataFrame(
-        [
-            {"kgp_id": s["kgp_id"], "marker_name": s["snp"]}
-            for s in fx["snps"]
-            if s["snp"].startswith("rs")
-        ],
-        schema=S.MARKER,
+    return build_warehouse(
+        spark,
+        str(tmp_path_factory.mktemp("gwas_wh")),
+        str(tmp_path_factory.mktemp("raw")),
     )
-    w.write("marker", marker)
-
-    inputs = RawStudyInputs(
-        gwas_tsv=fx["gwas_tsv"], hwe_tsv=fx["hwe_tsv"], mfi_tsv=fx["mfi_tsv"]
-    )
-    gwas_rows, tombstones = ingest_study(spark, inputs, study_id=1, marker=marker)
-    w.write("gwas", gwas_rows)
-    w.write("no_gwas_result", tombstones)
-    w.build_combined()
-    w.fixture_facts = fx
-    return w
 
 
 def test_ingest_row_accounting(wh):
@@ -97,6 +76,30 @@ def test_combined_matches_manual_join(wh, spark):
     # plotting columns present (gwasDB/app.R:164-182)
     for c in ("chr", "pos", "neg_log10_p", "name", "or"):
         assert c in wh.read("combined").columns
+
+
+def test_ingest_binds_beta_for_quantitative_study(spark, tmp_path):
+    """`stat_col="beta"` names the raw file's effect column `beta`, so a
+    quantitative study ingests; its rows equal the default `or` binding
+    of the same file (R/load_urate2020_gwas.Rmd:138)."""
+    fx = write_raw_study(str(tmp_path), quantitative=True)
+    marker = spark.createDataFrame(marker_rows(fx["snps"]), schema=S.MARKER)
+
+    def ingest(**stat):
+        inputs = RawStudyInputs(
+            gwas_tsv=fx["gwas_tsv"],
+            hwe_tsv=fx["hwe_tsv"],
+            mfi_tsv=fx["mfi_tsv"],
+            **stat,
+        )
+        rows, tombstones = ingest_study(spark, inputs, study_id=2, marker=marker)
+        return sorted(map(tuple, rows.collect())), sorted(map(tuple, tombstones.collect()))
+
+    beta_rows, beta_tombs = ingest(stat_col="beta")
+    or_rows, or_tombs = ingest()
+    assert beta_rows == or_rows and beta_tombs == or_tombs
+    assert len(beta_rows) + len(beta_tombs) == fx["n_snps"]
+    assert any(r[4] < 0 for r in beta_rows)  # a signed effect, not an OR
 
 
 def test_locus_window_flagship(wh):

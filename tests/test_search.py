@@ -205,3 +205,82 @@ def test_update_text_index_equals_full_rebuild(spark, tmp_path):
     assert [r.asDict() for r in replayed] == [r.asDict() for r in want]
     consts = spark.read.parquet(f"{incr_idx}/consts").collect()[0]
     assert consts["n_docs"] == 6.0
+
+
+_CHURN_DOCS = [
+    (1, "spark joins hash tables fast"),
+    (2, "hash partitioning spreads hash keys across many many partitions"),
+    (3, "sort merge join spills"),
+    (4, "broadcast join avoids the shuffle"),
+    (5, "window functions rank rows over a long long window frame"),
+    (6, "hash aggregation combines partials"),
+    (7, "join hints pick a hash join"),
+    (8, "skew join splits hot keys"),
+]
+
+
+def test_update_after_delete_scores_live_docs_only(spark, tmp_path):
+    """An update after a delete recomputes avgdl over the live docs, so
+    the indexed scores equal `bm25_topk` over the survivors exactly (the
+    tombstoned docs are long, so counting them would shift avgdl)."""
+    from gwasdb_spark.operators.search import (
+        bm25_topk_indexed,
+        build_text_index,
+        delete_from_text_index,
+        update_text_index,
+    )
+
+    df = spark.createDataFrame(_CHURN_DOCS, "doc_id long, text string")
+    idx = str(tmp_path / "idx")
+    build_text_index(df.filter("doc_id <= 6"), idx)
+    assert delete_from_text_index(df.filter("doc_id in (2, 5)"), idx) == 2
+    update_text_index(df.filter("doc_id in (7, 8)"), idx)
+
+    terms = ["hash", "join", "keys"]
+    live = df.filter("doc_id not in (2, 5)")
+    want = [tuple(r) for r in bm25_topk(live, terms, k=8).orderBy("rank").collect()]
+    got = sorted(
+        (tuple(r) for r in bm25_topk_indexed(spark, idx, terms, k=8).collect()),
+        key=lambda t: t[2],
+    )
+    assert got == want and len(want) == 6
+
+
+def test_recover_reaps_stray_compact_beside_live(spark, tmp_path):
+    """A pooled compact that dies after writing both `<rel>.compact`
+    dirs but before any rename leaves them beside the live relations;
+    recovery reaps both (the live relations are still the committed
+    ones), serving is unchanged, and the next compact completes."""
+    import os
+
+    from gwasdb_spark.operators.search import (
+        bm25_topk_indexed,
+        build_text_index,
+        compact_text_index,
+        delete_from_text_index,
+        recover_text_index,
+    )
+
+    df = spark.createDataFrame(_CHURN_DOCS, "doc_id long, text string")
+    idx = str(tmp_path / "idx")
+    build_text_index(df, idx)
+    delete_from_text_index(df.filter("doc_id = 3"), idx)
+    before = bm25_topk_indexed(spark, idx, ["hash", "join"], k=8).collect()
+    # the crash state: both replacements written, nothing renamed; the
+    # stray doclen copy is deliberately wrong so adoption would show
+    tomb = spark.read.parquet(f"{idx}/tombstones").select("doc")
+    spark.read.parquet(f"{idx}/postings").join(tomb, "doc", "left_anti").write.parquet(
+        f"{idx}/postings.compact"
+    )
+    spark.read.parquet(f"{idx}/doclen").limit(1).write.parquet(f"{idx}/doclen.compact")
+
+    recover_text_index(idx)
+    for rel in ("postings", "doclen"):
+        assert os.path.isdir(f"{idx}/{rel}")
+        assert not os.path.exists(f"{idx}/{rel}.compact")
+    assert bm25_topk_indexed(spark, idx, ["hash", "join"], k=8).collect() == before
+    recover_text_index(idx)  # idempotent on a clean index
+
+    compact_text_index(spark, idx)
+    assert not os.path.exists(f"{idx}/tombstones")
+    assert bm25_topk_indexed(spark, idx, ["hash", "join"], k=8).collect() == before
