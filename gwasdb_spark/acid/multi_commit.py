@@ -16,10 +16,11 @@ one level):
     <root>/<txn>.intent.json   -- participants: [(table, version, group)]
     <root>/<txn>.commit        -- THE atomic commit point (empty marker)
 
-1. STAGE: each table's new file group is written and stat'ed
-   (`AcidTable._write_group` — CHECK constraints validate here, so a
-   violation in EITHER table aborts the whole transaction before
-   anything is published).
+1. STAGE: each table's new file group is written and stat'ed by the
+   append stage single-table `AcidTable.append` runs too
+   (`AcidTable._stage_append`: schema check, then `_write_group` —
+   CHECK constraints validate here, so a violation in EITHER table
+   aborts the whole transaction before anything is published).
 2. INTENT: the participant list is fsynced and linked. From here,
    recovery knows exactly what to finish or undo.
 3. PUBLISH: each table's manifest is committed at its next version via
@@ -74,9 +75,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from gwasdb_spark.acid.table_log import (
+    _RETRIES,
     AcidTable,
     CommitConflict,
-    _fsync_dir,
+    _link_durably,
 )
 
 
@@ -107,18 +109,6 @@ class MultiTableTxn:
 
     def _marker_path(self, txn_id: str) -> str:
         return os.path.join(self.root, f"{txn_id}.commit")
-
-    def _link(self, body_bytes: bytes, dest: str) -> None:
-        tmp = os.path.join(self.root, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "wb") as fh:
-            fh.write(body_bytes)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, dest)  # atomic + exclusive
-        finally:
-            os.unlink(tmp)
-        _fsync_dir(self.root)
 
     # ---------------------------------------------------------- recover --
     def recover(self) -> dict:
@@ -177,16 +167,7 @@ class MultiTableTxn:
         names. Returns the reaped txn ids."""
         referenced: set[str] = set()
         for t in tables:
-            if not os.path.isdir(t._log):
-                continue
-            for name in os.listdir(t._log):
-                if not name.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(t._log, name)) as fh:
-                        m = json.load(fh)
-                except (OSError, ValueError):
-                    continue
+            for _, m in t._manifests():
                 txn = m.get("txn")
                 if txn:
                     referenced.add(txn["id"])
@@ -224,16 +205,7 @@ class MultiTableTxn:
         manifest, never touches data files."""
         txns: dict[str, dict[str, int]] = {}
         for t in tables:
-            if not os.path.isdir(t._log):
-                continue
-            for name in os.listdir(t._log):
-                if not name.endswith(".json"):
-                    continue
-                try:
-                    with open(os.path.join(t._log, name)) as fh:
-                        m = json.load(fh)
-                except (OSError, ValueError):
-                    continue
+            for _, m in t._manifests():
                 txn = m.get("txn")
                 if not txn or txn.get("root") != self.root:
                     continue
@@ -268,18 +240,10 @@ class MultiTableTxn:
         cut: dict[str, int] = {}
         for t in tables:
             found = None
-            if os.path.isdir(t._log):
-                for name in os.listdir(t._log):
-                    if not name.endswith(".json"):
-                        continue
-                    try:
-                        with open(os.path.join(t._log, name)) as fh:
-                            m = json.load(fh)
-                    except (OSError, ValueError):
-                        continue
-                    if (m.get("txn") or {}).get("id") == txn_id:
-                        found = m["version"]
-                        break
+            for _, m in t._manifests():
+                if (m.get("txn") or {}).get("id") == txn_id:
+                    found = m["version"]
+                    break
             if found is None:
                 raise ValueError(
                     f"{t.path} did not participate in transaction "
@@ -293,7 +257,6 @@ class MultiTableTxn:
         self,
         writes: list[tuple[AcidTable, DataFrame]],
         op: str = "txn_append",
-        max_retries: int = 3,
         failpoint: str | None = None,
     ) -> dict:
         """Append one batch to EACH table, all-or-nothing. Returns
@@ -302,42 +265,26 @@ class MultiTableTxn:
         any one aborts the whole statement. A version race lost to a
         concurrent single-table writer rolls the (invisible) partial
         publication back and retries against the new snapshots."""
-        from pyspark.sql.types import StructType
-
         self.recover()  # single-coordinator contract: safe here
         last_exc: Exception | None = None
-        for _ in range(max_retries + 1):
+        for _ in range(_RETRIES + 1):
             # -- stage every table's group first (check-validated) ----
-            staged: list[tuple[AcidTable, int, dict, str, dict]] = []
+            staged: list[tuple[AcidTable, int, str, list, dict, dict]] = []
             try:
                 for t, df in writes:
-                    base = t.latest_version()
-                    if base < 0:
-                        raise FileNotFoundError(
-                            f"table does not exist: {t.path}"
-                        )
+                    base, m = t._snapshot()
                     if t._tip_slot() != base:
                         raise CommitConflict(
                             f"{t.path} blocked by an unresolved "
                             "transaction at a higher slot"
                         )
-                    m = t._manifest(base)
-                    out = df
-                    if m.get("schema"):
-                        out, _ = t._evolve(
-                            df, StructType.fromJson(m["schema"]), False
-                        )
-                    group, st = t._write_group(
-                        out, m.get("checks"), m.get("bloom_cols"),
-                        m.get("column_map"),
-                    )
-                    staged.append((t, base, m, group, st))
+                    staged.append((t, base, *t._stage_append(df, m)))
                 _fail(failpoint, "stage")
             except Exception:
                 # InjectedCrash (BaseException) bypasses this on purpose:
                 # a real crash leaves orphan groups for vacuum's grace
                 # window, and the kill gate asserts exactly that state.
-                for t, _, _, group, _ in staged:
+                for t, _, group, _, _, _ in staged:
                     shutil.rmtree(
                         os.path.join(t._data, group), ignore_errors=True
                     )
@@ -348,21 +295,18 @@ class MultiTableTxn:
                 "op": op,
                 "tables": [
                     {"path": t.path, "version": base + 1, "group": group}
-                    for t, base, _, group, _ in staged
+                    for t, base, group, _, _, _ in staged
                 ],
             }
-            self._link(
+            _link_durably(
                 json.dumps(intent).encode(), self._intent_path(txn_id)
             )
             _fail(failpoint, "intent")
             linked: list[tuple[AcidTable, int]] = []
             try:
-                for t, base, m, group, st in staged:
-                    groups = list(m["file_groups"]) + [group]
-                    stats = dict(m.get("stats", {}))
-                    stats[group] = st
+                for t, base, _, groups, stats, meta in staged:
                     t._commit(
-                        base + 1, op, groups, stats, t._meta_of(m),
+                        base + 1, op, groups, stats, meta,
                         txn={"id": txn_id, "root": self.root},
                     )
                     linked.append((t, base + 1))
@@ -374,7 +318,7 @@ class MultiTableTxn:
                 # is invisible — unwind and retry on fresh snapshots
                 for t, v in linked:
                     os.unlink(t._manifest_path(v))
-                for t, _, _, group, _ in staged:
+                for t, _, group, _, _, _ in staged:
                     shutil.rmtree(
                         os.path.join(t._data, group), ignore_errors=True
                     )
@@ -382,7 +326,7 @@ class MultiTableTxn:
                 last_exc = exc
                 continue
             # ---- THE commit point: one atomic link flips all tables --
-            self._link(b"", self._marker_path(txn_id))
+            _link_durably(b"", self._marker_path(txn_id))
             _fail(failpoint, "marker")
             os.unlink(self._intent_path(txn_id))
             return {t.path: v for t, v in linked}

@@ -26,9 +26,10 @@ the groups whose stats admit a match — untouched groups are carried
 into the new manifest verbatim, their files never opened, never
 rewritten (mtime-stable, gated in scripts/stress_scale.py). At 100 TB
 this is the difference between a 1-row UPDATE costing one file group
-and costing a full table rewrite. A plain Column predicate still
-works and falls back to the full-snapshot rewrite (soundness over
-speed when the predicate is not statically analyzable).
+and costing a full table rewrite. Every DML op runs this one group
+rewrite: a plain Column predicate is not statically analyzable, so it
+touches every group (soundness over speed) and commits the bare op
+string; a Pred commits `<op>(pruned k/n)`.
 
 ACID properties and how they hold:
 - Atomic commit: the manifest is fully written to a temp file, fsynced,
@@ -47,10 +48,10 @@ ACID properties and how they hold:
 - Durability: data files and the manifest are fsynced before the link;
   the log advances only past complete manifests.
 - Consistency: every snapshot is a complete table version; DML ops are
-  copy-on-write (this implementation rewrites the full snapshot — the
-  file-granular rewrite that skips untouched files via min/max stats is
-  the same interface with a pushed-down touched-file predicate, noted
-  where it applies).
+  copy-on-write at file-group granularity: the touched groups are read,
+  transformed and written as one new group, every other group rides
+  into the next manifest verbatim. All single-table writers share one
+  OCC loop (`_occ`) and one snapshot resolver (`_snapshot`).
 
 Point-lookup skipping (round 10): tables created with `bloom_cols`
 carry a per-group bloom-filter sidecar (acid/bloom.py — the native
@@ -108,10 +109,14 @@ class SchemaMismatch(Exception):
     merge_schema=True (Delta's mergeSchema opt-in)."""
 
 
-# dtypes whose min/max are meaningful, orderable, and JSON-serializable
-_STATS_TYPES = (
-    "tinyint", "smallint", "int", "bigint", "float", "double",
-    "string", "boolean", "date",
+# OCC retries after the first attempt, for every single-table writer
+# and for MultiTableTxn.commit_appends
+_RETRIES = 3
+
+# dtypes whose min/max are meaningful and orderable (decimal too)
+_STAT_TYPE_NAMES = (
+    "byte", "short", "integer", "long", "float", "double",
+    "string", "boolean", "date", "timestamp", "timestamp_ntz",
 )
 
 
@@ -128,17 +133,60 @@ def _json_safe(v):
     return v
 
 
-def _check_violations(df: DataFrame, checks: dict) -> dict:
-    """{name: violating-row-count} for every failing CHECK, one
-    aggregate pass. SQL CHECK semantics: a row violates only when the
-    expression is FALSE — NULL/unknown passes (coalesce to TRUE)."""
-    aggs = [
+def _stats_aggs(schema, skip: str | None = None) -> tuple[list[str], list]:
+    """The one stats aggregate: (stat columns, aggregates) giving the
+    row count and each orderable column's min, max and non-null count —
+    the triple parquet footers carry. `skip` names a column to leave
+    out (a relayout's bucket column)."""
+    cols = [
+        f.name
+        for f in schema.fields
+        if f.name != skip
+        and (
+            f.dataType.typeName() in _STAT_TYPE_NAMES
+            or f.dataType.typeName().startswith("decimal")
+        )
+    ]
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in cols:
+        aggs += [
+            F.min(c).alias(f"__min_{c}"),
+            F.max(c).alias(f"__max_{c}"),
+            F.count(c).alias(f"__cnt_{c}"),
+        ]
+    return cols, aggs
+
+
+def _stats_of(row, cols: list[str]) -> dict:
+    """A `_stats_aggs` result row → the manifest's per-group
+    {col: [min, max, null_count, row_count]}."""
+    rows = int(row["__rows"] or 0)
+    return {
+        c: [
+            _json_safe(row[f"__min_{c}"]),
+            _json_safe(row[f"__max_{c}"]),
+            rows - int(row[f"__cnt_{c}"] or 0),
+            rows,
+        ]
+        for c in cols
+    }
+
+
+def _check_aggs(checks: dict) -> list:
+    """One violating-row count per CHECK. SQL CHECK semantics: a row
+    violates only when the expression is FALSE — NULL/unknown passes
+    (coalesce to TRUE)."""
+    return [
         F.sum(
             (~F.coalesce(F.expr(expr), F.lit(True))).cast("long")
         ).alias(f"__chk_{i}")
         for i, expr in enumerate(checks.values())
     ]
-    row = df.agg(*aggs).collect()[0]  # 1-row bounded collect
+
+
+def _violations(row, checks: dict) -> dict:
+    """A `_check_aggs` result row → {name: violating-row-count} for
+    every failing CHECK."""
     return {
         name: int(row[f"__chk_{i}"] or 0)
         for i, name in enumerate(checks)
@@ -169,6 +217,24 @@ def _fsync_dir(path: str) -> None:
         os.close(fd)
 
 
+def _link_durably(body: bytes, dest: str) -> None:
+    """Publish `body` at `dest` atomically and exclusively: write a temp
+    file beside it, fsync, `os.link` (raises FileExistsError iff `dest`
+    is taken — a torn write can never surface under the final name),
+    unlink the temp, fsync the directory."""
+    parent = os.path.dirname(dest)
+    tmp = os.path.join(parent, f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "wb") as fh:
+        fh.write(body)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, dest)
+    finally:
+        os.unlink(tmp)
+    _fsync_dir(parent)
+
+
 class AcidTable:
     """A versioned parquet table with atomic commits (see module doc)."""
 
@@ -193,8 +259,15 @@ class AcidTable:
         the log rather than leaving reorderable holes. The extra cost
         is one tiny json read per txn-tagged tip manifest; at real
         metadata scale a log checkpoint carries the visibility bit."""
+        for v, m in self._manifests():
+            if _txn_visible(m):
+                return v
+        return -1
+
+    def _slots(self) -> list[int]:
+        """Every version slot taken in `_log`, visible or pending."""
         if not os.path.isdir(self._log):
-            return -1
+            return []
         versions = []
         for name in os.listdir(self._log):
             if name.endswith(".json"):
@@ -202,29 +275,23 @@ class AcidTable:
                     versions.append(int(name[:-5]))
                 except ValueError:
                     continue
-        for v in sorted(versions, reverse=True):
+        return versions
+
+    def _manifests(self):
+        """(version, manifest) of every taken slot, newest first,
+        visible or pending; a slot racing a recovery unlink is
+        skipped."""
+        for v in sorted(self._slots(), reverse=True):
             try:
-                m = self._manifest(v)
+                yield v, self._manifest(v)
             except (OSError, ValueError):
-                continue  # racing a recovery unlink
-            if _txn_visible(m):
-                return v
-        return -1
+                continue
 
     def _tip_slot(self) -> int:
         """Highest PHYSICALLY TAKEN version slot (visible or pending) —
         where multi_commit allocates, so a transaction never stacks a
         version under a pending one."""
-        if not os.path.isdir(self._log):
-            return -1
-        best = -1
-        for name in os.listdir(self._log):
-            if name.endswith(".json"):
-                try:
-                    best = max(best, int(name[:-5]))
-                except ValueError:
-                    continue
-        return best
+        return max(self._slots(), default=-1)
 
     def _manifest(self, version: int) -> dict:
         with open(self._manifest_path(version)) as fh:
@@ -253,15 +320,21 @@ class AcidTable:
             )
         return m
 
+    def _snapshot(self, version: int | None = None) -> tuple[int, dict]:
+        """The one snapshot resolver every reader and writer goes
+        through: (version, manifest) of `version`, or of the latest
+        visible version when None. A path with no committed version
+        raises FileNotFoundError naming it."""
+        v = self.latest_version() if version is None else version
+        if v < 0:
+            raise FileNotFoundError(f"no committed version at {self.path}")
+        return v, self._visible_manifest(v)
+
     # ---------------------------------------------------------- write --
-    def _write_group(
-        self,
-        df: DataFrame,
-        checks: dict | None = None,
-        bloom_cols: list | None = None,
-        column_map: dict | None = None,
-    ) -> tuple[str, dict]:
-        """Write a new immutable file group and return (group, stats).
+    def _write_group(self, df: DataFrame, m: dict) -> tuple[str, dict]:
+        """Write a new immutable file group under the table metadata of
+        manifest `m` (its checks, bloom_cols and column_map) and return
+        (group, stats).
 
         Stats come from ONE aggregate over the just-written files (the
         truthful source — what is actually on disk), the same min/max/
@@ -284,7 +357,7 @@ class AcidTable:
         the group dir before return (immutable with the group)."""
         group = uuid.uuid4().hex
         path = os.path.join(self._data, group)
-        column_map = column_map or {}
+        column_map = m.get("column_map") or {}
         # Stats AND CHECK validation ride the write job itself as
         # observed metrics (r13, guide §1.4/§5): the old path re-read
         # the just-written files once for stats and once more for
@@ -296,30 +369,10 @@ class AcidTable:
         # violating group is removed before any manifest names it.
         from pyspark.sql import Observation
 
-        stat_cols = [
-            f.name
-            for f in df.schema.fields
-            if f.dataType.typeName() in (
-                "byte", "short", "integer", "long", "float", "double",
-                "string", "boolean", "date", "timestamp", "timestamp_ntz",
-            ) or f.dataType.typeName().startswith("decimal")
-        ]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in stat_cols:
-            aggs += [
-                F.min(c).alias(f"__min_{c}"),
-                F.max(c).alias(f"__max_{c}"),
-                F.count(c).alias(f"__cnt_{c}"),
-            ]
-        chk_names = list(checks or {})
-        for i, expr in enumerate((checks or {}).values()):
-            aggs.append(
-                F.sum(
-                    (~F.coalesce(F.expr(expr), F.lit(True))).cast("long")
-                ).alias(f"__chk_{i}")
-            )
+        checks = m.get("checks") or {}
+        stat_cols, aggs = _stats_aggs(df.schema)
         obs = Observation()
-        observed = df.observe(obs, *aggs)
+        observed = df.observe(obs, *aggs, *_check_aggs(checks))
         if column_map:
             observed = observed.select(
                 *[F.col(c).alias(column_map.get(c, c)) for c in df.columns]
@@ -327,21 +380,8 @@ class AcidTable:
         observed.write.mode("overwrite").parquet(path)
         row = obs.get
         rows = int(row["__rows"] or 0)
-        st = {
-            c: [
-                _json_safe(row[f"__min_{c}"]),
-                _json_safe(row[f"__max_{c}"]),
-                rows - int(row[f"__cnt_{c}"] or 0),
-                rows,
-            ]
-            for c in stat_cols
-        }
         if checks and rows:
-            bad = {
-                name: int(row[f"__chk_{i}"] or 0)
-                for i, name in enumerate(chk_names)
-                if row[f"__chk_{i}"]
-            }
+            bad = _violations(row, checks)
             if bad:
                 shutil.rmtree(path, ignore_errors=True)
                 raise CheckViolation(
@@ -351,15 +391,21 @@ class AcidTable:
                         for n, c in sorted(bad.items())
                     )
                 )
-        if bloom_cols and rows:
-            back = self.spark.read.parquet(path)
-            elig = _bloom.bloom_eligible_columns(back, bloom_cols)
-            if elig:
-                _bloom.write_sidecar(
-                    path,
-                    {c: _bloom.build_bloom(back, c, rows) for c in elig},
-                )
-        return group, st
+        self._write_bloom(path, m.get("bloom_cols"), rows)
+        return group, _stats_of(row, stat_cols)
+
+    def _write_bloom(self, path: str, bloom_cols, rows: int) -> None:
+        """Build a written group's bloom sidecar inside its dir
+        (immutable with the group); nothing without bloom columns or
+        rows."""
+        if not bloom_cols or not rows:
+            return
+        back = self.spark.read.parquet(path)
+        elig = _bloom.bloom_eligible_columns(back, bloom_cols)
+        if elig:
+            _bloom.write_sidecar(
+                path, {c: _bloom.build_bloom(back, c, rows) for c in elig}
+            )
 
     def _group_stats(self, path: str) -> dict:
         back = self.spark.read.parquet(path)
@@ -433,21 +479,14 @@ class AcidTable:
             body["column_map"] = meta["column_map"]
         if meta.get("dropped_physical"):
             body["dropped_physical"] = meta["dropped_physical"]
-        tmp = os.path.join(self._log, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(body, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
         try:
-            # atomic + exclusive: fails iff the version is already taken
-            os.link(tmp, self._manifest_path(version))
+            _link_durably(
+                json.dumps(body).encode(), self._manifest_path(version)
+            )
         except FileExistsError as exc:
             raise CommitConflict(
                 f"version {version} was committed by another writer"
             ) from exc
-        finally:
-            os.unlink(tmp)
-        _fsync_dir(self._log)
 
     @classmethod
     def create(
@@ -466,18 +505,13 @@ class AcidTable:
         t = cls(spark, path)
         if t.latest_version() >= 0:
             raise FileExistsError(f"table already exists at {path}")
-        group, st = t._write_group(df, checks, bloom_cols)
-        t._commit(
-            0,
-            "create",
-            [group],
-            {group: st},
-            {
-                "checks": checks,
-                "bloom_cols": bloom_cols,
-                "schema": df.schema.jsonValue(),
-            },
-        )
+        meta = {
+            "checks": checks,
+            "bloom_cols": bloom_cols,
+            "schema": df.schema.jsonValue(),
+        }
+        group, st = t._write_group(df, meta)
+        t._commit(0, "create", [group], {group: st}, meta)
         return t
 
     # ----------------------------------------------------------- read --
@@ -524,10 +558,7 @@ class AcidTable:
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read. `version=None` pins the LATEST version once —
         concurrent commits after this call do not move the snapshot."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no committed version at {self.path}")
-        m = self._visible_manifest(v)
+        _, m = self._snapshot(version)
         return self._read_groups(m, m["file_groups"])
 
     def read_where(
@@ -545,15 +576,12 @@ class AcidTable:
         snapshot and filters (soundness fallback). An all-pruned
         lookup returns an empty frame of the table's schema without
         touching any data file."""
-        v = self.latest_version() if version is None else version
-        if v < 0:
-            raise FileNotFoundError(f"no committed version at {self.path}")
+        _, m = self._snapshot(version)
         if not isinstance(predicate, Pred):
-            return self.read(v).filter(predicate)
-        m = self._visible_manifest(v)
+            return self._read_groups(m, m["file_groups"]).filter(predicate)
         touched = self._touched_by(predicate)(m)
         if not touched:
-            return self.read(v).limit(0)
+            return self._read_groups(m, m["file_groups"]).limit(0)
         return self._read_groups(m, touched).filter(predicate.to_column())
 
     def scan_groups(
@@ -561,70 +589,65 @@ class AcidTable:
     ) -> tuple[int, int]:
         """(groups a read_where(predicate) would open, total groups) —
         the observable skipping contract, driver/oracle-pinnable."""
-        v = self.latest_version() if version is None else version
-        m = self._visible_manifest(v)
+        _, m = self._snapshot(version)
         return len(self._touched_by(predicate)(m)), len(m["file_groups"])
 
     # ------------------------------------------------------------ dml --
-    def _rewrite(self, op: str, transform, max_retries: int = 3) -> int:
-        """Optimistic copy-on-write over the FULL snapshot: read latest,
-        transform, commit as the next version; on a version race,
-        re-read and re-apply (the transform must be a pure function of
-        the snapshot). Returns the committed version. The pruned path
-        (`_rewrite_pruned`) is preferred whenever the predicate is
-        statically analyzable."""
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            m = self._manifest(base)
-            out = transform(self.read(base))
-            group, st = self._write_group(
-                out, m.get("checks"), m.get("bloom_cols"),
-                m.get("column_map"),
-            )
-            meta = self._meta_of(m)
-            # a full rewrite's output IS the new table — record its
-            # true schema (DML transforms preserve it in practice)
-            meta["schema"] = out.schema.jsonValue()
+    def _occ(self, edit) -> int:
+        """The one optimistic-commit loop every single-table writer
+        runs: resolve the latest snapshot, let `edit(manifest)` build
+        the next one as `(op, groups, stats, meta, written)` — `written`
+        names the file groups this attempt wrote — and commit it at
+        base+1. On a lost version race the written groups are removed
+        and `edit` re-runs against the winner's snapshot, so it must be
+        a pure function of the snapshot. Returns the committed
+        version."""
+        for _ in range(_RETRIES + 1):
+            base, m = self._snapshot()
+            op, groups, stats, meta, written = edit(m)
             try:
-                self._commit(base + 1, op, [group], {group: st}, meta)
+                self._commit(base + 1, op, groups, stats, meta)
                 return base + 1
             except CommitConflict:
-                shutil.rmtree(
-                    os.path.join(self._data, group), ignore_errors=True
-                )
-                continue
-        raise CommitConflict(f"gave up after {max_retries} retries: {op}")
+                for g in written:
+                    shutil.rmtree(
+                        os.path.join(self._data, g), ignore_errors=True
+                    )
+        raise CommitConflict(f"gave up after {_RETRIES} retries: {op}")
 
     def _rewrite_pruned(
         self,
         op: str,
         touched_of,
         transform,
-        max_retries: int = 3,
         transform_empty_when_unmatched: bool = False,
     ) -> int:
         """Touched-only copy-on-write (the x153 ANN-upsert discipline
-        brought to DML): `touched_of(manifest)` names the groups whose
-        stats admit a match; ONLY those are read and transformed into
-        one new group, every other group rides into the new manifest
-        verbatim — files never opened, never rewritten. Sound because
-        DELETE/UPDATE WHERE p is the identity on a group `may_match`
-        proves p cannot touch (predicates.py's contract), and MERGE
-        cannot match a target row outside the source's key box.
+        brought to DML), the one rewrite path of every DML op:
+        `touched_of(manifest)` names the groups whose stats admit a
+        match; ONLY those are read and transformed into one new group,
+        every other group rides into the new manifest verbatim — files
+        never opened, never rewritten. Sound because DELETE/UPDATE
+        WHERE p is the identity on a group `may_match` proves p cannot
+        touch (predicates.py's contract), and MERGE cannot match a
+        target row outside the source's key box. `touched_of=None`
+        touches every group (a predicate that is not statically
+        analyzable) and commits the bare `op`; otherwise the op string
+        is `<op>(pruned k/n)`.
 
         A DML whose predicate prunes EVERY group still commits (a
         metadata-only version, zero data IO) — SQL UPDATE matching 0
         rows succeeds, and time travel sees one version per statement.
         """
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            m = self._manifest(base)
+
+        def edit(m: dict):
             stats = m.get("stats", {})
-            touched = touched_of(m)
-            untouched = [g for g in m["file_groups"] if g not in touched]
-            new_groups = list(untouched)
-            new_stats = {g: stats[g] for g in untouched if g in stats}
-            written = None
+            touched = (
+                list(m["file_groups"]) if touched_of is None else touched_of(m)
+            )
+            groups = [g for g in m["file_groups"] if g not in touched]
+            new_stats = {g: stats[g] for g in groups if g in stats}
+            written = []
             if touched or transform_empty_when_unmatched:
                 if touched:
                     # manifest-schema read: pre-evolution groups
@@ -634,40 +657,26 @@ class AcidTable:
                     # MERGE with no overlapping group still INSERTS the
                     # unmatched source rows: run the transform over an
                     # empty target of the table's schema.
-                    tdf = self.read(base).limit(0)
-                out = transform(tdf)
-                written, st = self._write_group(
-                    out, m.get("checks"), m.get("bloom_cols"),
-                    m.get("column_map"),
-                )
+                    tdf = self._read_groups(m, m["file_groups"]).limit(0)
+                group, st = self._write_group(transform(tdf), m)
                 if st and next(iter(st.values()))[3] == 0:
                     # transform emptied every touched row: drop the
                     # empty group rather than carry a 0-row file
                     shutil.rmtree(
-                        os.path.join(self._data, written),
-                        ignore_errors=True,
+                        os.path.join(self._data, group), ignore_errors=True
                     )
-                    written = None
                 else:
-                    new_groups.append(written)
-                    new_stats[written] = st
-            try:
-                self._commit(
-                    base + 1,
-                    f"{op}(pruned {len(touched)}/{len(m['file_groups'])})",
-                    new_groups,
-                    new_stats,
-                    self._meta_of(m),
-                )
-                return base + 1
-            except CommitConflict:
-                if written:
-                    shutil.rmtree(
-                        os.path.join(self._data, written),
-                        ignore_errors=True,
-                    )
-                continue
-        raise CommitConflict(f"gave up after {max_retries} retries: {op}")
+                    groups.append(group)
+                    new_stats[group] = st
+                    written.append(group)
+            if touched_of is not None:
+                n = len(m["file_groups"])
+                op_str = f"{op}(pruned {len(touched)}/{n})"
+            else:
+                op_str = op
+            return op_str, groups, new_stats, self._meta_of(m), written
+
+        return self._occ(edit)
 
     @staticmethod
     def _evolve(df: DataFrame, table_schema, merge_schema: bool):
@@ -719,58 +728,56 @@ class AcidTable:
         string — idempotent sinks stamp their delivery id into the log
         (e.g. 'append(batch 3)') and check history before re-appending,
         Delta's txn-version pattern."""
-        for _ in range(4):
-            base = self.latest_version()
-            m = self._manifest(base)
-            groups = list(m["file_groups"])
-            stats = dict(m.get("stats", {}))
-            meta = self._meta_of(m)
-            out = df
-            if meta.get("schema"):
-                from pyspark.sql.types import StructType
 
-                old_names = {
-                    f["name"] for f in meta["schema"].get("fields", [])
-                }
-                out, new_schema = self._evolve(
-                    df, StructType.fromJson(meta["schema"]), merge_schema
-                )
-                # An evolved-in column may not collide with a PHYSICAL
-                # file name still in use by a renamed or dropped field —
-                # the old groups' bytes under that name would silently
-                # surface as the "new" column's values (Delta avoids
-                # this with field ids; this engine refuses loudly).
-                taken = set(
-                    (m.get("column_map") or {}).values()
-                ) | set(m.get("dropped_physical") or [])
-                clash = [
-                    f.name
-                    for f in new_schema.fields
-                    if f.name not in old_names and f.name in taken
-                ]
-                if clash:
-                    raise SchemaMismatch(
-                        f"new column(s) {clash} collide with physical "
-                        "file columns of renamed/dropped fields"
-                    )
-                meta["schema"] = new_schema.jsonValue()
-            # (a legacy manifest without a schema keeps legacy reads —
-            # first-file schema — rather than guessing one here)
-            new, st = self._write_group(
-                out, m.get("checks"), m.get("bloom_cols"),
-                m.get("column_map"),
+        def edit(m: dict):
+            group, groups, stats, meta = self._stage_append(
+                df, m, merge_schema
             )
-            stats[new] = st
-            try:
-                self._commit(
-                    base + 1, op or "append", groups + [new], stats, meta
+            return op or "append", groups, stats, meta, [group]
+
+        return self._occ(edit)
+
+    def _stage_append(
+        self, df: DataFrame, m: dict, merge_schema: bool = False
+    ) -> tuple[str, list, dict, dict]:
+        """The append stage `append` and `MultiTableTxn.commit_appends`
+        share: reshape the batch to snapshot `m`'s schema (evolving it
+        when `merge_schema`), write it as a new group (CHECKs validate
+        here). Returns (new group, and the next manifest's groups,
+        stats and table metadata)."""
+        meta = self._meta_of(m)
+        out = df
+        if m.get("schema"):
+            from pyspark.sql.types import StructType
+
+            old_names = {f["name"] for f in m["schema"].get("fields", [])}
+            out, new_schema = self._evolve(
+                df, StructType.fromJson(m["schema"]), merge_schema
+            )
+            # An evolved-in column may not collide with a PHYSICAL
+            # file name still in use by a renamed or dropped field —
+            # the old groups' bytes under that name would silently
+            # surface as the "new" column's values (Delta avoids
+            # this with field ids; this engine refuses loudly).
+            taken = set(
+                (m.get("column_map") or {}).values()
+            ) | set(m.get("dropped_physical") or [])
+            clash = [
+                f.name
+                for f in new_schema.fields
+                if f.name not in old_names and f.name in taken
+            ]
+            if clash:
+                raise SchemaMismatch(
+                    f"new column(s) {clash} collide with physical "
+                    "file columns of renamed/dropped fields"
                 )
-                return base + 1
-            except CommitConflict:
-                shutil.rmtree(
-                    os.path.join(self._data, new), ignore_errors=True
-                )
-        raise CommitConflict("append retries exhausted")
+            meta["schema"] = new_schema.jsonValue()
+        # (a legacy manifest without a schema keeps legacy reads —
+        # first-file schema — rather than guessing one here)
+        group, st = self._write_group(out, m)
+        groups = list(m["file_groups"]) + [group]
+        return group, groups, {**m.get("stats", {}), group: st}, meta
 
     def _touched_by(self, predicate: Pred):
         def touched_of(manifest: dict) -> list[str]:
@@ -810,43 +817,20 @@ class AcidTable:
                 return False
         return True
 
-    def delete_where(self, predicate: Column | Pred) -> int:
-        from gwasdb_spark.gwas.dml import delete_where
-
+    def _dml_target(self, predicate: Column | Pred):
+        """(touched_of, row predicate) of a DELETE/UPDATE: a Pred prunes
+        by stats and blooms; a plain Column touches every group."""
         if isinstance(predicate, Pred):
-            col = predicate.to_column()
-            return self._rewrite_pruned(
-                "delete",
-                self._touched_by(predicate),
-                lambda df: delete_where(df, col),
-            )
-        return self._rewrite("delete", lambda df: delete_where(df, predicate))
+            return self._touched_by(predicate), predicate.to_column()
+        return None, predicate
 
-    def update_set(
-        self, predicate: Column | Pred, assignments: dict
-    ) -> int:
-        from gwasdb_spark.gwas.dml import update_set
-
-        if isinstance(predicate, Pred):
-            col = predicate.to_column()
-            return self._rewrite_pruned(
-                "update",
-                self._touched_by(predicate),
-                lambda df: update_set(df, col, assignments),
-            )
-        return self._rewrite(
-            "update", lambda df: update_set(df, predicate, assignments)
-        )
-
-    def merge(self, source: DataFrame, keys: list[str]) -> int:
-        """MERGE (source wins on key collision). Pruned by the source's
-        key bounding box: one batch-scale aggregate computes min/max of
-        every key column over `source`; a target group whose stats are
-        disjoint from that box on ANY key dimension cannot hold a
-        matching row, so it is carried verbatim. Matched rewrites and
-        inserted rows both land in the one new group."""
+    def _key_box(self, source: DataFrame, keys: list[str]):
+        """touched_of for a keyed source (MERGE, CDC apply): one
+        batch-scale aggregate gives the min/max of every key over
+        `source`; a group whose stats are disjoint from that box on ANY
+        key cannot hold a matching row. An empty/all-null box touches
+        nothing."""
         from gwasdb_spark.acid.predicates import And, Between
-        from gwasdb_spark.gwas.dml import merge_upsert
 
         aggs = []
         for k in keys:
@@ -857,13 +841,40 @@ class AcidTable:
             for k in keys
             if box[f"__lo_{k}"] is not None
         ]
-        if not bounds:  # empty/all-null source box: no target row matches
-            touched_of = lambda m: []  # noqa: E731
-        else:
-            touched_of = self._touched_by(And(*bounds))
+        if not bounds:
+            return lambda m: []
+        return self._touched_by(And(*bounds))
+
+    def delete_where(self, predicate: Column | Pred) -> int:
+        from gwasdb_spark.gwas.dml import delete_where
+
+        touched_of, col = self._dml_target(predicate)
+        return self._rewrite_pruned(
+            "delete", touched_of, lambda df: delete_where(df, col)
+        )
+
+    def update_set(
+        self, predicate: Column | Pred, assignments: dict
+    ) -> int:
+        from gwasdb_spark.gwas.dml import update_set
+
+        touched_of, col = self._dml_target(predicate)
+        return self._rewrite_pruned(
+            "update", touched_of, lambda df: update_set(df, col, assignments)
+        )
+
+    def merge(self, source: DataFrame, keys: list[str]) -> int:
+        """MERGE (source wins on key collision). Pruned by the source's
+        key bounding box: one batch-scale aggregate computes min/max of
+        every key column over `source`; a target group whose stats are
+        disjoint from that box on ANY key dimension cannot hold a
+        matching row, so it is carried verbatim. Matched rewrites and
+        inserted rows both land in the one new group."""
+        from gwasdb_spark.gwas.dml import merge_upsert
+
         return self._rewrite_pruned(
             "merge",
-            touched_of,
+            self._key_box(source, keys),
             lambda df: merge_upsert(df, source, keys),
             transform_empty_when_unmatched=True,
         )
@@ -897,7 +908,6 @@ class AcidTable:
         `sequence_by`, a key appearing more than once in the batch is
         AMBIGUOUS (delete-then-insert vs insert-then-delete differ) and
         raises ValueError rather than resolving nondeterministically."""
-        from gwasdb_spark.acid.predicates import And, Between
         from gwasdb_spark.gwas.dml import merge_upsert
 
         changes = changes.localCheckpoint(eager=False)
@@ -927,19 +937,7 @@ class AcidTable:
                 )
         ups = changes.filter(F.col(op_col) != "D").drop(op_col)
         dels = changes.filter(F.col(op_col) == "D").select(*keys).distinct()
-        aggs = []
-        for k in keys:
-            aggs += [F.min(k).alias(f"__lo_{k}"), F.max(k).alias(f"__hi_{k}")]
-        box = changes.agg(*aggs).collect()[0]  # 1-row bounded collect
-        bounds = [
-            Between(k, box[f"__lo_{k}"], box[f"__hi_{k}"])
-            for k in keys
-            if box[f"__lo_{k}"] is not None
-        ]
-        if not bounds:
-            touched_of = lambda m: []  # noqa: E731
-        else:
-            touched_of = self._touched_by(And(*bounds))
+        touched_of = self._key_box(changes, keys)
 
         def transform(df: DataFrame) -> DataFrame:
             return merge_upsert(df.join(dels, keys, "left_anti"), ups, keys)
@@ -957,64 +955,52 @@ class AcidTable:
         v = self.latest_version()
         return dict(self._manifest(v).get("checks", {})) if v >= 0 else {}
 
-    def add_check(self, name: str, expr: str, max_retries: int = 3) -> int:
+    def _alter(self, op: str, m: dict, stats: dict | None = None, **meta):
+        """A metadata-only next manifest for `_occ`: m's file groups,
+        `stats` (m's own by default) and m's table metadata with the
+        `meta` fields replaced. Zero data IO."""
+        if stats is None:
+            stats = m.get("stats", {})
+        return op, m["file_groups"], stats, {**self._meta_of(m), **meta}, []
+
+    def add_check(self, name: str, expr: str) -> int:
         """ALTER TABLE ADD CONSTRAINT ... CHECK (expr): validates the
         CURRENT snapshot first (one aggregate over the table — the same
         full-scan Delta pays), then commits a metadata-only version;
         every later write is validated against it in `_write_group`.
         Raises CheckViolation (no version committed) if existing rows
-        already fail."""
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            m = self._manifest(base)
+        already fail. A lost version race re-validates against the
+        winner's snapshot."""
+        new = {name: expr}
+
+        def edit(m: dict):
             checks = dict(m.get("checks", {}))
             if name in checks:
                 raise ValueError(f"constraint {name!r} already exists")
-            bad = _check_violations(self.read(base), {name: expr})
+            snap = self._read_groups(m, m["file_groups"])
+            row = snap.agg(*_check_aggs(new)).collect()[0]  # 1-row collect
+            bad = _violations(row, new)
             if bad:
                 raise CheckViolation(
                     f"cannot add {name!r}: {bad[name]} existing rows "
                     f"violate {expr}"
                 )
-            checks[name] = expr
-            meta = self._meta_of(m)
-            meta["checks"] = checks
-            try:
-                self._commit(
-                    base + 1,
-                    f"add_check({name})",
-                    m["file_groups"],
-                    m.get("stats", {}),
-                    meta,
-                )
-                return base + 1
-            except CommitConflict:
-                continue  # re-validate against the winner's snapshot
-        raise CommitConflict(f"gave up adding check {name!r}")
+            checks.update(new)
+            return self._alter(f"add_check({name})", m, checks=checks)
 
-    def drop_check(self, name: str, max_retries: int = 3) -> int:
+        return self._occ(edit)
+
+    def drop_check(self, name: str) -> int:
         """Metadata-only constraint removal (no data IO)."""
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            m = self._manifest(base)
+
+        def edit(m: dict):
             checks = dict(m.get("checks", {}))
             if name not in checks:
                 raise KeyError(f"no constraint named {name!r}")
             del checks[name]
-            meta = self._meta_of(m)
-            meta["checks"] = checks
-            try:
-                self._commit(
-                    base + 1,
-                    f"drop_check({name})",
-                    m["file_groups"],
-                    m.get("stats", {}),
-                    meta,
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up dropping check {name!r}")
+            return self._alter(f"drop_check({name})", m, checks=checks)
+
+        return self._occ(edit)
 
     # ---------------------------------------------- column mapping --
     def _schema_struct(self, m: dict):
@@ -1051,9 +1037,7 @@ class AcidTable:
                 "first"
             )
 
-    def rename_column(
-        self, old: str, new: str, max_retries: int = 3
-    ) -> int:
+    def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE RENAME COLUMN — metadata-only, zero data IO
         (Delta column mapping, public design): the manifest schema
         renames the field and records {logical: physical} in
@@ -1064,9 +1048,8 @@ class AcidTable:
         working. Time travel is untouched: each manifest carries its
         own schema+map, so read(v) of a pre-rename snapshot surfaces
         the pre-rename name."""
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            m = self._manifest(base)
+
+        def edit(m: dict):
             schema = self._schema_struct(m)
             names = [f.name for f in schema.fields]
             if old not in names:
@@ -1099,23 +1082,17 @@ class AcidTable:
                 g: {(new if c == old else c): v for c, v in st.items()}
                 for g, st in (m.get("stats") or {}).items()
             }
-            meta = self._meta_of(m)
-            meta["schema"] = {"type": "struct", "fields": fields}
-            meta["column_map"] = cmap
-            try:
-                self._commit(
-                    base + 1,
-                    f"rename_column({old}->{new})",
-                    m["file_groups"],
-                    stats,
-                    meta,
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up renaming {old!r}")
+            return self._alter(
+                f"rename_column({old}->{new})",
+                m,
+                stats,
+                schema={"type": "struct", "fields": fields},
+                column_map=cmap,
+            )
 
-    def drop_column(self, col: str, max_retries: int = 3) -> int:
+        return self._occ(edit)
+
+    def drop_column(self, col: str) -> int:
         """ALTER TABLE DROP COLUMN — metadata-only, zero data IO: the
         field leaves the manifest schema (and the column map / stats),
         so reads never even request it from parquet; the bytes stay in
@@ -1125,9 +1102,8 @@ class AcidTable:
         collide with a still-on-disk physical name (Delta solves this
         with field ids; this engine refuses the ambiguous case
         loudly)."""
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            m = self._manifest(base)
+
+        def edit(m: dict):
             schema = self._schema_struct(m)
             names = [f.name for f in schema.fields]
             if col not in names:
@@ -1147,24 +1123,18 @@ class AcidTable:
                 g: {c: v for c, v in st.items() if c != col}
                 for g, st in (m.get("stats") or {}).items()
             }
-            meta = self._meta_of(m)
-            meta["schema"] = {"type": "struct", "fields": fields}
-            meta["column_map"] = cmap
-            meta["dropped_physical"] = dropped
-            try:
-                self._commit(
-                    base + 1,
-                    f"drop_column({col})",
-                    m["file_groups"],
-                    stats,
-                    meta,
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up dropping {col!r}")
+            return self._alter(
+                f"drop_column({col})",
+                m,
+                stats,
+                schema={"type": "struct", "fields": fields},
+                column_map=cmap,
+                dropped_physical=dropped,
+            )
 
-    def restore(self, version: int, max_retries: int = 3) -> int:
+        return self._occ(edit)
+
+    def restore(self, version: int) -> int:
         """RESTORE TABLE TO VERSION (Delta's RESTORE, public design):
         commit a NEW version whose manifest is the target version's —
         data, stats, schema, checks, bloom config all roll back while
@@ -1174,7 +1144,7 @@ class AcidTable:
         the commit is metadata-only. Refuses if any target group has
         been vacuumed away (the retention window bounds how far back a
         restore can reach — same contract as Delta)."""
-        target = self._visible_manifest(version)
+        _, target = self._snapshot(version)
         missing = [
             g
             for g in target["file_groups"]
@@ -1185,20 +1155,7 @@ class AcidTable:
                 f"restore({version}): {len(missing)} file group(s) "
                 f"vacuumed away ({missing[:3]}...)"
             )
-        for _ in range(max_retries + 1):
-            base = self.latest_version()
-            try:
-                self._commit(
-                    base + 1,
-                    f"restore({version})",
-                    list(target["file_groups"]),
-                    dict(target.get("stats", {})),
-                    self._meta_of(target),
-                )
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"restore({version}) retries exhausted")
+        return self._occ(lambda m: self._alter(f"restore({version})", target))
 
     # --------------------------------------------------- maintenance --
     def compact(self, small_rows: int = 100_000) -> int:
@@ -1211,8 +1168,7 @@ class AcidTable:
         per batch, and at 100 TB the scheduler cost of a million tiny
         files dwarfs the data. Returns the committed version (or the
         current one when <2 groups qualify — nothing to merge)."""
-        base = self.latest_version()
-        m = self._manifest(base)
+        base, m = self._snapshot()
         stats = m.get("stats", {})
 
         def rows_of(g: str) -> int | None:
@@ -1251,9 +1207,8 @@ class AcidTable:
         into place as its own file group (one data pass total, no
         per-bucket rescans). Empty buckets (duplicate-heavy boundaries)
         are skipped; the op string records the real group count."""
-        base = self.latest_version()
-        meta = self._manifest(base)
-        snap = self.read(base)
+        base, meta = self._snapshot()
+        snap = self._read_groups(meta, meta["file_groups"])
         qs = [i / n_groups for i in range(1, n_groups)]
         bounds = sorted(set(snap.approxQuantile(col, qs, 0.0)))
         bucket = F.lit(0)
@@ -1284,9 +1239,8 @@ class AcidTable:
         cluster_by: logically a no-op, one staging pass, version race
         aborts rather than blind-retrying. This is Delta OPTIMIZE
         ZORDER's layout, native over the parquet log."""
-        base = self.latest_version()
-        meta = self._manifest(base)
-        snap = self.read(base)
+        base, meta = self._snapshot()
+        snap = self._read_groups(meta, meta["file_groups"])
         bits = max(1, (int(tiles) - 1).bit_length())
         qs = [i / tiles for i in range(1, tiles)]
         all_bounds = snap.approxQuantile(list(cols), qs, 0.0)
@@ -1343,26 +1297,7 @@ class AcidTable:
             back_all = self.spark.read.schema(bucketed.schema).parquet(
                 staging
             )
-            stat_cols = [
-                f.name
-                for f in back_all.schema.fields
-                if f.name != "__bucket"
-                and (
-                    f.dataType.typeName() in (
-                        "byte", "short", "integer", "long", "float",
-                        "double", "string", "boolean", "date", "timestamp",
-                        "timestamp_ntz",
-                    )
-                    or f.dataType.typeName().startswith("decimal")
-                )
-            ]
-            aggs = [F.count(F.lit(1)).alias("__rows")]
-            for c in stat_cols:
-                aggs += [
-                    F.min(c).alias(f"__min_{c}"),
-                    F.max(c).alias(f"__max_{c}"),
-                    F.count(c).alias(f"__cnt_{c}"),
-                ]
+            stat_cols, aggs = _stats_aggs(back_all.schema, skip="__bucket")
             bucket_rows = {
                 str(r["__bucket"]): r
                 for r in back_all.groupBy("__bucket").agg(*aggs).collect()
@@ -1372,24 +1307,12 @@ class AcidTable:
                     continue
                 row = bucket_rows.get(name.split("=", 1)[1])
                 group = uuid.uuid4().hex
-                os.rename(
-                    os.path.join(staging, name),
-                    os.path.join(self._data, group),
-                )
+                gpath = os.path.join(self._data, group)
+                os.rename(os.path.join(staging, name), gpath)
+                st = _stats_of(row, stat_cols) if row is not None else {}
                 rows = int(row["__rows"]) if row is not None else 0
-                st = {
-                    c: [
-                        _json_safe(row[f"__min_{c}"]),
-                        _json_safe(row[f"__max_{c}"]),
-                        rows - int(row[f"__cnt_{c}"] or 0),
-                        rows,
-                    ]
-                    for c in stat_cols
-                } if row is not None else {}
                 if st and rows == 0:
-                    shutil.rmtree(
-                        os.path.join(self._data, group), ignore_errors=True
-                    )
+                    shutil.rmtree(gpath, ignore_errors=True)
                     continue
                 new_groups.append(group)
                 new_stats[group] = st
@@ -1397,20 +1320,7 @@ class AcidTable:
                 # original commits — checks need no re-run), but bloom
                 # sidecars are per-group artifacts and must be rebuilt
                 # for the new grouping
-                bcols = meta.get("bloom_cols") or []
-                if bcols:
-                    gpath = os.path.join(self._data, group)
-                    back = self.spark.read.parquet(gpath)
-                    elig = _bloom.bloom_eligible_columns(back, bcols)
-                    rows = next(iter(st.values()))[3] if st else 0
-                    if elig and rows:
-                        _bloom.write_sidecar(
-                            gpath,
-                            {
-                                c: _bloom.build_bloom(back, c, rows)
-                                for c in elig
-                            },
-                        )
+                self._write_bloom(gpath, meta.get("bloom_cols"), rows)
             try:
                 self._commit(
                     base + 1,

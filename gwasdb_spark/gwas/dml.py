@@ -40,11 +40,18 @@ def update_set(df: DataFrame, predicate: Column, assignments: dict[str, Column])
     withColumn would let an earlier assignment change the column a later
     predicate/RHS reads — found by m01's status+price update, where
     rewriting the status first stopped the price uplift from ever
-    firing). Null predicate = not matched, as in SQL."""
+    firing). Null predicate = not matched, as in SQL.
+
+    Each assignment is cast to its column's type (SQL store assignment,
+    as Delta's UPDATE does): an UPDATE never changes the table schema,
+    so `SET int_col = 1.5` stores 1."""
     cond = F.coalesce(predicate, F.lit(False))
+    types = {f.name: f.dataType for f in df.schema.fields}
     return df.select(
         *[
-            F.when(cond, assignments[c]).otherwise(F.col(c)).alias(c)
+            F.when(cond, assignments[c].cast(types[c]))
+            .otherwise(F.col(c))
+            .alias(c)
             if c in assignments
             else F.col(c)
             for c in df.columns

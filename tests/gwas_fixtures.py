@@ -1,5 +1,6 @@
 """Deterministic GWAS-shaped fixtures (FIXTURES.md §A/§B) — raw ETL input
-files + expected properties, generated with a fixed seed."""
+files + expected properties, generated with a fixed seed — plus the
+Spark job counter the job-count pins share."""
 
 from __future__ import annotations
 
@@ -203,3 +204,12 @@ def study_rows() -> list[dict]:
             "comment": None,
         },
     ]
+
+
+def spark_jobs(spark, fn) -> int:
+    """Spark jobs submitted while `fn` runs, read from the DAG
+    scheduler's job-id counter."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    fn()
+    return int(dag.nextJobId()) - j0

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gwasdb_spark.acid import AcidTable, CommitConflict
+from gwasdb_spark.acid import predicates as P
 
 
 def _mk(spark, tmp_path, rows=None):
@@ -148,3 +149,42 @@ def test_append_never_rewrites_existing_groups(spark, tmp_path):
     m0 = json.load(open(t._manifest_path(0)))
     m1 = json.load(open(t._manifest_path(1)))
     assert set(m0["file_groups"]) < set(m1["file_groups"])
+
+
+@pytest.mark.parametrize("kind", ["column", "pred"])
+def test_update_set_casts_to_the_column_type(spark, tmp_path, kind):
+    """UPDATE is a store assignment: a double assigned to an int column
+    is cast to int, through either predicate kind. The table keeps its
+    schema and stays readable."""
+    t = AcidTable.create(
+        spark,
+        str(tmp_path / "tbl"),
+        spark.createDataFrame([(1, 10), (2, 20)], "id long, val int"),
+    )
+    pred = F.col("id") == 1 if kind == "column" else P.Eq("id", 1)
+    t.update_set(pred, {"val": F.lit(1.5)})
+    assert t._manifest(1)["schema"] == t._manifest(0)["schema"]
+    assert t.read().dtypes == [("id", "bigint"), ("val", "int")]
+    assert sorted(tuple(r) for r in t.read().collect()) == [(1, 1), (2, 20)]
+
+
+@pytest.mark.parametrize(
+    "op", ["scan_groups", "compact", "delete_where", "append"]
+)
+def test_uncommitted_path_raises_named_not_found(spark, tmp_path, op):
+    """Every entry point resolves its snapshot the same way: on a path
+    with no committed version it raises the named FileNotFoundError,
+    not an ENOENT on a manifest file, and writes nothing."""
+    t = AcidTable(spark, str(tmp_path / "none"))
+    batch = spark.createDataFrame(
+        [(1, "a", 1.0)], "id long, name string, val double"
+    )
+    calls = {
+        "scan_groups": lambda: t.scan_groups(P.Eq("id", 1)),
+        "compact": t.compact,
+        "delete_where": lambda: t.delete_where(P.Eq("id", 1)),
+        "append": lambda: t.append(batch),
+    }
+    with pytest.raises(FileNotFoundError, match="no committed version at"):
+        calls[op]()
+    assert not os.path.exists(t.path)

@@ -7,7 +7,7 @@ import pytest
 
 from gwasdb_spark.plans import QUERIES
 
-from tests.conftest import SF_DIR, assert_frames_match
+from tests.conftest import SF_DIR, SLOW_MARKS, assert_frames_match
 
 ALL_NAMES = sorted(QUERIES)
 
@@ -58,12 +58,14 @@ NO_ORACLE_INVARIANTS = {
 SLOW_ORACLES = {"x141_pca_top_component"}
 
 
-@pytest.mark.parametrize("name", ALL_NAMES)
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=SLOW_MARKS) if n in SLOW_ORACLES else n
+        for n in ALL_NAMES
+    ],
+)
 def test_query_matches_oracle(name, spark, duck):
-    from tests.conftest import RUN_SLOW_TESTS
-
-    if name in SLOW_ORACLES and not RUN_SLOW_TESTS:
-        pytest.skip("minutes-scale DuckDB oracle; set GWASDB_SLOW_TESTS=1")
     q = QUERIES[name]
     sdf = q.fn(spark, SF_DIR)
     spark_pdf = sdf.toPandas()

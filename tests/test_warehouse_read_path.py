@@ -23,7 +23,7 @@ from gwasdb_spark import schemas as S
 from gwasdb_spark.gwas import api
 from gwasdb_spark.gwas.warehouse import Warehouse
 
-from tests.gwas_fixtures import build_warehouse, study_rows
+from tests.gwas_fixtures import build_warehouse, spark_jobs, study_rows
 
 
 @pytest.fixture(scope="module")
@@ -36,14 +36,6 @@ def wh(spark, tmp_path_factory):
     )
     w.build_marker_index(n_files=4)
     return w
-
-
-def _jobs(spark, fn) -> int:
-    """Spark jobs submitted while `fn` runs."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(dag.nextJobId())
-    fn()
-    return int(dag.nextJobId()) - j0
 
 
 def test_read_resolves_each_table_once(wh):
@@ -134,7 +126,7 @@ def test_browse_queries_take_one_job_per_step(spark, wh):
     }
     for fn in calls.values():  # warm: every table the calls touch resolved
         fn()
-    got = {name: _jobs(spark, fn) for name, fn in calls.items()}
+    got = {name: spark_jobs(spark, fn) for name, fn in calls.items()}
     assert got == {
         "combined_region": 1,
         "marker_exact": 1,
