@@ -628,7 +628,11 @@ def refresh_graph_sidecar(
     materialized every graph row into driver-tracked block storage
     first, an extra full pass)."""
     import os
-    import shutil
+
+    from gwasdb_spark.operators.ann_index import (
+        _overwrite_cells,
+        read_cell_index,
+    )
 
     cells = sorted({int(c) for c in cells})
     if not cells:
@@ -636,8 +640,6 @@ def refresh_graph_sidecar(
     if R is None:
         meta = sidecar_meta(base)
         R = int((meta or {}).get("R", 8))
-    from gwasdb_spark.operators.ann_index import read_cell_index
-
     if live is None:
         live = read_cell_index(spark, base).filter(F.col("cell").isin(cells))
     if surviving is None:
@@ -645,18 +647,9 @@ def refresh_graph_sidecar(
         surviving = {
             r["cell"] for r in live.select("cell").distinct().collect()
         }
-    fresh = build_cell_graphs(live, R=R)
-    # Dynamic overwrite requested per-writer — never via session conf,
-    # which concurrent driver threads would observe (ADVICE r13).
-    fresh.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("cell").parquet(_graphs_path(base))
-    for c in cells:
-        if c in surviving:
-            continue
-        part = os.path.join(_graphs_path(base), f"cell={c}")
-        if os.path.isdir(part):
-            shutil.rmtree(part)
+    _overwrite_cells(
+        build_cell_graphs(live, R=R), _graphs_path(base), cells, surviving
+    )
     # Dynamic overwrite leaves root-level files alone, but a pre-meta
     # sidecar gets upgraded here so future refreshes know their R.
     if not os.path.exists(_meta_path(base)):

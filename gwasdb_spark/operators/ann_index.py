@@ -28,14 +28,22 @@ stress_scale `annupsert` gate):
    cells' files are never opened, never rewritten (the stress gate
    asserts their mtimes are bit-stable).
 4. Result is bit-equal to a full rebuild over (old \\ batch) ∪ batch.
+
+Delete runs the same steps with an empty set of new rows: upsert and
+delete share ONE touched-cell rewrite (`_rewrite_cells`, steps 3-4),
+which also drops emptied cells and refreshes the graph sidecar's
+touched cells, so each op keeps only its own probe (step 2).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gwasdb_spark.session import run_concurrently
 
 
 def axis_cell(embedding: Column) -> Column:
@@ -54,64 +62,131 @@ def _manifest_path(base: str) -> str:
     return os.path.join(base, "manifest")
 
 
-def _maybe_refresh_graphs(
-    spark: SparkSession, base: str, touched, surviving=None, live=None
-) -> bool:
-    """Engine-enforced graph-sidecar coherence (r12 verdict #2): every
-    op that mutates index membership calls this. If `<base>/graphs`
-    exists, the touched cells' graph partitions are re-derived HERE,
-    with the sidecar's own recorded R — the invariant no longer lives
-    in the caller (before this, only x176's plan remembered to call
-    refresh_graph_sidecar; a streaming ingest or takedown on a
-    graph-carrying index would strand stale graph rows that
-    graph_probe_persisted then serves wrong: new vectors unreachable,
-    deleted ones still linked). `surviving` forwards the caller's
-    already-computed set of touched cells that still hold rows, so the
-    refresh does not re-derive it with another job; `live` forwards the
-    caller's checkpointed post-op rows for the touched cells, so the
-    graph rebuild reads memory instead of the just-written partitions
-    (and can run CONCURRENTLY with the caller's own writes — no
-    read-after-write dependency remains). Returns whether a sidecar
-    was found."""
+def _overwrite_cells(df: DataFrame, root: str, touched, surviving) -> None:
+    """Rewrite the cell partitions present in `df` under `root`, then
+    drop every touched cell that has no surviving rows: dynamic overwrite
+    only replaces partitions PRESENT in the written data, so a touched
+    cell whose rows were all removed (every resident replaced into other
+    cells, or deleted) would otherwise keep its stale files. Dynamic
+    overwrite is requested per-writer — never via the session conf, which
+    concurrent writes in other driver threads would observe (ADVICE
+    r13)."""
+    df.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("cell").parquet(root)
+    for c in touched:
+        part = os.path.join(root, f"cell={c}")
+        if c not in surviving and os.path.isdir(part):
+            shutil.rmtree(part)
+
+
+def _write_layout(assigned: DataFrame, base: str) -> None:
+    """Full-layout write shared by both builds: overwrite (index,
+    manifest) wholesale from the cell-assigned (vec_id, embedding, cell)
+    rows. A pre-existing graph sidecar at this base describes the
+    OVERWRITTEN layout — rebuild it wholesale with its recorded R (the
+    same engine-enforced coherence as the incremental ops) rather than
+    leave it describing dead rows."""
     from gwasdb_spark.operators.ann_graph import (
-        refresh_graph_sidecar,
+        build_graph_sidecar,
         sidecar_meta,
     )
 
-    meta = sidecar_meta(base)
-    if meta is None:
-        return False
-    refresh_graph_sidecar(
-        spark, base, touched, R=int(meta.get("R", 8)), surviving=surviving,
-        live=live,
-    )
-    return True
-
-
-def build_cell_index(vectors: DataFrame, base: str) -> None:
-    """Full build: partition the corpus by cell, plus the manifest. A
-    pre-existing graph sidecar at this base is from the OVERWRITTEN
-    layout — rebuild it wholesale (same engine-enforced coherence as
-    the incremental ops) rather than leave it describing dead rows."""
-    assigned = vectors.select(
-        "vec_id", "embedding", axis_cell(F.col("embedding")).alias("cell")
-    )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
         _index_path(base)
     )
     assigned.select("vec_id", "cell").write.mode("overwrite").partitionBy(
         "cell"
     ).parquet(_manifest_path(base))
+    meta = sidecar_meta(base)
+    if meta is not None:
+        build_graph_sidecar(
+            assigned.sparkSession, base, R=int(meta.get("R", 8))
+        )
+
+
+def _rewrite_cells(
+    spark: SparkSession,
+    base: str,
+    touched,
+    gone: DataFrame,
+    added: DataFrame | None = None,
+) -> bool:
+    """The touched-cell rewrite that upsert and delete share: read ONLY
+    the touched partitions (static IN-filter → partition pruning), drop
+    the rows whose vec_id is in `gone`, union `added`, and rewrite the
+    index, the manifest and — if `<base>/graphs` exists — the graph
+    sidecar's touched cells. Untouched cells' files are never opened,
+    never rewritten. Returns whether a graph sidecar is present; with no
+    touched cell it returns that, runs no Spark job and writes nothing.
+
+    Engine-enforced sidecar coherence (r12 verdict #2): every op that
+    mutates index membership ends here, so the touched cells' graph
+    partitions are re-derived with the sidecar's own recorded R — the
+    invariant does not live in the caller (a streaming ingest or takedown
+    on a graph-carrying index would otherwise strand stale graph rows
+    that graph_probe_persisted then serves wrong)."""
     from gwasdb_spark.operators.ann_graph import (
-        build_graph_sidecar,
+        refresh_graph_sidecar,
         sidecar_meta,
     )
 
     meta = sidecar_meta(base)
+    if not touched:
+        return meta is not None
+    rows = (
+        spark.read.parquet(_index_path(base))
+        .filter(F.col("cell").isin(touched))
+        .join(F.broadcast(gone), "vec_id", "left_anti")
+    )
+    if added is not None:
+        rows = rows.unionByName(added)
+    # The writes replace the very partitions `rows` reads, so it must be
+    # materialized before them. LAZY (r14, guide §1.4): the surviving-cell
+    # collect below is the first action and does exactly that — the eager
+    # form paid a dedicated job. Taken BEFORE the writes, the surviving
+    # set needs no post-write job for the emptied-cell drops or the graph
+    # refresh.
+    rows = rows.localCheckpoint(eager=False)
+    surviving = {r["cell"] for r in rows.select("cell").distinct().collect()}
+    # The index write, the manifest write, and the graph refresh are
+    # INDEPENDENT jobs over the same checkpointed relation: the manifest
+    # is BY CONSTRUCTION the index's (vec_id, cell) projection, so it is
+    # a column slice of `rows` (no second scan, anti-join or checkpoint),
+    # and the refresh rebuilds from `rows` directly (no read-after-write
+    # dependency on the index tree). Run them concurrently (guide §2.6)
+    # instead of letting each job's tail idle the cluster.
+    # Failure contract: these jobs are not atomic as a group. If any
+    # write fails mid-op the layout is inconsistent (manifest/graphs may
+    # describe rows the index does not serve) and the recovery is a full
+    # build_cell_index rebuild.
+    writes = [
+        lambda: _overwrite_cells(
+            rows, _index_path(base), touched, surviving
+        ),
+        lambda: _overwrite_cells(
+            rows.select("vec_id", "cell"), _manifest_path(base), touched,
+            surviving,
+        ),
+    ]
     if meta is not None:
-        build_graph_sidecar(
-            vectors.sparkSession, base, R=int(meta.get("R", 8))
-        )
+        writes.append(lambda: refresh_graph_sidecar(
+            spark, base, touched, R=int(meta.get("R", 8)),
+            surviving=surviving, live=rows,
+        ))
+    run_concurrently(*writes)
+    return meta is not None
+
+
+def build_cell_index(vectors: DataFrame, base: str) -> None:
+    """Full build: partition the corpus by cell, plus the manifest (and a
+    rebuilt graph sidecar, if this base carries one)."""
+    _write_layout(
+        vectors.select(
+            "vec_id", "embedding", axis_cell(F.col("embedding")).alias("cell")
+        ),
+        base,
+    )
 
 
 def read_cell_index(spark: SparkSession, base: str) -> DataFrame:
@@ -123,7 +198,11 @@ def upsert_cell_index(
 ) -> dict:
     """Absorb a batch of (vec_id, embedding) rows — replacements and
     additions — rewriting only the touched cell partitions. Returns
-    {"touched_cells": [...], "n_updates": n} for observability.
+    {"touched_cells": [...], "n_updates": n, "graphs_refreshed": bool}
+    for observability. Each vec_id may appear once per batch: a batch
+    that repeats one raises ValueError before anything is written (two
+    rows for one key would otherwise both land in the index and the
+    manifest).
 
     Idempotent: re-running the same batch replaces the same rows with
     the same values (the st16 at-least-once discipline)."""
@@ -133,8 +212,8 @@ def upsert_cell_index(
     # merged layout, and the returned count. The old path re-evaluated
     # the batch subtree for each of those (four scans of the source).
     # EAGER on purpose: the op's first action over the batch (the fused
-    # probe collect below) reaches it through two concurrent consumers,
-    # the groupBy branch and the broadcast of `upd_ids`. A lazy pin would
+    # probe collect below) reaches it through concurrent consumers, the
+    # groupBy branch and the broadcast of `upd_ids`. A lazy pin would
     # let each consumer evaluate the batch on its own, so a
     # nondeterministic batch could count and write different rows.
     updates = updates.select(
@@ -142,109 +221,52 @@ def upsert_cell_index(
     ).localCheckpoint(eager=True)
     upd_ids = updates.select("vec_id")
     # ONE bounded action answers the batch's new cells, its row count,
-    # AND the replaced rows' old cells (r14, guide §1.4): the two probe
-    # subtrees (batch cell-counts; manifest semi-join) are independent,
-    # so unioned under a single collect their stages run CONCURRENTLY
-    # inside one job — the r13 shape paid two sequential jobs.
+    # the replaced rows' old cells, AND whether the batch repeats a
+    # vec_id (r14, guide §1.4): the two probe subtrees (batch cell-counts;
+    # manifest semi-join) are independent, so unioned under a single
+    # collect their stages run CONCURRENTLY inside one job. The repeat
+    # check rides the cell-count aggregate: beside the batch rows it
+    # feeds their matches in the broadcast `upd_ids` (the manifest join's
+    # broadcast, reused — no extra job). Each keyed row matches itself,
+    # so `pairs` exceeds `keyed` exactly when some vec_id repeats.
     manifest = spark.read.parquet(_manifest_path(base))
     probe_rows = (
-        updates.groupBy("cell").count()
+        updates.select("cell", "vec_id", F.lit(1).alias("own"))
+        .unionByName(
+            updates.join(F.broadcast(upd_ids), "vec_id").select(
+                "cell", F.lit(None).cast("long").alias("vec_id"),
+                F.lit(0).alias("own"),
+            )
+        )
+        .groupBy("cell")
+        .agg(
+            F.sum("own").alias("count"),
+            F.count("vec_id").alias("keyed"),
+            F.sum(1 - F.col("own")).alias("pairs"),
+        )
         .withColumn("src", F.lit("new"))
         .unionByName(
             manifest.join(F.broadcast(upd_ids), "vec_id")
             .groupBy("cell").count()
-            .withColumn("src", F.lit("old"))
+            .withColumn("src", F.lit("old")),
+            allowMissingColumns=True,
         )
         .collect()
     )
-    new_cells = {r["cell"] for r in probe_rows if r["src"] == "new"}
-    n_updates = int(
-        sum(r["count"] for r in probe_rows if r["src"] == "new")
-    )
-    old_cells = {r["cell"] for r in probe_rows if r["src"] == "old"}
-    touched = sorted(new_cells | old_cells)  # ≤ n_cells by construction
-
-    index = spark.read.parquet(_index_path(base))
-    kept = index.filter(F.col("cell").isin(touched)).join(
-        F.broadcast(upd_ids), "vec_id", "left_anti"
-    )
-    merged = kept.unionByName(updates).localCheckpoint(eager=False)
-    # localCheckpoint materialized BEFORE the overwrite (the surviving-
-    # cell collect below is the first action and computes every
-    # partition): the merged relation reads the very partitions the
-    # write replaces — without a materialization boundary the overwrite
-    # would race its own input scan. LAZY (r14, guide §1.4): riding the
-    # collect saves the dedicated eager-materialization job.
-    # The manifest is BY CONSTRUCTION the index's (vec_id, cell)
-    # projection, so the merged manifest is a column slice of the
-    # already-checkpointed merged index — no second manifest scan, no
-    # second anti-join, no second checkpoint (the old path paid all
-    # three).
-    man_merged = merged.select("vec_id", "cell")
-
-    # Surviving-cell set from the checkpoint BEFORE the writes (it no
-    # longer depends on them), so the emptied-partition cleanup and the
-    # graph refresh need no post-write jobs. This distinct-collect is
-    # the action that materializes the lazy checkpoint above.
-    surviving = {
-        r["cell"] for r in merged.select("cell").distinct().collect()
-    }
-    graphs = False
-    # The index write, the manifest write, and the graph-sidecar
-    # rebuild are three INDEPENDENT jobs over the same checkpointed
-    # relation (the refresh consumes `merged` directly — no
-    # read-after-write dependency on the index tree). Submit them
-    # concurrently from driver threads (guide §2.6) instead of
-    # letting each job's tail idle the cluster. Dynamic partition
-    # overwrite is requested per-writer (`.option(...)`) — the session
-    # conf is never mutated, so concurrent writes in other driver
-    # threads cannot observe it (ADVICE r13).
-    # Failure contract: these jobs are not atomic as a group. If any
-    # write fails mid-op the layout is inconsistent (manifest/graphs may
-    # describe rows the index does not serve) and the recovery is a full
-    # build_cell_index rebuild — same contract as the previous
-    # sequential ordering, which had the mirror-image window.
-    from concurrent.futures import ThreadPoolExecutor
-
-    def w_index():
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(_index_path(base))
-
-    def w_manifest():
-        man_merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(_manifest_path(base))
-
-    def w_graphs():
-        return _maybe_refresh_graphs(
-            spark, base, touched, surviving=surviving, live=merged
+    new_rows = [r for r in probe_rows if r["src"] == "new"]
+    if sum(r["pairs"] - r["keyed"] for r in new_rows):
+        raise ValueError(
+            "upsert batch repeats a vec_id; each vec_id may appear once "
+            "per batch"
         )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_i = pool.submit(w_index)
-        f_m = pool.submit(w_manifest)
-        f_g = pool.submit(w_graphs)
-        f_i.result()
-        f_m.result()
-        graphs = f_g.result()
-    # Dynamic overwrite only replaces partitions PRESENT in the written
-    # data — a touched cell whose rows were all removed (every resident
-    # replaced into other cells) writes nothing and its stale files
-    # would silently survive. Drop emptied partitions explicitly.
-    import shutil
-
-    for c in touched:
-        if c in surviving:
-            continue
-        for root in (_index_path(base), _manifest_path(base)):
-            part = os.path.join(root, f"cell={c}")
-            if os.path.isdir(part):
-                shutil.rmtree(part)
+    n_updates = int(sum(r["count"] for r in new_rows))
+    touched = sorted({r["cell"] for r in probe_rows})  # ≤ n_cells
     return {
         "touched_cells": [int(c) for c in touched],
         "n_updates": n_updates,
-        "graphs_refreshed": graphs,
+        "graphs_refreshed": _rewrite_cells(
+            spark, base, touched, upd_ids, added=updates
+        ),
     }
 
 
@@ -253,85 +275,26 @@ def delete_from_cell_index(
 ) -> dict:
     """Remove a batch of vec_ids from the index — the PII-takedown path
     (pairs with x31's scrub: a 100 TB embedding store must honor
-    deletions, not just upserts). Same touched-only discipline as the
+    deletions, not just upserts). Same touched-only rewrite as the
     upsert: the manifest finds the victims' cells, ONLY those
-    partitions are read and rewritten (dynamic partition overwrite),
-    a cell whose last resident leaves is dropped from BOTH index and
-    manifest (the emptied-partition lesson the upsert already
-    learned), and untouched cells' files stay byte-stable. Deleting an
-    absent id is a no-op — idempotent under at-least-once replay
-    (the st16 discipline). Returns {"touched_cells", "n_deleted"}."""
-    import shutil
-
+    partitions are read and rewritten, a cell whose last resident leaves
+    is dropped from index, manifest and graphs alike, and untouched
+    cells' files stay byte-stable. Deleting an absent id is a no-op —
+    idempotent under at-least-once replay (the st16 discipline).
+    Returns {"touched_cells", "n_deleted", "graphs_refreshed"}."""
     ids = vec_ids.select("vec_id")
     manifest = spark.read.parquet(_manifest_path(base))
-    victims = manifest.join(F.broadcast(ids), "vec_id")
     # ONE bounded action answers both the victims' cells and their
     # count (was two jobs: distinct-collect, then a full re-count).
-    victim_counts = victims.groupBy("cell").count().collect()
-    touched = sorted(r["cell"] for r in victim_counts)
-    if not touched:  # nothing to delete anywhere: zero IO
-        return {"touched_cells": [], "n_deleted": 0}
-    n_deleted = int(sum(r["count"] for r in victim_counts))
-
-    index = spark.read.parquet(_index_path(base))
-    kept = (
-        index.filter(F.col("cell").isin(touched))
-        .join(F.broadcast(ids), "vec_id", "left_anti")
-        # The write replaces its own input, so the checkpoint must be
-        # materialized before the writes; LAZY because the surviving-
-        # cell collect below is the first action and does exactly that
-        # (r14, guide §1.4 — the eager form paid a dedicated job).
-        .localCheckpoint(eager=False)
+    victim_counts = (
+        manifest.join(F.broadcast(ids), "vec_id")
+        .groupBy("cell").count().collect()
     )
-    # Manifest == index's (vec_id, cell) projection by construction:
-    # slice the checkpointed survivors instead of re-scanning and
-    # re-anti-joining the manifest (second scan + second checkpoint
-    # removed — same discipline as the upsert).
-    man_kept = kept.select("vec_id", "cell")
-    # Surviving-cell set from the checkpoint BEFORE the writes — the
-    # cleanup and the graph refresh need no post-write jobs. This
-    # collect materializes the lazy checkpoint.
-    surviving = {r["cell"] for r in kept.select("cell").distinct().collect()}
-    graphs = False
-    # Index write ∥ manifest write ∥ graph refresh — three independent
-    # jobs over the checkpointed survivors (the upsert's concurrency,
-    # per-writer-option, and failure-contract rationale apply verbatim).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def w_index():
-        kept.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(_index_path(base))
-
-    def w_manifest():
-        man_kept.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("cell").parquet(_manifest_path(base))
-
-    def w_graphs():
-        return _maybe_refresh_graphs(
-            spark, base, touched, surviving=surviving, live=kept
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_i = pool.submit(w_index)
-        f_m = pool.submit(w_manifest)
-        f_g = pool.submit(w_graphs)
-        f_i.result()
-        f_m.result()
-        graphs = f_g.result()
-    for c in touched:
-        if c in surviving:
-            continue
-        for root in (_index_path(base), _manifest_path(base)):
-            part = os.path.join(root, f"cell={c}")
-            if os.path.isdir(part):
-                shutil.rmtree(part)
+    touched = sorted(r["cell"] for r in victim_counts)
     return {
         "touched_cells": [int(c) for c in touched],
-        "n_deleted": n_deleted,
-        "graphs_refreshed": graphs,
+        "n_deleted": int(sum(r["count"] for r in victim_counts)),
+        "graphs_refreshed": _rewrite_cells(spark, base, touched, ids),
     }
 
 
@@ -391,21 +354,8 @@ def build_codebook_index(
         F.col("c_vec").alias("embedding"),
         "cell",
     )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        _index_path(base)
-    )
-    assigned.select("vec_id", "cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(_manifest_path(base))
+    _write_layout(assigned, base)
     save_codebook(spark, base, C)
-    from gwasdb_spark.operators.ann_graph import (
-        build_graph_sidecar,
-        sidecar_meta,
-    )
-
-    meta = sidecar_meta(base)
-    if meta is not None:  # overwritten layout → sidecar is dead; rebuild
-        build_graph_sidecar(spark, base, R=int(meta.get("R", 8)))
     return {"n_cells": int(len(C))}
 
 
@@ -446,7 +396,8 @@ def cell_occupancy(spark: SparkSession, base: str) -> dict:
 
 
 # "graphs" participates only when the index carries a graph sidecar —
-# the swap/recover loops skip a relation with no tmp subdir.
+# the recovery loop (which is also retrain's swap) skips a relation with
+# no tmp subdir.
 _RETRAIN_RELS = ("index", "manifest", "codebook", "graphs")
 
 
@@ -472,9 +423,7 @@ def recover_codebook_index(base: str) -> None:
     leftover `<rel>.old` beside a live `<rel>` is the post-swap crash
     window, plain garbage; an `.old` with NO live and no committed tmp is
     a half-renamed relation — restore it. Idempotent and cheap; retrain
-    runs it first."""
-    import shutil
-
+    runs it first, and again after writing `_COMMITTED` as its swap."""
     tmp_base = _retrain_tmp(base)
     committed = os.path.exists(os.path.join(tmp_base, "_COMMITTED"))
     for rel in _RETRAIN_RELS:
@@ -529,8 +478,6 @@ def retrain_codebook_index(
     `recover_codebook_index` repairs — the previous rmtree-before-build
     ordering could strand the index with nothing but an in-memory
     localCheckpoint."""
-    import shutil
-
     recover_codebook_index(base)
     occ_before = cell_occupancy(spark, base)
     book_cells = max(1, len(load_codebook(spark, base)))
@@ -545,15 +492,13 @@ def retrain_codebook_index(
 
     survivors = read_cell_index(spark, base).select("vec_id", "embedding")
     if n_cells is None:
-        n_cells = max(1, len(load_codebook(spark, base)))
+        n_cells = book_cells
 
     # Build the complete replacement layout aside; the live dirs stay
     # servable (and remain the build's input — no checkpoint needed,
     # nothing overwrites what the scan reads) until the commit point.
+    # The recovery above already reaped any earlier tmp tree.
     tmp_base = _retrain_tmp(base)
-    if os.path.isdir(tmp_base):
-        shutil.rmtree(tmp_base)  # incomplete leftover; recover() keeps
-        # committed ones, so anything still here is pre-commit garbage
     stats = build_codebook_index(
         survivors, tmp_base, n_cells=n_cells, seed=seed,
         train_fraction=train_fraction,
@@ -575,22 +520,13 @@ def retrain_codebook_index(
     with open(os.path.join(tmp_base, "_COMMITTED"), "w") as fh:
         fh.write("retrain complete; swap may proceed\n")
 
-    # Swap: stale partition dirs from the old layout must not survive
-    # (emptied high-numbered cells would under an in-place overwrite),
-    # which the whole-dir rename gives us for free. A relation absent
-    # from the tmp tree (graphs, when no sidecar exists) is skipped.
-    for rel in _RETRAIN_RELS:
-        live = os.path.join(base, rel)
-        old = live + ".old"
-        tmp = os.path.join(tmp_base, rel)
-        if not os.path.exists(tmp):
-            continue
-        if os.path.exists(live):
-            os.rename(live, old)
-        os.rename(tmp, live)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    shutil.rmtree(tmp_base)
+    # Swap by finishing the commit: recovery's "committed and tmp exists"
+    # branch renames each relation present in the tmp tree into place
+    # (graphs only when a sidecar was built) and reaps the tmp tree. The
+    # whole-dir rename means stale partition dirs from the old layout
+    # cannot survive, as emptied high-numbered cells would under an
+    # in-place overwrite.
+    recover_codebook_index(base)
     occ_after = cell_occupancy(spark, base)
     return {
         "n_cells": stats["n_cells"],

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gwasdb_spark.session import run_concurrently
+
 K1 = 1.2
 B = 0.75
 
@@ -675,14 +677,11 @@ def compact_text_index(spark, index_dir: str) -> None:
     tomb = tomb.localCheckpoint(eager=True)
 
     # The postings and doclen rewrites are independent (own source,
-    # own tmp dir) — submit both from a 2-thread pool (guide §2.6) so
-    # the doclen job back-fills the postings job's tail; the
-    # crash-safe rename swaps stay sequential per relation AFTER each
-    # write commits (same recover_text_index state machine).
-    from concurrent.futures import ThreadPoolExecutor
-
-    def rewrite(rel_order):
-        rel, order = rel_order
+    # own tmp dir) — run both concurrently (guide §2.6) so the doclen
+    # job back-fills the postings job's tail; the crash-safe rename
+    # swaps stay sequential per relation AFTER both writes commit (same
+    # recover_text_index state machine).
+    def rewrite(rel, order):
         live = spark.read.parquet(f"{index_dir}/{rel}").join(
             F.broadcast(tomb), "doc", "left_anti"
         )
@@ -691,13 +690,12 @@ def compact_text_index(spark, index_dir: str) -> None:
                 order
             )
         live.write.mode("overwrite").parquet(f"{index_dir}/{rel}.compact")
-        return rel
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for rel in pool.map(
-            rewrite, (("postings", "term"), ("doclen", None))
-        ):
-            os.rename(f"{index_dir}/{rel}", f"{index_dir}/{rel}.old")
-            os.rename(f"{index_dir}/{rel}.compact", f"{index_dir}/{rel}")
-            shutil.rmtree(f"{index_dir}/{rel}.old")
+    run_concurrently(
+        lambda: rewrite("postings", "term"), lambda: rewrite("doclen", None)
+    )
+    for rel in ("postings", "doclen"):
+        os.rename(f"{index_dir}/{rel}", f"{index_dir}/{rel}.old")
+        os.rename(f"{index_dir}/{rel}.compact", f"{index_dir}/{rel}")
+        shutil.rmtree(f"{index_dir}/{rel}.old")
     shutil.rmtree(f"{index_dir}/tombstones")

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from gwasdb_spark.catalog import table
 from gwasdb_spark.operators.quality import cap_vocabulary, repetition_signals
 from gwasdb_spark.plans.base import query
+from gwasdb_spark.session import run_concurrently
 
 _SQL_TOK = r"""
     tok AS (
@@ -1193,17 +1194,9 @@ def c05_takedown_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).write.parquet(bands_live)
         return spark.read.parquet(bands_live)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_acid = pool.submit(store_acid)
-        f_bm25 = pool.submit(store_bm25)
-        f_ann = pool.submit(store_ann)
-        f_bands = pool.submit(store_bands)
-        acid_df = f_acid.result()
-        postings, doclen = f_bm25.result()
-        ann_index, ann_manifest = f_ann.result()
-        band_store = f_bands.result()
+    acid_df, (postings, doclen), (ann_index, ann_manifest), band_store = (
+        run_concurrently(store_acid, store_bm25, store_ann, store_bands)
+    )
 
     # -- audits: one conditional-sum pass per store --------------------
     def _vic_sum(c):

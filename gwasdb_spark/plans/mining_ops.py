@@ -2052,7 +2052,7 @@ def st22_stream_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     manual refresh_graph_sidecar calls. Coherence is engine-enforced
     since r13: `upsert_cell_index` detects `<base>/graphs` and
     re-derives the touched cells' graph partitions itself with the
-    sidecar's recorded R (operators/ann_index._maybe_refresh_graphs) —
+    sidecar's recorded R (operators/ann_index._rewrite_cells) —
     the invariant x176 proved breaks results when missed no longer
     lives in the caller. After the AvailableNow replay drains, the
     query serves the flat-regime beam (`graph_probe_persisted`,

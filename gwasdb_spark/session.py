@@ -10,6 +10,7 @@ UTC session time so results are engine-portable).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -52,3 +53,13 @@ def get_spark(app_name: str = "gwasdb_spark", master: str | None = None) -> Spar
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_concurrently(*fns):
+    """Run each callable on its own driver thread, so their Spark jobs
+    overlap instead of each job's tail idling the cluster. Waits for all
+    of them, returns their results in argument order, and re-raises the
+    first failure in argument order once every call has finished."""
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futures = [pool.submit(fn) for fn in fns]
+    return [f.result() for f in futures]

@@ -224,9 +224,40 @@ def test_delete_is_idempotent_and_empty_batch_is_zero_io(spark, tmp_path):
     before = _file_mtimes(base)
     # replay the same batch: victims already gone -> zero IO, same index
     info = delete_from_cell_index(spark, base, ids)
-    assert info == {"touched_cells": [], "n_deleted": 0}
+    assert info == {
+        "touched_cells": [], "n_deleted": 0, "graphs_refreshed": False
+    }
     assert _file_mtimes(base) == before
     assert _snapshot(read_cell_index(spark, base)) == snap1
+
+
+def test_upsert_rejects_a_batch_that_repeats_a_vec_id(spark, tmp_path):
+    """Two rows for one vec_id in one batch would both land in the index
+    and the manifest (a corrupted primary key). The upsert raises before
+    anything is written, so every index file stays byte-stable."""
+    base = str(tmp_path / "idx_dup")
+    build_cell_index(_corpus(spark), base)
+
+    def tree_bytes():
+        out = {}
+        for d, _, files in os.walk(base):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.join(d, f)] = fh.read()
+        return out
+
+    before = tree_bytes()
+    batch = spark.createDataFrame(
+        [
+            (9001, [1.0] + [0.0] * 7),
+            (5, [0.0, 1.0] + [0.0] * 6),
+            (9001, [0.0, 0.0, 1.0] + [0.0] * 5),  # same id, other cell
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="repeats a vec_id"):
+        upsert_cell_index(spark, base, batch)
+    assert tree_bytes() == before
 
 
 # ------------------------------------------------- codebook variant ----
@@ -302,6 +333,27 @@ def test_codebook_retrain_after_biased_delete(spark, tmp_path):
         for r in brute_force_topk(q, survivors, k=5).collect()
     }
     assert got == want
+
+
+def test_retrain_loads_the_codebook_once(spark, tmp_path, monkeypatch):
+    """With n_cells=None the retrain sizes the new codebook from the one
+    it already loaded for the skew baseline (each load is a Spark scan
+    and collect) instead of reading the codebook a second time."""
+    import gwasdb_spark.operators.ann_index as ai
+
+    base = str(tmp_path / "cbk_once")
+    ai.build_codebook_index(_corpus(spark, n=120), base, n_cells=3)
+    calls = []
+    real = ai.load_codebook
+
+    def counting(spark_, base_):
+        calls.append(base_)
+        return real(spark_, base_)
+
+    monkeypatch.setattr(ai, "load_codebook", counting)
+    info = ai.retrain_codebook_index(spark, base)
+    assert calls == [base]
+    assert info["n_cells"] == 3 and info["n_vectors"] == 120
 
 
 def test_upsert_of_nondeterministic_batch_reports_written_rows(spark, tmp_path):
