@@ -1,166 +1,286 @@
-"""Per-file-group bloom filters for point-lookup skipping.
+"""Parquet footer bloom filters for point-lookup skipping.
 
 Min/max stats (table_log.py) prune RANGE predicates, but an Eq/IsIn on
 a column whose values interleave across file groups (ingest order,
 round-robin writes) is invisible to them — every group's [min, max]
-spans the probe value and a 1-key DELETE reads the whole table. This is
-exactly the gap Delta's bloom-filter indexes and Parquet's column-level
-bloom filters cover (both public designs); the container ships neither
-jar, so this module supplies the same skipping natively:
+spans the probe value and a 1-key DELETE reads the whole table. The
+parquet format's own column bloom filters cover exactly this gap (the
+gap Delta's bloom-filter indexes cover), so:
 
-- On every group write, for each configured bloom column, build one
-  bloom filter over the group's non-null values and store it in a
-  sidecar JSON INSIDE the group directory (`.blooms.json` — the dot
-  prefix hides it from Spark's parquet file listing, and it shares the
-  group's immutability: written by the creating writer before the
-  manifest commit ever names the group).
-- At DML time, after min/max passes, any Eq/IsIn conjunct on a bloom
-  column probes the sidecar; "definitely absent" prunes the group.
+- Write: every group write passes `write_options(...)` to its own
+  DataFrameWriter (per-writer options, never session conf). Parquet
+  then builds one split-block bloom filter per bloom column per row
+  group INSIDE the write job and stores it in the file, located by the
+  footer. No extra Spark job, no sidecar; the filter shares the file's
+  immutability by construction. The options size each filter
+  adaptively (10 candidate sizes, fpp 0.001) rather than parquet's
+  default of 1 MiB per file, and turn dictionary encoding off for the
+  bloom columns (a fully dictionary-encoded chunk gets no filter).
+- Probe: `group_admits` answers on the driver in pure Python by
+  seeking into each file: the 8-byte tail, the thrift-compact footer
+  (only each column chunk's type, path and bloom offset/length are
+  used), then the bloom header and bitset. A value is tested with
+  XXH64 (seed 0) of its PLAIN encoding — UTF-8 bytes for strings,
+  4-byte LE for INT32, 8-byte LE for INT64 — against the split-block
+  layout (parquet-format BloomFilter.md). About 0.2 ms per file and a
+  few µs per probe; a JVM round trip per file would cost 12-16 ms.
 
-Soundness mirrors `predicates.Pred.may_match`: a bloom can only say
-NO when no row matches (no false negatives by construction — every
-inserted value sets all its k bits), so pruning on NO commits the
-identical table. False positives only cost an extra group read.
-
-Construction is distributed and bounded: positions are computed
-JVM-side (sha2 + conv — whole-stage codegen, no Python per row),
-OR-folded into bytes by a groupBy(byte_index) aggregate, and the
-driver collects at most m/8 (byte_index, byte) rows — bounded by the
-bloom's own size (the artifact being built), never by row count.
-
-The hash must be computable identically in the JVM (build side) and
-in driver Python (probe side), so positions use sha256 of
-"{seed}:{canonical string}" — available as `sha2` in Spark and
-`hashlib` in Python — rather than xxhash64 (no Python twin in this
-container). 15 hex digits (60 bits) are taken per position, far above
-any m. Bloom columns are restricted to integer/string types, where
-the JVM's CAST(x AS STRING) and Python's str(x) agree byte-for-byte.
-
-Sizing: ~12 bits/row, k=5 → ~0.3% false-positive rate, capped at
-2^23 bits (1 MiB) per column per group — at that cap a group holds
-~700k rows before fpp drifts up, which is the right trade: the bloom
-rides a sidecar read that is already amortized against rewriting the
-group.
+Soundness mirrors `predicates.Pred.may_match`: the probe may only say
+NO when no row can match. A bloom has no false negatives; everything
+uncertain admits — a file or row group without a filter for the column
+(files written before footer blooms), an unreadable footer, an unknown
+algorithm, and any literal outside the column's own family (a float or
+bool against an integer column, an int against a string column),
+because Spark's cross-type comparison casts and may still match.
+A group admits when any of its files has a row group admitting every
+required lookup at once (the conjunct a matching row must satisfy).
 """
 
 from __future__ import annotations
 
-import base64
-import hashlib
-import json
 import os
+import struct
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-BLOOM_K = 5
-_BITS_PER_ROW = 12
-_MIN_BITS = 1 << 10
-_MAX_BITS = 1 << 23
-
-# types whose Spark CAST-to-string equals Python str() — bloom-eligible
+# Spark types parquet stores as INT32 / INT64 / BYTE_ARRAY — bloom-eligible
 _BLOOM_TYPES = ("byte", "short", "integer", "long", "string")
 
-SIDECAR = ".blooms.json"
+_INT32, _INT64, _BYTE_ARRAY = 1, 2, 6
 
 
-def size_bits(rows: int) -> int:
-    """Smallest power of two ≥ 12·rows, clamped to [2^10, 2^23].
-    Power-of-two m keeps `% m` a mask and sizes reproducible."""
-    target = max(_MIN_BITS, min(_MAX_BITS, _BITS_PER_ROW * max(rows, 1)))
-    m = _MIN_BITS
-    while m < target:
-        m <<= 1
-    return m
+def write_options(schema: StructType, bloom_cols) -> dict:
+    """Per-writer parquet options that put a sized footer bloom for each
+    eligible bloom column into every written file ({} without any).
+    Bloom columns cannot be renamed (table_log._refuse_referenced), so
+    a logical name is also the name in the files."""
+    types = {f.name: f.dataType.typeName() for f in schema.fields}
+    opts = {}
+    for c in bloom_cols or []:
+        if types.get(c) in _BLOOM_TYPES:
+            opts[f"parquet.bloom.filter.enabled#{c}"] = "true"
+            opts[f"parquet.enable.dictionary#{c}"] = "false"
+            opts[f"parquet.bloom.filter.candidates.number#{c}"] = "10"
+            opts[f"parquet.bloom.filter.fpp#{c}"] = "0.001"
+    if opts:
+        opts["parquet.bloom.filter.adaptive.enabled"] = "true"
+    return opts
 
 
-def _position_col(col: str, seed: int, m: int):
-    """JVM-side bloom position: first 15 hex chars of
-    sha256("{seed}:" || CAST(col AS STRING)) as a long, mod m."""
-    h = F.sha2(F.concat(F.lit(f"{seed}:"), F.col(col).cast("string")), 256)
-    return F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % F.lit(m)
+# ------------------------------------------------------------ xxh64 --
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
 
 
-def python_positions(value, m: int) -> list[int]:
-    """Driver-side twin of `_position_col` (parity-tested)."""
-    s = str(value)
-    return [
-        int(
-            hashlib.sha256(f"{seed}:{s}".encode("utf-8")).hexdigest()[:15],
-            16,
-        )
-        % m
-        for seed in range(BLOOM_K)
-    ]
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
 
 
-def bloom_eligible_columns(df: DataFrame, requested) -> list[str]:
-    by_name = {f.name: f.dataType.typeName() for f in df.schema.fields}
-    return [
-        c for c in requested if by_name.get(c) in _BLOOM_TYPES
-    ]
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
 
 
-def build_bloom(df: DataFrame, col: str, rows: int) -> dict:
-    """One bloom over the non-null values of `df[col]`.
+def xxh64(data: bytes, seed: int = 0) -> int:
+    """XXH64 of `data` as an unsigned 64-bit int (the hash parquet's
+    split-block filter and Spark's `xxhash64` use)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _P1 + _P2) & _M64,
+            (seed + _P2) & _M64,
+            seed & _M64,
+            (seed - _P1) & _M64,
+        ]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_round(a, b) for a, b in zip(v, lanes)]
+            i += 32
+        h = (
+            _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
+        ) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl(h ^ _round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ (k * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = _rotl(h ^ (data[i] * _P5 & _M64), 11) * _P1 & _M64
+        i += 1
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
 
-    Distributed fold: k codegen'd positions per row → (word_index,
-    64-bit word) → bit_or per word; the collect is ≤ m/64 rows (the
-    bloom's own words), independent of df's size. Words are packed
-    little-endian so global bit p lives at byte p>>3, bit p&7 — the
-    layout `may_contain` probes."""
-    import struct
 
-    m = size_bits(rows)
-    pos = F.explode(
-        F.array(*[_position_col(col, s, m) for s in range(BLOOM_K)])
-    ).alias("pos")
-    words_df = (
-        df.filter(F.col(col).isNotNull())
-        .select(pos)
-        .select(
-            (F.col("pos") / 64).cast("long").alias("word_idx"),
-            # python-API shiftleft wants a literal count; the SQL form
-            # takes a column
-            F.expr(
-                "shiftleft(CAST(1 AS BIGINT), CAST(pos % 64 AS INT))"
-            ).alias("bit"),
-        )
-        .groupBy("word_idx")
-        .agg(F.bit_or("bit").alias("word"))
-    )
-    buf = bytearray(m // 8)
-    for r in words_df.collect():  # bounded by m/64, not by row count
-        struct.pack_into("<q", buf, r["word_idx"] * 8, r["word"])
-    return {
-        "m": m,
-        "k": BLOOM_K,
-        "b64": base64.b64encode(bytes(buf)).decode("ascii"),
-    }
+# ---------------------------------------------------- split-block --
+_SALT = (
+    0x47B6137B, 0x44974D91, 0x8824AD5B, 0xA2B7289D,
+    0x705495C7, 0x2DF1424B, 0x9EFC4947, 0x5C6BFB31,
+)
 
 
-def may_contain(bloom: dict, value) -> bool:
-    """True unless the bloom PROVES absence (all-k-bits test)."""
-    if value is None:
-        return True  # nulls never enter a bloom; null_count stats rule
-    m = bloom["m"]
-    buf = base64.b64decode(bloom["b64"])
+def block_admits(bitset: bytes, h: int) -> bool:
+    """Split-block membership of hash `h`: the top 32 bits pick a
+    32-byte block, the low 32 bits set one bit in each of its eight
+    words (parquet-java BlockSplitBloomFilter.findHash)."""
+    block = ((h >> 32) * (len(bitset) // 32)) >> 32
+    words = struct.unpack_from("<8I", bitset, block * 32)
+    key = h & 0xFFFFFFFF
     return all(
-        buf[p >> 3] & (1 << (p & 7)) for p in python_positions(value, m)
+        w >> ((key * s & 0xFFFFFFFF) >> 27) & 1 for w, s in zip(words, _SALT)
     )
 
 
-def write_sidecar(group_dir: str, blooms: dict) -> None:
-    path = os.path.join(group_dir, SIDECAR)
-    with open(path, "w") as fh:
-        json.dump(blooms, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+def plain_bytes(ptype: int, value) -> bytes | None:
+    """PLAIN encoding of `value` for physical type `ptype`, or None when
+    the literal is not of the column's own family (or out of its range):
+    such a probe cannot be answered and admits."""
+    if ptype in (_INT32, _INT64):
+        if not isinstance(value, int) or isinstance(value, bool):
+            return None
+        fmt, bits = ("<i", 32) if ptype == _INT32 else ("<q", 64)
+        if not -(1 << (bits - 1)) <= value < 1 << (bits - 1):
+            return None
+        return struct.pack(fmt, value)
+    if ptype == _BYTE_ARRAY and isinstance(value, str):
+        return value.encode("utf-8")
+    return None
 
 
-def read_sidecar(group_dir: str) -> dict:
-    path = os.path.join(group_dir, SIDECAR)
-    if not os.path.exists(path):
-        return {}
-    with open(path) as fh:
-        return json.load(fh)
+# ---------------------------------------------------- thrift compact --
+def _varint(buf: bytes, i: int) -> tuple[int, int]:
+    out = shift = 0
+    while True:
+        b = buf[i]
+        i += 1
+        out |= (b & 0x7F) << shift
+        if b < 0x80:
+            return out, i
+        shift += 7
+
+
+def _zigzag(buf: bytes, i: int) -> tuple[int, int]:
+    u, i = _varint(buf, i)
+    return (u >> 1) ^ -(u & 1), i
+
+
+def _value(buf: bytes, i: int, t: int):
+    """One thrift-compact value of wire type `t` at `i` → (value, end).
+    Structs decode to {field id: value}, lists/sets to lists; the
+    parquet footer has no maps."""
+    if t in (1, 2):  # bool folded into a field header
+        return t == 1, i
+    if t == 3:
+        return buf[i], i + 1
+    if t in (4, 5, 6):
+        return _zigzag(buf, i)
+    if t == 7:
+        return buf[i:i + 8], i + 8
+    if t == 8:
+        n, i = _varint(buf, i)
+        return buf[i:i + n], i + n
+    if t in (9, 10):
+        head = buf[i]
+        i += 1
+        n, et = head >> 4, head & 0x0F
+        if n == 15:
+            n, i = _varint(buf, i)
+        out = []
+        for _ in range(n):
+            if et in (1, 2):  # list bools are one byte each
+                v, i = buf[i] == 1, i + 1
+            else:
+                v, i = _value(buf, i, et)
+            out.append(v)
+        return out, i
+    if t == 12:
+        out, fid = {}, 0
+        while True:
+            head = buf[i]
+            i += 1
+            if head == 0:
+                return out, i
+            delta, ft = head >> 4, head & 0x0F
+            if delta:
+                fid += delta
+            else:
+                fid, i = _zigzag(buf, i)
+            out[fid], i = _value(buf, i, ft)
+    raise ValueError(f"unknown thrift compact type {t}")
+
+
+# -------------------------------------------------------------- probe --
+def _file_admits(path: str, lookups: list[tuple[str, tuple]]) -> bool:
+    """Does some row group of one parquet file admit every lookup?"""
+    with open(path, "rb") as fh:
+        fh.seek(-8, os.SEEK_END)
+        tail = fh.read(8)
+        if tail[4:] != b"PAR1":
+            return True  # encrypted or foreign footer: cannot tell
+        (flen,) = struct.unpack("<I", tail[:4])
+        fh.seek(-8 - flen, os.SEEK_END)
+        footer, _ = _value(fh.read(flen), 0, 12)
+
+        def chunk_admits(meta: dict, values: tuple) -> bool:
+            off, length = meta.get(14), meta.get(15)
+            if off is None:
+                return True  # no filter for this chunk
+            fh.seek(off)
+            raw = fh.read(length or 64)
+            header, start = _value(raw, 0, 12)
+            nbytes = header.get(1, 0)
+            if (
+                nbytes <= 0 or nbytes % 32
+                or 1 not in header.get(2, {})  # SPLIT_BLOCK
+                or 1 not in header.get(3, {})  # XXHASH
+                or 1 not in header.get(4, {})  # UNCOMPRESSED
+            ):
+                return True
+            bitset = raw[start:start + nbytes]
+            if len(bitset) < nbytes:
+                fh.seek(off + start)
+                bitset = fh.read(nbytes)
+            for v in values:
+                enc = plain_bytes(meta.get(1), v)
+                if enc is None or block_admits(bitset, xxh64(enc)):
+                    return True
+            return False
+
+        for rg in footer.get(4, []):
+            metas = {
+                tuple(p.decode() for p in c[3].get(3, [])): c[3]
+                for c in rg.get(1, [])
+                if 3 in c
+            }
+            if all(
+                (col,) not in metas or chunk_admits(metas[(col,)], values)
+                for col, values in lookups
+            ):
+                return True
+        return False
+
+
+def group_admits(group_dir: str, lookups: list[tuple[str, tuple]]) -> bool:
+    """True unless the footer blooms PROVE no row of the group can
+    satisfy every (col, candidate values) lookup. Any unreadable file
+    or group, or an unencodable string, admits (read it)."""
+    try:
+        files = [
+            os.path.join(group_dir, f)
+            for f in os.listdir(group_dir)
+            if f.endswith(".parquet") and f[0] not in "._"
+        ]
+        return not files or any(_file_admits(p, lookups) for p in files)
+    except (OSError, ValueError, IndexError, struct.error):
+        return True

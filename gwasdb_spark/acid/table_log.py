@@ -54,12 +54,12 @@ ACID properties and how they hold:
   OCC loop (`_occ`) and one snapshot resolver (`_snapshot`).
 
 Point-lookup skipping (round 10): tables created with `bloom_cols`
-carry a per-group bloom-filter sidecar (acid/bloom.py — the native
-stand-in for Delta bloom indexes / parquet column blooms, both absent
-from this container). After min/max passes, Eq/IsIn conjuncts on a
-bloom column probe the sidecar and prune groups the filter proves
-value-free — the case min/max cannot see: a point DELETE on a key
-whose values interleave across every group.
+write a parquet bloom filter for each bloom column into every file
+footer, inside the group's own write job (acid/bloom.py), so a DML
+commit on a bloom table is one Spark job. After min/max passes, Eq/IsIn
+conjuncts on a bloom column probe those footers on the driver and prune
+groups the filters prove value-free — the case min/max cannot see: a
+point DELETE on a key whose values interleave across every group.
 
 CHECK constraints (round 10): `create(checks=...)` / `add_check` /
 `drop_check` store {name: SQL boolean expr} in every manifest;
@@ -353,8 +353,8 @@ class AcidTable:
         validated here (one aggregate over the just-written group);
         any violation removes the group and aborts the statement
         BEFORE a manifest could name it. When the table carries bloom
-        columns, the group's bloom sidecar is built and written inside
-        the group dir before return (immutable with the group)."""
+        columns, the same write job puts their parquet bloom filters
+        into every file footer."""
         group = uuid.uuid4().hex
         path = os.path.join(self._data, group)
         column_map = m.get("column_map") or {}
@@ -377,7 +377,9 @@ class AcidTable:
             observed = observed.select(
                 *[F.col(c).alias(column_map.get(c, c)) for c in df.columns]
             )
-        observed.write.mode("overwrite").parquet(path)
+        observed.write.options(
+            **_bloom.write_options(df.schema, m.get("bloom_cols"))
+        ).mode("overwrite").parquet(path)
         row = obs.get
         rows = int(row["__rows"] or 0)
         if checks and rows:
@@ -391,21 +393,7 @@ class AcidTable:
                         for n, c in sorted(bad.items())
                     )
                 )
-        self._write_bloom(path, m.get("bloom_cols"), rows)
         return group, _stats_of(row, stat_cols)
-
-    def _write_bloom(self, path: str, bloom_cols, rows: int) -> None:
-        """Build a written group's bloom sidecar inside its dir
-        (immutable with the group); nothing without bloom columns or
-        rows."""
-        if not bloom_cols or not rows:
-            return
-        back = self.spark.read.parquet(path)
-        elig = _bloom.bloom_eligible_columns(back, bloom_cols)
-        if elig:
-            _bloom.write_sidecar(
-                path, {c: _bloom.build_bloom(back, c, rows) for c in elig}
-            )
 
     def _group_stats(self, path: str) -> dict:
         back = self.spark.read.parquet(path)
@@ -499,7 +487,7 @@ class AcidTable:
     ) -> "AcidTable":
         """`checks` = {name: SQL boolean expr} enforced on every write
         from version 0 on (see add_check for post-hoc addition);
-        `bloom_cols` = columns to carry per-group bloom sidecars for
+        `bloom_cols` = columns to carry parquet footer blooms for
         point-lookup skipping (int/string columns only — others are
         ignored with min/max stats still applying)."""
         t = cls(spark, path)
@@ -566,7 +554,7 @@ class AcidTable:
     ) -> DataFrame:
         """Snapshot read with MANIFEST-level skipping — the serving
         path's twin of pruned DML. With a sargable Pred, only groups
-        whose min/max stats (and bloom sidecars, for Eq/IsIn on bloom
+        whose min/max stats (and footer blooms, for Eq/IsIn on bloom
         columns) admit a match are even listed to Spark; the row-level
         filter is then applied on top (stats skipping is group-
         granular, not exact). At 100 TB a point lookup on a clustered
@@ -793,29 +781,16 @@ class AcidTable:
                 # a group with no recorded stats is always touched
                 if not predicate.may_match(stats.get(g, {})):
                     continue
-                if lookups and not self._bloom_admits(g, lookups):
+                # second stage: the required point lookups (Eq/IsIn
+                # conjuncts on bloom columns) against the footer blooms
+                if lookups and not _bloom.group_admits(
+                    os.path.join(self._data, g), lookups
+                ):
                     continue
                 out.append(g)
             return out
 
         return touched_of
-
-    def _bloom_admits(
-        self, group: str, lookups: list[tuple[str, tuple]]
-    ) -> bool:
-        """Second-stage skip after min/max passes: every required
-        point lookup (Eq/IsIn conjunct on a bloom column) must find at
-        least one candidate value the group's bloom cannot rule out.
-        Missing sidecar or missing column degrades to True (read the
-        group) — same soundness posture as missing stats."""
-        side = _bloom.read_sidecar(os.path.join(self._data, group))
-        for col, values in lookups:
-            b = side.get(col)
-            if not b:
-                continue
-            if not any(_bloom.may_contain(b, v) for v in values):
-                return False
-        return True
 
     def _dml_target(self, predicate: Column | Pred):
         """(touched_of, row predicate) of a DELETE/UPDATE: a Pred prunes
@@ -1016,8 +991,8 @@ class AcidTable:
     @staticmethod
     def _refuse_referenced(m: dict, col: str, verb: str) -> None:
         """Conservative guard: a column referenced by a CHECK constraint
-        or carrying a bloom sidecar cannot be renamed/dropped (the
-        constraint text and the sidecar key would silently go stale —
+        or carrying a footer bloom cannot be renamed/dropped (the
+        constraint text and the bloom's column path would go stale —
         Delta refuses the same way until constraints are dropped)."""
         import re
 
@@ -1032,7 +1007,7 @@ class AcidTable:
                 )
         if col in (m.get("bloom_cols") or []):
             raise ValueError(
-                f"cannot {verb} {col!r}: it carries bloom sidecars "
+                f"cannot {verb} {col!r}: it carries footer blooms "
                 "keyed by the physical name — rebuild without bloom "
                 "first"
             )
@@ -1274,13 +1249,14 @@ class AcidTable:
     def _relayout(self, bucketed, op_of, base: int, meta: dict) -> int:
         """Shared full-rewrite layout mechanics: stage `bucketed`
         (carrying a __bucket column) partitioned by bucket, rename each
-        bucket directory into place as a file group, recompute stats and
-        bloom sidecars, commit. `op_of(n_groups)` names the commit."""
+        bucket directory into place as a file group, recompute stats,
+        commit; the staging write carries the footer blooms.
+        `op_of(n_groups)` names the commit."""
         staging = os.path.join(self._data, f".cluster-{uuid.uuid4().hex}")
         try:
-            bucketed.write.mode("overwrite").partitionBy("__bucket").parquet(
-                staging
-            )
+            bucketed.write.options(
+                **_bloom.write_options(bucketed.schema, meta.get("bloom_cols"))
+            ).mode("overwrite").partitionBy("__bucket").parquet(staging)
             new_groups: list[str] = []
             new_stats: dict = {}
             # ONE grouped aggregate over the staged tree computes every
@@ -1316,11 +1292,6 @@ class AcidTable:
                     continue
                 new_groups.append(group)
                 new_stats[group] = st
-                # layout change only (rows already validated at their
-                # original commits — checks need no re-run), but bloom
-                # sidecars are per-group artifacts and must be rebuilt
-                # for the new grouping
-                self._write_bloom(gpath, meta.get("bloom_cols"), rows)
             try:
                 self._commit(
                     base + 1,

@@ -3439,8 +3439,8 @@ def m06_reset_stage(sf_dir: str) -> None:
     """,
 )
 def m06_acid_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter file skipping made driver-checkable (the native
-    stand-in for Delta bloom indexes — no jar in this container; see
+    """Bloom-filter file skipping made driver-checkable (parquet footer
+    blooms probed on the driver — the role of Delta bloom indexes; see
     acid/bloom.py). Three file groups hold INTERLEAVED o_orderkey
     residues (mod 3), so every group's [min, max] spans the whole key
     range and min/max stats can prune NOTHING — the worst case for
@@ -3450,9 +3450,10 @@ def m06_acid_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     'delete(pruned 2/3)' (its two touched groups merge into one new
     group), and a point UPDATE on the min residue-2 key then prunes
     1/2. Those op strings are oracle literals: if bloom probing ever
-    degrades (sidecar lost, hash drift between the JVM build side and
-    the Python probe side, a false negative), the pruned counts change
-    and the driver hash fails. Every version 0-5 reads back by time
+    degrades (the writer options dropped so footers carry no filter,
+    hash or layout drift between parquet's writer and the Python
+    footer probe, a false negative), the pruned counts change and the
+    driver hash fails. Every version 0-5 reads back by time
     travel with exact integer-cents sums.
 
     At 100 TB this is the skip path for PII/takedown deletes keyed by

@@ -2,8 +2,9 @@
 
 Every op of the transaction log runs a fixed number of Spark jobs on a
 fixed table: the write job (stats and CHECKs ride it as observed
-metrics), a bloom build per bloom column, the quantile passes of a
-relayout, the key-box aggregate of a merge. A change that adds a
+metrics, and parquet writes the bloom columns' footer filters inside
+it), the quantile passes of a relayout, the key-box aggregate of a
+merge. Bloom probes read footers on the driver and run no job. A change that adds a
 re-read, a count or a per-group loop moves one of these figures and
 fails here; a refactor of the commit path must leave all of them as
 they are.
@@ -90,15 +91,15 @@ def test_jobs_per_acid_op(spark, tmp_path):
         f"restore({v_zorder['v']})",
     ]
     assert got == {
-        "create": 4,
-        "cluster_by_zorder": 19,
-        "append": 4,
-        "commit_appends": 4,
-        "merge": 7,
-        "delete_where(Pred)": 4,
-        "update_set(Pred)": 4,
-        "compact": 4,
-        "delete_where(Column)": 4,
+        "create": 1,
+        "cluster_by_zorder": 7,
+        "append": 1,
+        "commit_appends": 1,
+        "merge": 4,
+        "delete_where(Pred)": 1,
+        "update_set(Pred)": 1,
+        "compact": 1,
+        "delete_where(Column)": 1,
         "add_check": 2,
         "rename_column": 0,
         "restore": 0,
