@@ -18,7 +18,7 @@ one level):
 
 1. STAGE: each table's new file group is written and stat'ed by the
    append stage single-table `AcidTable.append` runs too
-   (`AcidTable._stage_append`: schema check, then `_write_group` —
+   (`AcidTable._stage_append`: schema check, then `_write_groups` —
    CHECK constraints validate here, so a violation in EITHER table
    aborts the whole transaction before anything is published).
 2. INTENT: the participant list is fsynced and linked. From here,

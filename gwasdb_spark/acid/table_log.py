@@ -48,10 +48,13 @@ ACID properties and how they hold:
 - Durability: data files and the manifest are fsynced before the link;
   the log advances only past complete manifests.
 - Consistency: every snapshot is a complete table version; DML ops are
-  copy-on-write at file-group granularity: the touched groups are read,
-  transformed and written as one new group, every other group rides
-  into the next manifest verbatim. All single-table writers share one
-  OCC loop (`_occ`) and one snapshot resolver (`_snapshot`).
+  copy-on-write at file-group granularity: the touched groups are read
+  and transformed, and the result is written as new groups (one for a
+  DML statement, one per bucket for a relayout: `cluster_by`,
+  `cluster_by_zorder`); every other group rides into the next manifest
+  verbatim. All single-table writers share one file-group writer
+  (`_write_groups`), one OCC loop (`_occ`) and one snapshot resolver
+  (`_snapshot`).
 
 Point-lookup skipping (round 10): tables created with `bloom_cols`
 write a parquet bloom filter for each bloom column into every file
@@ -63,7 +66,7 @@ point DELETE on a key whose values interleave across every group.
 
 CHECK constraints (round 10): `create(checks=...)` / `add_check` /
 `drop_check` store {name: SQL boolean expr} in every manifest;
-`_write_group` validates each new group in one aggregate and aborts
+`_write_groups` validates each new group on its write job and aborts
 the statement (CheckViolation, no version committed, group removed)
 on any FALSE row — NULL passes, per SQL/Delta CHECK semantics.
 `add_check` validates the whole current snapshot before committing
@@ -133,15 +136,15 @@ def _json_safe(v):
     return v
 
 
-def _stats_aggs(schema, skip: str | None = None) -> tuple[list[str], list]:
+def _stats_aggs(schema) -> tuple[list[str], list]:
     """The one stats aggregate: (stat columns, aggregates) giving the
     row count and each orderable column's min, max and non-null count —
-    the triple parquet footers carry. `skip` names a column to leave
-    out (a relayout's bucket column)."""
+    the triple parquet footers carry. A bucketed write's `__bucket`
+    column is layout, not data, and gets no stats."""
     cols = [
         f.name
         for f in schema.fields
-        if f.name != skip
+        if f.name != "__bucket"
         and (
             f.dataType.typeName() in _STAT_TYPE_NAMES
             or f.dataType.typeName().startswith("decimal")
@@ -192,6 +195,33 @@ def _violations(row, checks: dict) -> dict:
         for i, name in enumerate(checks)
         if row[f"__chk_{i}"]
     }
+
+
+def _quantile_bucket(value: Column, bounds) -> Column:
+    """The bucket id of `value` between sorted quantile `bounds`: 0 up
+    to the first bound, i+1 above bound i (duplicate bounds collapse,
+    so a duplicate-heavy column yields fewer buckets)."""
+    bucket = F.lit(0)
+    for i, b in enumerate(sorted(set(bounds))):
+        bucket = F.when(value > F.lit(b), i + 1).otherwise(bucket)
+    return bucket
+
+
+def _read_mapped(spark: SparkSession, schema, column_map: dict, *paths):
+    """Read parquet `paths` under the LOGICAL `schema`. With a
+    `column_map` ({logical: physical}) the files carry physical names:
+    request those, and alias them back in one zero-cost Project."""
+    if not column_map:
+        return spark.read.schema(schema).parquet(*paths)
+    from pyspark.sql.types import StructField, StructType
+
+    fields = [(column_map.get(f.name, f.name), f) for f in schema.fields]
+    physical = StructType(
+        [StructField(p, f.dataType, f.nullable) for p, f in fields]
+    )
+    return spark.read.schema(physical).parquet(*paths).select(
+        *[F.col(p).alias(f.name) for p, f in fields]
+    )
 
 
 def _txn_marker_path(txn: dict) -> str:
@@ -331,69 +361,95 @@ class AcidTable:
         return v, self._visible_manifest(v)
 
     # ---------------------------------------------------------- write --
-    def _write_group(self, df: DataFrame, m: dict) -> tuple[str, dict]:
-        """Write a new immutable file group under the table metadata of
-        manifest `m` (its checks, bloom_cols and column_map) and return
-        (group, stats).
+    def _write_groups(
+        self, df: DataFrame, m: dict, bucketed: bool = False
+    ) -> list[tuple[str, dict]]:
+        """The one file-group writer: write `df` as new immutable file
+        groups under the table metadata of manifest `m` (its checks,
+        bloom_cols and column_map) and return [(group, stats)].
 
-        Stats come from ONE aggregate over the just-written files (the
-        truthful source — what is actually on disk), the same min/max/
-        null-count triple parquet footers carry; batch-scale cost.
+        Unbucketed, `df` becomes ONE group, written straight to
+        `data/<uuid>`; its stats ride the write job as observed metrics
+        (no re-read of the just-written files).
+        Bucketed, every row carries an int `__bucket`: ONE
+        `partitionBy("__bucket")` staging write, ONE grouped aggregate
+        over the staged tree for every bucket's stats (explicit schema,
+        so an empty staging tree reads as empty instead of failing
+        schema inference), then each bucket directory is renamed into
+        place as its own group. Either way the stats are the min/max/
+        null-count triple parquet footers carry, over exactly the rows
+        on disk, keyed by LOGICAL names (pruning predicates speak them).
 
         When the table carries a `column_map` (RENAME COLUMN history —
-        {logical: physical}), the batch arrives with LOGICAL names and
+        {logical: physical}), the batch arrives with logical names and
         is written under the PHYSICAL ones, so every file group in the
         table shares one physical naming forever (the Delta
         column-mapping invariant; mixed per-group names would make the
-        single read schema null-fill the newer groups silently). Stats
-        are translated back to logical keys — pruning predicates speak
-        logical names.
+        single read schema null-fill the newer groups silently).
 
-        When the table carries CHECK constraints, the new rows are
-        validated here (one aggregate over the just-written group);
-        any violation removes the group and aborts the statement
-        BEFORE a manifest could name it. When the table carries bloom
-        columns, the same write job puts their parquet bloom filters
-        into every file footer."""
-        group = uuid.uuid4().hex
-        path = os.path.join(self._data, group)
-        column_map = m.get("column_map") or {}
-        # Stats AND CHECK validation ride the write job itself as
-        # observed metrics (r13, guide §1.4/§5): the old path re-read
-        # the just-written files once for stats and once more for
-        # checks — two extra jobs per commit, paid by every DML
-        # statement. The metrics are computed over the exact rows the
-        # write emits (same truthful source, one pass), and the
-        # expressions speak LOGICAL names so no column-map
-        # back-translation is needed. CHECK semantics unchanged: a
-        # violating group is removed before any manifest names it.
+        CHECK constraints are observed on the write job too: any
+        violation removes what was written and aborts the statement
+        BEFORE a manifest could name it. Bloom columns get their
+        parquet bloom filters in every file footer from the same job."""
         from pyspark.sql import Observation
 
         checks = m.get("checks") or {}
+        cmap = m.get("column_map") or {}
         stat_cols, aggs = _stats_aggs(df.schema)
         obs = Observation()
-        observed = df.observe(obs, *aggs, *_check_aggs(checks))
-        if column_map:
-            observed = observed.select(
-                *[F.col(c).alias(column_map.get(c, c)) for c in df.columns]
+        # bucketed stats come from the staged tree: observe only the
+        # row count (aggs[0]) beside the CHECKs
+        out = df.observe(
+            obs, *(aggs[:1] if bucketed else aggs), *_check_aggs(checks)
+        )
+        if cmap:
+            out = out.select(
+                *[F.col(c).alias(cmap.get(c, c)) for c in df.columns]
             )
-        observed.write.options(
+        writer = out.write.options(
             **_bloom.write_options(df.schema, m.get("bloom_cols"))
-        ).mode("overwrite").parquet(path)
-        row = obs.get
-        rows = int(row["__rows"] or 0)
-        if checks and rows:
+        ).mode("overwrite")
+        group = uuid.uuid4().hex
+        path = os.path.join(
+            self._data, f".staging-{group}" if bucketed else group
+        )
+        try:
+            (writer.partitionBy("__bucket") if bucketed else writer).parquet(
+                path
+            )
+            row = obs.get
             bad = _violations(row, checks)
             if bad:
-                shutil.rmtree(path, ignore_errors=True)
                 raise CheckViolation(
-                    f"CHECK constraint(s) violated, statement aborted: "
+                    "CHECK constraint(s) violated, statement aborted: "
                     + ", ".join(
                         f"{n} ({c} rows): {checks[n]}"
                         for n, c in sorted(bad.items())
                     )
                 )
-        return group, _stats_of(row, stat_cols)
+            if not bucketed:
+                return [(group, _stats_of(row, stat_cols))]
+            staged = _read_mapped(self.spark, df.schema, cmap, path)
+            by_bucket = {
+                str(r["__bucket"]): r
+                for r in staged.groupBy("__bucket").agg(*aggs).collect()
+            }  # one row per bucket — bounded collect
+            written = []
+            for name in sorted(os.listdir(path)):
+                if name.startswith("__bucket="):
+                    g = uuid.uuid4().hex
+                    os.rename(
+                        os.path.join(path, name), os.path.join(self._data, g)
+                    )
+                    st = _stats_of(by_bucket[name.split("=", 1)[1]], stat_cols)
+                    written.append((g, st))
+            return written
+        except CheckViolation:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        finally:
+            if bucketed:
+                shutil.rmtree(path, ignore_errors=True)
 
     def _group_stats(self, path: str) -> dict:
         back = self.spark.read.parquet(path)
@@ -498,7 +554,7 @@ class AcidTable:
             "bloom_cols": bloom_cols,
             "schema": df.schema.jsonValue(),
         }
-        group, st = t._write_group(df, meta)
+        [(group, st)] = t._write_groups(df, meta)
         t._commit(0, "create", [group], {group: st}, meta)
         return t
 
@@ -518,30 +574,16 @@ class AcidTable:
         read(v) uses manifest(v)'s own schema AND map, so pre-rename
         snapshots surface pre-rename names."""
         paths = [os.path.join(self._data, g) for g in groups]
-        reader = self.spark.read
-        cmap = manifest.get("column_map") or {}
-        if manifest.get("schema"):
-            from pyspark.sql.types import StructField, StructType
+        if not manifest.get("schema"):
+            return self.spark.read.parquet(*paths)
+        from pyspark.sql.types import StructType
 
-            logical = StructType.fromJson(manifest["schema"])
-            if cmap:
-                physical = StructType(
-                    [
-                        StructField(
-                            cmap.get(f.name, f.name), f.dataType, f.nullable
-                        )
-                        for f in logical.fields
-                    ]
-                )
-                out = reader.schema(physical).parquet(*paths)
-                return out.select(
-                    *[
-                        F.col(cmap.get(f.name, f.name)).alias(f.name)
-                        for f in logical.fields
-                    ]
-                )
-            reader = reader.schema(logical)
-        return reader.parquet(*paths)
+        return _read_mapped(
+            self.spark,
+            StructType.fromJson(manifest["schema"]),
+            manifest.get("column_map") or {},
+            *paths,
+        )
 
     def read(self, version: int | None = None) -> DataFrame:
         """Snapshot read. `version=None` pins the LATEST version once —
@@ -605,23 +647,30 @@ class AcidTable:
 
     def _rewrite_pruned(
         self,
-        op: str,
+        op,
         touched_of,
         transform,
         transform_empty_when_unmatched: bool = False,
+        bucket_of=None,
     ) -> int:
         """Touched-only copy-on-write (the x153 ANN-upsert discipline
-        brought to DML), the one rewrite path of every DML op:
-        `touched_of(manifest)` names the groups whose stats admit a
-        match; ONLY those are read and transformed into one new group,
-        every other group rides into the new manifest verbatim — files
-        never opened, never rewritten. Sound because DELETE/UPDATE
-        WHERE p is the identity on a group `may_match` proves p cannot
-        touch (predicates.py's contract), and MERGE cannot match a
-        target row outside the source's key box. `touched_of=None`
-        touches every group (a predicate that is not statically
-        analyzable) and commits the bare `op`; otherwise the op string
-        is `<op>(pruned k/n)`.
+        brought to DML), the one rewrite path of every DML op and of
+        every relayout: `touched_of(manifest)` names the groups whose
+        stats admit a match; ONLY those are read and transformed into
+        one new group, every other group rides into the new manifest
+        verbatim — files never opened, never rewritten. Sound because
+        DELETE/UPDATE WHERE p is the identity on a group `may_match`
+        proves p cannot touch (predicates.py's contract), and MERGE
+        cannot match a target row outside the source's key box.
+        `touched_of=None` touches every group (a predicate that is not
+        statically analyzable) and commits the bare `op`; otherwise the
+        op string is `<op>(pruned k/n)`.
+
+        `bucket_of(rows)` (a relayout) tags the transformed rows with an
+        int `__bucket`; each bucket is then written as its own group and
+        `op` is a function of the number of groups written. Like every
+        other edit, it runs inside `_occ`: a lost version race re-runs
+        it against the winner's snapshot.
 
         A DML whose predicate prunes EVERY group still commits (a
         metadata-only version, zero data IO) — SQL UPDATE matching 0
@@ -646,18 +695,26 @@ class AcidTable:
                     # unmatched source rows: run the transform over an
                     # empty target of the table's schema.
                     tdf = self._read_groups(m, m["file_groups"]).limit(0)
-                group, st = self._write_group(transform(tdf), m)
-                if st and next(iter(st.values()))[3] == 0:
-                    # transform emptied every touched row: drop the
-                    # empty group rather than carry a 0-row file
-                    shutil.rmtree(
-                        os.path.join(self._data, group), ignore_errors=True
-                    )
-                else:
-                    groups.append(group)
-                    new_stats[group] = st
-                    written.append(group)
-            if touched_of is not None:
+                rows = transform(tdf)
+                if bucket_of is not None:
+                    rows = bucket_of(rows)
+                for group, st in self._write_groups(
+                    rows, m, bucketed=bucket_of is not None
+                ):
+                    if st and next(iter(st.values()))[3] == 0:
+                        # transform emptied every touched row: drop the
+                        # empty group rather than carry a 0-row file
+                        shutil.rmtree(
+                            os.path.join(self._data, group),
+                            ignore_errors=True,
+                        )
+                    else:
+                        groups.append(group)
+                        new_stats[group] = st
+                        written.append(group)
+            if callable(op):
+                op_str = op(len(written))
+            elif touched_of is not None:
                 n = len(m["file_groups"])
                 op_str = f"{op}(pruned {len(touched)}/{n})"
             else:
@@ -763,7 +820,7 @@ class AcidTable:
             meta["schema"] = new_schema.jsonValue()
         # (a legacy manifest without a schema keeps legacy reads —
         # first-file schema — rather than guessing one here)
-        group, st = self._write_group(out, m)
+        [(group, st)] = self._write_groups(out, m)
         groups = list(m["file_groups"]) + [group]
         return group, groups, {**m.get("stats", {}), group: st}, meta
 
@@ -942,7 +999,7 @@ class AcidTable:
         """ALTER TABLE ADD CONSTRAINT ... CHECK (expr): validates the
         CURRENT snapshot first (one aggregate over the table — the same
         full-scan Delta pays), then commits a metadata-only version;
-        every later write is validated against it in `_write_group`.
+        every later write is validated against it in `_write_groups`.
         Raises CheckViolation (no version committed) if existing rows
         already fail. A lost version race re-validates against the
         winner's snapshot."""
@@ -1177,23 +1234,26 @@ class AcidTable:
         point — pay once, skip forever).
 
         Mechanics: exact quantile boundaries (approxQuantile with
-        relativeError=0 — deterministic), one staging write partitioned
-        by the computed bucket, then each bucket directory is RENAMED
-        into place as its own file group (one data pass total, no
-        per-bucket rescans). Empty buckets (duplicate-heavy boundaries)
-        are skipped; the op string records the real group count."""
-        base, meta = self._snapshot()
-        snap = self._read_groups(meta, meta["file_groups"])
+        relativeError=0 — deterministic) bucket every row, and the DML
+        rewrite path writes each bucket as its own file group (one data
+        pass, no per-bucket rescans; see `_write_groups`). Empty buckets
+        (duplicate-heavy boundaries) write no group; the op string
+        records the real group count. The quantiles are computed inside
+        the commit loop, so a lost version race re-clusters the
+        winner's snapshot."""
         qs = [i / n_groups for i in range(1, n_groups)]
-        bounds = sorted(set(snap.approxQuantile(col, qs, 0.0)))
-        bucket = F.lit(0)
-        for i, b in enumerate(bounds):
-            bucket = F.when(F.col(col) > F.lit(b), i + 1).otherwise(bucket)
-        return self._relayout(
-            snap.withColumn("__bucket", bucket),
+
+        def bucket_of(rows: DataFrame) -> DataFrame:
+            bounds = rows.approxQuantile(col, qs, 0.0)
+            return rows.withColumn(
+                "__bucket", _quantile_bucket(F.col(col), bounds)
+            )
+
+        return self._rewrite_pruned(
             lambda n: f"cluster({col}, {n})",
-            base,
-            meta,
+            None,
+            lambda df: df,
+            bucket_of=bucket_of,
         )
 
     def cluster_by_zorder(
@@ -1211,110 +1271,42 @@ class AcidTable:
         bounding box compact in every interleaved dimension, instead of
         compact in one and full-range in the rest (the 1-D clustering
         failure mode for multi-column probes). Same guarantees as
-        cluster_by: logically a no-op, one staging pass, version race
-        aborts rather than blind-retrying. This is Delta OPTIMIZE
+        cluster_by: logically a no-op, one data pass, and a lost version
+        race re-clusters the winner's snapshot. This is Delta OPTIMIZE
         ZORDER's layout, native over the parquet log."""
-        base, meta = self._snapshot()
-        snap = self._read_groups(meta, meta["file_groups"])
         bits = max(1, (int(tiles) - 1).bit_length())
         qs = [i / tiles for i in range(1, tiles)]
-        all_bounds = snap.approxQuantile(list(cols), qs, 0.0)
-        tile_exprs = []
-        for col, raw in zip(cols, all_bounds):
-            bounds = sorted(set(raw))
-            t = F.lit(0)
-            for i, b in enumerate(bounds):
-                t = F.when(F.col(col) > F.lit(b), i + 1).otherwise(t)
-            tile_exprs.append(t.cast("long"))
-        z = F.lit(0).cast("long")
-        for i in range(bits):
-            for j, t in enumerate(tile_exprs):
-                z = z + F.shiftleft(
-                    F.shiftright(t, i).bitwiseAND(F.lit(1)),
-                    i * len(cols) + j,
-                )
-        zdf = snap.withColumn("__z", z)
         zq = [i / n_groups for i in range(1, n_groups)]
-        zbounds = sorted(set(zdf.approxQuantile("__z", zq, 0.0)))
-        bucket = F.lit(0)
-        for i, b in enumerate(zbounds):
-            bucket = F.when(F.col("__z") > F.lit(b), i + 1).otherwise(bucket)
-        return self._relayout(
-            zdf.withColumn("__bucket", bucket).drop("__z"),
-            lambda n: f"zorder({','.join(cols)}, {n})",
-            base,
-            meta,
-        )
 
-    def _relayout(self, bucketed, op_of, base: int, meta: dict) -> int:
-        """Shared full-rewrite layout mechanics: stage `bucketed`
-        (carrying a __bucket column) partitioned by bucket, rename each
-        bucket directory into place as a file group, recompute stats,
-        commit; the staging write carries the footer blooms.
-        `op_of(n_groups)` names the commit."""
-        staging = os.path.join(self._data, f".cluster-{uuid.uuid4().hex}")
-        try:
-            bucketed.write.options(
-                **_bloom.write_options(bucketed.schema, meta.get("bloom_cols"))
-            ).mode("overwrite").partitionBy("__bucket").parquet(staging)
-            new_groups: list[str] = []
-            new_stats: dict = {}
-            # ONE grouped aggregate over the staged tree computes every
-            # bucket's stats (r13, guide §1.4: the old loop re-read and
-            # re-aggregated each bucket directory separately — one scan
-            # job PER group, 8-16 extra jobs per cluster/zorder commit).
-            # Same aggregates, same just-written files, grouped by the
-            # staging partition column instead of per-dir reads.
-            # Explicit schema: an emptied table (delete-all then
-            # cluster/zorder) stages ZERO parquet files, and schema
-            # inference over the bare dir raises UNABLE_TO_INFER_SCHEMA
-            # (ADVICE r13 medium). The staged tree is `bucketed`'s own
-            # rows, so its schema is authoritative either way.
-            back_all = self.spark.read.schema(bucketed.schema).parquet(
-                staging
-            )
-            stat_cols, aggs = _stats_aggs(back_all.schema, skip="__bucket")
-            bucket_rows = {
-                str(r["__bucket"]): r
-                for r in back_all.groupBy("__bucket").agg(*aggs).collect()
-            }  # ≤ n_groups rows — bounded collect
-            for name in sorted(os.listdir(staging)):
-                if not name.startswith("__bucket="):
-                    continue
-                row = bucket_rows.get(name.split("=", 1)[1])
-                group = uuid.uuid4().hex
-                gpath = os.path.join(self._data, group)
-                os.rename(os.path.join(staging, name), gpath)
-                st = _stats_of(row, stat_cols) if row is not None else {}
-                rows = int(row["__rows"]) if row is not None else 0
-                if st and rows == 0:
-                    shutil.rmtree(gpath, ignore_errors=True)
-                    continue
-                new_groups.append(group)
-                new_stats[group] = st
-            try:
-                self._commit(
-                    base + 1,
-                    op_of(len(new_groups)),
-                    new_groups,
-                    new_stats,
-                    self._meta_of(meta),
+        def bucket_of(rows: DataFrame) -> DataFrame:
+            tile_exprs = [
+                _quantile_bucket(F.col(c), bounds).cast("long")
+                for c, bounds in zip(
+                    cols, rows.approxQuantile(list(cols), qs, 0.0)
                 )
-                return base + 1
-            except CommitConflict:
-                # A rewrite CANNOT blind-retry here: the clustered data
-                # was derived from `base`, and committing it over a
-                # racing writer's version would silently drop their
-                # rows. Clean up and let the caller re-run cluster_by
-                # against the new snapshot (maintenance jobs normally
-                # hold exclusivity anyway).
-                for g in new_groups:
-                    shutil.rmtree(
-                        os.path.join(self._data, g), ignore_errors=True
+            ]
+            z = F.lit(0).cast("long")
+            for i in range(bits):
+                for j, t in enumerate(tile_exprs):
+                    z = z + F.shiftleft(
+                        F.shiftright(t, i).bitwiseAND(F.lit(1)),
+                        i * len(cols) + j,
                     )
-                raise
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
+            # __z is a column of its own so the quantile pass and the
+            # bucket expression reference one value instead of each
+            # re-evaluating the bit interleave
+            zdf = rows.withColumn("__z", z)
+            zbounds = zdf.approxQuantile("__z", zq, 0.0)
+            return zdf.withColumn(
+                "__bucket", _quantile_bucket(F.col("__z"), zbounds)
+            ).drop("__z")
+
+        return self._rewrite_pruned(
+            lambda n: f"zorder({','.join(cols)}, {n})",
+            None,
+            lambda df: df,
+            bucket_of=bucket_of,
+        )
 
     # --------------------------------------------------------- vacuum --
     def vacuum(

@@ -1,7 +1,7 @@
 """Registry plumbing for oracle-checked queries.
 
-Each query is a named callable ``(spark, sf_dir) -> DataFrame`` plus an
-optional ANSI-SQL oracle string that DuckDB runs on the same parquet tables.
+Each query is a named callable ``(spark, sf_dir) -> DataFrame`` plus the
+ANSI-SQL oracle string that DuckDB runs on the same parquet tables.
 The driver compares row-count + schema + order-insensitive value hash
 (columns sorted by name), so:
 
@@ -26,7 +26,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
+    oracle: str  # ANSI SQL for DuckDB
     survey_ref: str  # SURVEY.md §2 operator ids this query covers
     doc: str
 
@@ -34,7 +34,7 @@ class Query:
 QUERIES: dict[str, Query] = {}
 
 
-def query(name: str, survey_ref: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+def query(name: str, survey_ref: str, oracle: str) -> Callable[[QueryFn], QueryFn]:
     """Decorator: register ``fn`` as an oracle-checked query."""
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -43,7 +43,7 @@ def query(name: str, survey_ref: str, oracle: str | None = None) -> Callable[[Qu
         QUERIES[name] = Query(
             name=name,
             fn=fn,
-            oracle=oracle.strip() if oracle else None,
+            oracle=oracle.strip(),
             survey_ref=survey_ref,
             doc=(fn.__doc__ or "").strip(),
         )
@@ -57,4 +57,4 @@ def query_map() -> dict[str, QueryFn]:
 
 
 def oracle_map() -> dict[str, str]:
-    return {name: q.oracle for name, q in QUERIES.items() if q.oracle is not None}
+    return {name: q.oracle for name, q in QUERIES.items()}

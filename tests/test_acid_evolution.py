@@ -196,6 +196,36 @@ def test_append_and_pruned_dml_after_rename(spark, tmp_path):
     assert {r["k"] for r in t.read_where(P.Eq("value", 91.0)).collect()} == {9}
 
 
+@pytest.mark.parametrize(
+    "relayout",
+    [
+        lambda t: t.cluster_by("id", n_groups=2),
+        lambda t: t.cluster_by_zorder(["id", "w"], n_groups=2),
+    ],
+    ids=["cluster_by", "cluster_by_zorder"],
+)
+def test_relayout_after_rename_keeps_values(spark, tmp_path, relayout):
+    """A relayout writes through the column map like every other write:
+    the renamed column keeps its values, and each new group's stats
+    stay keyed by the logical name and describe those values."""
+    t = AcidTable.create(
+        spark,
+        os.path.join(str(tmp_path), "rl"),
+        spark.range(100).select("id", (F.col("id") * 2).alias("v")),
+    )
+    t.rename_column("v", "w")
+    v = relayout(t)
+    got = sorted((r["id"], r["w"]) for r in t.read().collect())
+    assert got == [(i, 2 * i) for i in range(100)]
+    m = t._manifest(v)
+    assert len(m["file_groups"]) == 2
+    for g in m["file_groups"]:
+        st = m["stats"][g]
+        assert sorted(st) == ["id", "w"]
+        lo, hi, nulls, rows = st["id"]
+        assert st["w"] == [2 * lo, 2 * hi, 0, rows]
+
+
 def test_drop_column_time_travel_and_readd_refusal(spark, tmp_path):
     import pytest as _pt
 

@@ -1,17 +1,21 @@
 """Spark jobs per AcidTable operation, pinned.
 
 Every op of the transaction log runs a fixed number of Spark jobs on a
-fixed table: the write job (stats and CHECKs ride it as observed
-metrics, and parquet writes the bloom columns' footer filters inside
-it), the quantile passes of a relayout, the key-box aggregate of a
-merge. Bloom probes read footers on the driver and run no job. A change that adds a
-re-read, a count or a per-group loop moves one of these figures and
-fails here; a refactor of the commit path must leave all of them as
-they are.
+fixed table. Every data write goes through one writer
+(`_write_groups`): a single-group write is one job (stats and CHECKs
+ride it as observed metrics, and parquet writes the bloom columns'
+footer filters inside it); a relayout (`cluster_by`,
+`cluster_by_zorder`) adds its quantile passes, one bucketed staging
+write and one grouped stats aggregate over the staged tree. A merge
+adds its key-box aggregate. Bloom probes read footers on the driver and
+run no job. A change that adds a re-read, a count or a per-group loop
+moves one of these figures and fails here; a refactor of the commit
+path must leave all of them as they are.
 
 The table: 2,000 rows with a `kgp_id` bloom, Z-ordered on (chr, pos)
 into 4 file groups, then one statement of each kind in a fixed order
-(each op's cost depends on the log the earlier ones left).
+(each op's cost depends on the log the earlier ones left), closing with
+a 1-D `cluster_by`.
 """
 
 from __future__ import annotations
@@ -74,11 +78,12 @@ def test_jobs_per_acid_op(spark, tmp_path):
         "read_where(point)": lambda: t.read_where(
             P.Eq("kgp_id", "1:42")
         ).collect(),
+        "cluster_by": lambda: t.cluster_by("pos", n_groups=4),
     }
     for name, fn in calls.items():
         got[name] = spark_jobs(spark, fn)
     assert len(t._manifest(v_zorder["v"])["file_groups"]) == 4
-    assert [h["op"] for h in t.history()][-10:] == [
+    assert [h["op"] for h in t.history()][-11:] == [
         "append",
         "txn_append",
         "merge(pruned 5/6)",
@@ -89,6 +94,7 @@ def test_jobs_per_acid_op(spark, tmp_path):
         "add_check(val_ok)",
         "rename_column(pos->position)",
         f"restore({v_zorder['v']})",
+        "cluster(pos, 4)",
     ]
     assert got == {
         "create": 1,
@@ -104,4 +110,5 @@ def test_jobs_per_acid_op(spark, tmp_path):
         "rename_column": 0,
         "restore": 0,
         "read_where(point)": 1,
+        "cluster_by": 5,
     }

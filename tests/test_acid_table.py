@@ -104,6 +104,44 @@ def test_optimistic_retry_wins_next_version(spark, tmp_path):
     ]
 
 
+def test_cluster_by_retries_on_top_of_a_racing_append(spark, tmp_path):
+    """A relayout runs in the same OCC loop as every other writer: when
+    another writer commits first, it re-clusters the winner's snapshot,
+    so the racing writer's rows survive."""
+    t = _mk(spark, tmp_path)
+    other = AcidTable(spark, t.path)
+    orig_commit = t._commit
+    calls = []
+
+    def racing_commit(*args, **kwargs):
+        calls.append(args[0])
+        if len(calls) == 1:
+            other.append(
+                spark.createDataFrame(
+                    [(4, "d", 40.0)], "id long, name string, val double"
+                )
+            )
+        return orig_commit(*args, **kwargs)
+
+    t._commit = racing_commit
+    v = t.cluster_by("id", n_groups=2)
+    t._commit = orig_commit
+    assert calls == [1, 2]  # lost v1 to the append, re-clustered at v2
+    assert v == 2
+    assert _snap(t) == [
+        (1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, "d", 40.0),
+    ]
+    assert [h["op"] for h in t.history()] == [
+        "create", "append", "cluster(id, 2)",
+    ]
+    # the losing attempt's groups are gone; only live groups remain
+    assert set(os.listdir(t._data)) == set(
+        t._manifest(0)["file_groups"]
+        + t._manifest(1)["file_groups"]
+        + t._manifest(2)["file_groups"]
+    )
+
+
 def test_snapshot_isolation_under_concurrent_commit(spark, tmp_path):
     """A reader's DataFrame pinned before a writer commits keeps
     reading its own version's files — immutable groups, never touched

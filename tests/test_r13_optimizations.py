@@ -2,8 +2,9 @@
 pins an invariant the optimization RELIES on, so a later refactor that
 breaks the assumption fails here rather than (only) in a driver hash.
 
-1. `_write_group` observe-path stats == a re-read aggregate of the
-   written files (the old two-pass truth source).
+1. `_write_groups` stats == a re-read aggregate of the written files
+   (the old two-pass truth source), on the observed single-group path
+   and on the bucketed (relayout) path.
 2. `upsert_cell_index`'s derived manifest (column slice of the merged
    index) stays exactly the index's (vec_id, cell) projection —
    including after an upsert that MOVES rows between cells and empties
@@ -45,6 +46,24 @@ def test_write_group_observed_stats_match_reread(spark, tmp_path):
     assert st["k"] == [1, 3, 0, 3]
     assert st["x"] == [-4.25, 10.5, 1, 3]
     assert st["s"][2] == 1  # one null string
+    # the bucketed path: per-bucket stats from the grouped read-back of
+    # the staged tree, null-bearing column included
+    z = AcidTable.create(
+        spark,
+        str(tmp_path / "z"),
+        spark.range(64).select(
+            F.col("id").cast("int").alias("k"),
+            (F.col("id") * 7 % 64).alias("y"),
+            F.when(F.col("id") % 5 == 0, None)
+            .otherwise(F.col("id") / 4)
+            .alias("x"),
+        ),
+    )
+    mz = z._manifest(z.cluster_by_zorder(["k", "y"], n_groups=4, tiles=4))
+    assert len(mz["file_groups"]) == 4
+    for g in mz["file_groups"]:
+        assert mz["stats"][g] == z._group_stats(os.path.join(z._data, g))
+    assert sum(st["x"][2] for st in mz["stats"].values()) == 13
 
 
 def test_write_group_checks_still_abort_before_manifest(spark, tmp_path):

@@ -2,7 +2,7 @@
 survivorship/concurrency guards, pinned as tests so a refactor fails
 here rather than (only) in a driver hash.
 
-1. `_relayout` on an EMPTIED table (delete-all then cluster/zorder)
+1. A relayout on an EMPTIED table (delete-all then cluster/zorder)
    commits an empty layout instead of raising UNABLE_TO_INFER_SCHEMA
    (ADVICE r13 medium).
 2. Graph-row/index-row survivorship: a delete that leaves a SINGLETON
@@ -37,13 +37,20 @@ def test_relayout_on_emptied_table_commits_empty_layout(spark, tmp_path):
     t.delete_where(F.col("k").isNotNull())  # empty the table
     assert t.read().count() == 0
     v_before = t.latest_version()
-    # The bug: staging holds zero parquet files and the stats read-back
-    # raised UNABLE_TO_INFER_SCHEMA; with the explicit schema the
-    # relayout commits an empty layout like the base commit did.
+    # The bug: staging held zero parquet files and the stats read-back
+    # raised UNABLE_TO_INFER_SCHEMA. The relayout must commit an empty
+    # layout like the base commit did.
     v_after = t.cluster_by("k", n_groups=4)
     assert v_after == v_before + 1
     assert t.read().count() == 0
     assert t._manifest(v_after)["file_groups"] == []
+    # a table whose one group holds zero rows stages an EMPTY tree: the
+    # explicit-schema stats read-back must still commit an empty layout
+    e = AcidTable.create(
+        spark, str(tmp_path / "e"), spark.createDataFrame([], "k int, s string")
+    )
+    assert e._manifest(e.cluster_by_zorder(["k"], 4))["file_groups"] == []
+    assert e.read().count() == 0
 
 
 def _mk_vec(dim, hot):
