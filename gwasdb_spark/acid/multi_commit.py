@@ -55,7 +55,7 @@ has itself been vacuumed out of the retained log tails.
 
 Coordination contract: multi-table transactions sharing a txn root are
 issued by ONE coordinator at a time (recover() runs at coordinator
-start, exactly like `recover_codebook_index` before a retrain — it
+start, exactly like `acid/swap.recover` before a whole-relation swap — it
 must not run concurrently with a live commit, or it would abort an
 in-flight transaction). Single-table writers need no coordination:
 they serialize against pending transactions through the ordinary

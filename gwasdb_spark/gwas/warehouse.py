@@ -19,14 +19,22 @@ partition discovery and the schema-inference job happen on the first
 read only; every later query plans against the cached file index. The
 app's interactive queries were driver-bound on exactly that work.
 
+Replacement: `build_combined` and `build_marker_index` rebuild their
+table wholesale through the staged, marker-committed swap of
+acid/swap.py (a throwaway `Warehouse` over the staging dir writes the
+replacement with the usual layout), so a crash leaves the table wholly
+old or wholly new. Every writer — `write` (and so `append`) and both
+builds — first recovers an interrupted swap under the root, so a
+writer must not run beside a build in flight on the same root (the
+swap's single-coordinator contract).
+
 Invalidation contract (the one Spark's catalog file-status cache has):
 every `Warehouse` method that changes a table drops its memo entry once
-the write has finished — `write`, `append`, `build_marker_index`, and
-`build_combined`'s rename swap (`combined` and `combined_tmp_`). A writer
-that changes a table's files out of band (another process, another
-`Warehouse` on the same root, a manual `rm`) must call `refresh(name)`
-before this instance reads that table again, as Spark requires a
-`REFRESH TABLE` after an external write.
+the write has finished — `write`, `append`, `build_marker_index` and
+`build_combined`. A writer that changes a table's files out of band
+(another process, another `Warehouse` on the same root, a manual `rm`)
+must call `refresh(name)` before this instance reads that table again,
+as Spark requires a `REFRESH TABLE` after an external write.
 """
 
 from __future__ import annotations
@@ -36,8 +44,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gwasdb_spark.acid.swap import recover, replacing
+
 SILVER_TABLES = ("b37", "marker", "study", "gwas", "no_gwas_result")
-CHR_PARTITIONED = {"b37", "gwas", "combined", "combined_tmp_"}
+CHR_PARTITIONED = {"b37", "gwas", "combined"}
 
 
 class Warehouse:
@@ -60,6 +70,7 @@ class Warehouse:
         R/gwas_ddl.sql:42-64); we derive a chr partition column from the
         kgp_id prefix (`{chr}:{pos}_{ref}_{alt}`) so the fact table prunes
         on region queries and co-partitions with b37 for the gold build."""
+        recover(self.root)
         if name in CHR_PARTITIONED and "chr" not in df.columns and "kgp_id" in df.columns:
             df = df.withColumn(
                 "chr", F.split(F.col("kgp_id"), ":").getItem(0).cast("int")
@@ -76,6 +87,17 @@ class Warehouse:
     def append(self, name: str, df: DataFrame) -> None:
         """INSERT INTO ... SELECT (SURVEY.md U2) as a partitioned append."""
         self.write(name, df, mode="append")
+
+    def _replace(self, name: str, df: DataFrame) -> DataFrame:
+        """Replace table `name` wholesale with `df`, written with
+        `write`'s layout into the staged swap. The caller recovers the
+        root before it reads the tables `df` is built from."""
+        try:
+            with replacing(self.root) as stage:
+                Warehouse(self.spark, stage).write(name, df)
+        finally:
+            self.refresh(name)
+        return self.read(name)
 
     def read(self, name: str) -> DataFrame:
         """The table's resolved relation, listed and schema-inferred on
@@ -115,17 +137,14 @@ class Warehouse:
         lookup touches ~one file's worth of footer reads plus one row
         group. Delta/Iceberg z-order+bloom is the transactional upgrade;
         no Delta jar ships in this container (documented ROADMAP.md)."""
+        recover(self.root)
         idx = self.read("b37").select("kgp_id", "chr", "pos")
-        try:
-            (
-                idx.repartitionByRange(n_files, "kgp_id")
-                .sortWithinPartitions("kgp_id")
-                .write.mode("overwrite")
-                .parquet(self.path("marker_index"))
-            )
-        finally:
-            self.refresh("marker_index")
-        return self.read("marker_index")
+        return self._replace(
+            "marker_index",
+            idx.repartitionByRange(n_files, "kgp_id").sortWithinPartitions(
+                "kgp_id"
+            ),
+        )
 
     # -- gold -------------------------------------------------------------
 
@@ -140,6 +159,7 @@ class Warehouse:
         The study side broadcasts; the gwas⋈b37 join co-partitions on chr
         when both sides carry it. Persisted chr-partitioned/pos-sorted so
         the app's locus windows stay pruned."""
+        recover(self.root)
         # drop gwas's derived chr partition column — b37 is authoritative
         # for coordinates in the view definition
         gwas = self.read("gwas").drop("chr")
@@ -173,17 +193,4 @@ class Warehouse:
                 "n_control",
             )
         )
-        self.write("combined_tmp_", combined)
-        # atomic-ish swap: write then rename (Delta would give true ACID;
-        # plain parquet keeps the dependency surface minimal here)
-        import shutil
-
-        final = self.path("combined")
-        try:
-            if os.path.exists(final):
-                shutil.rmtree(final)
-            os.rename(self.path("combined_tmp_"), final)
-        finally:
-            # `write` already dropped combined_tmp_'s entry
-            self.refresh("combined")
-        return self.read("combined")
+        return self._replace("combined", combined)

@@ -43,6 +43,7 @@ import shutil
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gwasdb_spark.acid.swap import recover, replacing
 from gwasdb_spark.session import run_concurrently
 
 
@@ -205,7 +206,11 @@ def upsert_cell_index(
     manifest).
 
     Idempotent: re-running the same batch replaces the same rows with
-    the same values (the st16 at-least-once discipline)."""
+    the same values (the st16 at-least-once discipline). Like every
+    writer of the index, it first finishes or discards a retrain that
+    crashed mid-swap (acid/swap.py `recover`), so its touched-cell
+    rewrite never lands on a half-swapped layout."""
+    recover(base)
     # The batch is a bounded object by contract (one micro-batch /
     # ingest slice, not the corpus) — pin it once: it feeds the
     # touched-cell probe, two broadcast anti-joins, the union into the
@@ -282,6 +287,7 @@ def delete_from_cell_index(
     cells' files stay byte-stable. Deleting an absent id is a no-op —
     idempotent under at-least-once replay (the st16 discipline).
     Returns {"touched_cells", "n_deleted", "graphs_refreshed"}."""
+    recover(base)
     ids = vec_ids.select("vec_id")
     manifest = spark.read.parquet(_manifest_path(base))
     # ONE bounded action answers both the victims' cells and their
@@ -395,62 +401,6 @@ def cell_occupancy(spark: SparkSession, base: str) -> dict:
     return {int(r["cell"]): int(r["count"]) for r in rows}
 
 
-# "graphs" participates only when the index carries a graph sidecar —
-# the recovery loop (which is also retrain's swap) skips a relation with
-# no tmp subdir.
-_RETRAIN_RELS = ("index", "manifest", "codebook", "graphs")
-
-
-def _retrain_tmp(base: str) -> str:
-    return os.path.join(base, "_retrain.tmp")
-
-
-def recover_codebook_index(base: str) -> None:
-    """Adopt or discard `_retrain.tmp` left by a retrain that crashed
-    (the compact_text_index/recover_text_index discipline applied to the
-    vector index — ADVICE r11, hardened per ADVICE r12): a tmp tree
-    carrying the `_COMMITTED` marker had fully written all three
-    relations before any swap began, so the swap must be FINISHED for
-    every relation whose tmp subdir still exists — including those whose
-    live dir is intact because the crash hit BETWEEN per-relation swaps
-    (e.g. index already swapped, manifest/codebook not yet: adopting only
-    where live is missing would reap the committed tmp and permanently
-    pair the new index with the old codebook, silently mis-routing every
-    probe). The rule is therefore "committed and tmp exists", not
-    "committed and live missing": rename any still-live dir aside, adopt
-    the tmp, reap the aside. A tmp tree WITHOUT the marker is an
-    incomplete build and the live relations are untouched — reap it. A
-    leftover `<rel>.old` beside a live `<rel>` is the post-swap crash
-    window, plain garbage; an `.old` with NO live and no committed tmp is
-    a half-renamed relation — restore it. Idempotent and cheap; retrain
-    runs it first, and again after writing `_COMMITTED` as its swap."""
-    tmp_base = _retrain_tmp(base)
-    committed = os.path.exists(os.path.join(tmp_base, "_COMMITTED"))
-    for rel in _RETRAIN_RELS:
-        live, old, tmp = (
-            os.path.join(base, rel),
-            os.path.join(base, rel + ".old"),
-            os.path.join(tmp_base, rel),
-        )
-        if committed and os.path.exists(tmp):
-            # Finish this relation's swap regardless of live's state.
-            if os.path.exists(live):
-                if os.path.exists(old):  # double-crash leftover
-                    shutil.rmtree(old)
-                os.rename(live, old)
-            os.rename(tmp, live)
-            if os.path.exists(old):
-                shutil.rmtree(old)
-        elif not os.path.exists(live) and os.path.exists(old):
-            # Crash between rename(live, old) and rename(tmp, live) with
-            # the tmp already adopted or absent: put the relation back.
-            os.rename(old, live)
-        if os.path.exists(live) and os.path.exists(old):
-            shutil.rmtree(old)
-    if os.path.isdir(tmp_base):
-        shutil.rmtree(tmp_base)
-
-
 def retrain_codebook_index(
     spark: SparkSession,
     base: str,
@@ -469,18 +419,20 @@ def retrain_codebook_index(
     occupancy skew (max/mean over non-empty cells) before and after so
     callers can log the recovery.
 
-    Crash safety (ADVICE r11): the new layout is built into
-    `<base>/_retrain.tmp/{index,manifest,codebook}`, a `_COMMITTED`
-    marker is written once all three are complete, and only then are the
-    live dirs swapped via rename-aside (rename live → `.old`, rename tmp
-    in, reap `.old`). The live index is never deleted before its full
-    replacement exists on disk; any crash window leaves a state
-    `recover_codebook_index` repairs — the previous rmtree-before-build
-    ordering could strand the index with nothing but an in-memory
-    localCheckpoint."""
-    recover_codebook_index(base)
-    occ_before = cell_occupancy(spark, base)
-    book_cells = max(1, len(load_codebook(spark, base)))
+    Crash safety: the new index, manifest, codebook and (when the index
+    carries one) graph sidecar are built into one staged swap
+    (acid/swap.py `replacing`) and replace the live relations together
+    once the commit marker is published. The live index is never
+    touched before its full replacement exists on disk, and a crash at
+    any point leaves every relation wholly old or wholly new; the next
+    writer's recovery finishes or discards the swap. The whole-dir
+    replacement also means stale partition dirs from the old layout
+    cannot survive, as emptied high-numbered cells would under an
+    in-place overwrite."""
+    from gwasdb_spark.operators.ann_graph import (
+        build_graph_sidecar,
+        sidecar_meta,
+    )
 
     def skew(occ: dict, cells: int) -> float:
         """max over the MEAN ACROSS ALL codebook cells (empty included):
@@ -490,43 +442,26 @@ def retrain_codebook_index(
             return 0.0
         return max(occ.values()) / (sum(occ.values()) / cells)
 
-    survivors = read_cell_index(spark, base).select("vec_id", "embedding")
-    if n_cells is None:
-        n_cells = book_cells
-
-    # Build the complete replacement layout aside; the live dirs stay
-    # servable (and remain the build's input — no checkpoint needed,
-    # nothing overwrites what the scan reads) until the commit point.
-    # The recovery above already reaped any earlier tmp tree.
-    tmp_base = _retrain_tmp(base)
-    stats = build_codebook_index(
-        survivors, tmp_base, n_cells=n_cells, seed=seed,
-        train_fraction=train_fraction,
-    )
-    # Engine-enforced sidecar coherence (r12 verdict #2): a retrain
-    # reassigns EVERY vector's cell, so a pre-existing graph sidecar is
-    # invalidated wholesale. Build its replacement from the tmp index
-    # BEFORE the commit marker — the sidecar swaps atomically with the
-    # other relations, and no crash window pairs new cells with old
-    # graphs.
-    from gwasdb_spark.operators.ann_graph import (
-        build_graph_sidecar,
-        sidecar_meta,
-    )
-
-    live_meta = sidecar_meta(base)
-    if live_meta is not None:
-        build_graph_sidecar(spark, tmp_base, R=int(live_meta.get("R", 8)))
-    with open(os.path.join(tmp_base, "_COMMITTED"), "w") as fh:
-        fh.write("retrain complete; swap may proceed\n")
-
-    # Swap by finishing the commit: recovery's "committed and tmp exists"
-    # branch renames each relation present in the tmp tree into place
-    # (graphs only when a sidecar was built) and reaps the tmp tree. The
-    # whole-dir rename means stale partition dirs from the old layout
-    # cannot survive, as emptied high-numbered cells would under an
-    # in-place overwrite.
-    recover_codebook_index(base)
+    with replacing(base) as stage:
+        occ_before = cell_occupancy(spark, base)
+        book_cells = max(1, len(load_codebook(spark, base)))
+        survivors = read_cell_index(spark, base).select("vec_id", "embedding")
+        if n_cells is None:
+            n_cells = book_cells
+        # The live dirs stay servable (and remain the build's input — no
+        # checkpoint needed, nothing overwrites what the scan reads)
+        # until the commit point.
+        stats = build_codebook_index(
+            survivors, stage, n_cells=n_cells, seed=seed,
+            train_fraction=train_fraction,
+        )
+        # Engine-enforced sidecar coherence (r12 verdict #2): a retrain
+        # reassigns EVERY vector's cell, so a pre-existing graph sidecar
+        # is invalidated wholesale. Its replacement is built from the
+        # staged index and swaps in with the other relations.
+        live_meta = sidecar_meta(base)
+        if live_meta is not None:
+            build_graph_sidecar(spark, stage, R=int(live_meta.get("R", 8)))
     occ_after = cell_occupancy(spark, base)
     return {
         "n_cells": stats["n_cells"],

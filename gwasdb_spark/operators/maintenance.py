@@ -4,18 +4,20 @@ Streaming appends (foreachBatch) and incremental loads accumulate files
 far smaller than a scan-efficient target; at 100 TB a table with 10^7
 kilobyte-files spends more time in scheduling + footer reads than in
 data. Compaction rewrites a parquet table to ~target-sized files,
-preserving hive partitioning, with the same write-then-swap pattern the
-gold build uses (Delta's OPTIMIZE is the transactional equivalent).
+preserving hive partitioning, through the same staged swap the gold
+build uses (acid/swap.py; Delta's OPTIMIZE is the transactional
+equivalent).
 """
 
 from __future__ import annotations
 
 import math
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gwasdb_spark.acid.swap import recover, replacing
 
 
 def _dir_bytes(path: str) -> int:
@@ -65,9 +67,14 @@ def compact_table(
     rows within files to restore min/max skipping after many unsorted
     appends. Returns {files_before, files_after, bytes}.
 
-    Atomicity caveat: plain-parquet swap is rename-based (same as
-    build_combined); concurrent readers mid-swap see the old OR new
-    listing. Delta/Iceberg make this a metadata commit."""
+    The rewrite is staged under the table's parent dir and swapped in
+    by acid/swap.py: a crash leaves the table wholly old or wholly new,
+    and the next swap under that parent finishes or discards it. Tables
+    that share a parent share its swap, so compact them one at a time.
+    A reader that listed the table before the swap must re-list it
+    after, as after any replaced parquet directory."""
+    parent, name = os.path.split(path.rstrip("/"))
+    recover(parent)
     part_cols = _partition_cols(path)
     df = spark.read.parquet(path)
     n_bytes = _dir_bytes(path)
@@ -101,15 +108,11 @@ def compact_table(
     if sort_within_by:
         out = out.sortWithinPartitions(*sort_within_by)
 
-    tmp = path.rstrip("/") + "__compact_tmp"
     writer = out.write.mode("overwrite")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
-    writer.parquet(tmp)
-    bak = path.rstrip("/") + "__compact_old"
-    os.rename(path, bak)
-    os.rename(tmp, path)
-    shutil.rmtree(bak)
+    with replacing(parent) as stage:
+        writer.parquet(os.path.join(stage, name))
 
     files_after = sum(
         1 for root, _d, fs in os.walk(path) for f in fs if f.endswith(".parquet")

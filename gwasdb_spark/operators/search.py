@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gwasdb_spark.acid.swap import recover, replacing
 from gwasdb_spark.session import run_concurrently
 
 K1 = 1.2
@@ -481,13 +482,15 @@ def update_text_index(
     retry-deduplicated — they also contribute no postings, so only the
     n_docs scalar could drift on a retry containing such docs.
 
-    Durability: the commit is NOT atomic — a crash between the
-    postings/doclen appends and the consts overwrite leaves stale
-    n_docs/avgdl (scores mildly off until the next successful update or
-    compaction, never missing/duplicate postings for previously
-    committed batches). An ACID table format (Delta/Iceberg — jar absent
-    in this container, see ROADMAP) is the real fix; the layout is shaped
-    so the swap is mechanical."""
+    Durability: the op first runs `recover(index_dir)` (acid/swap.py),
+    so a compaction that crashed mid-swap is finished before this batch
+    reads or appends anything — an append into a half-swapped index
+    would be lost when the swap completed. The commit itself is NOT
+    atomic: a crash between the postings/doclen appends and the consts
+    overwrite leaves stale n_docs/avgdl (scores mildly off until the
+    next successful update or delete), never missing or duplicate
+    postings for previously committed batches."""
+    recover(index_dir)
     spark = df_new.sparkSession
     existing = spark.read.parquet(f"{index_dir}/doclen").select(
         F.col("doc").alias(id_col)
@@ -574,10 +577,11 @@ def delete_from_text_index(
     and anti-joined against existing tombstones, so replaying a delete
     (at-least-once delivery) is a no-op — n_docs cannot double-shrink.
     Cost ∝ |batch| + one doc-grain aggregate; returns the number of
-    docs newly tombstoned. Durability caveat matches
-    update_text_index: the tombstone append and consts overwrite are
-    two commits (stale consts until the second lands; never missing or
-    duplicated tombstones)."""
+    docs newly tombstoned. Durability matches update_text_index: the
+    op recovers an interrupted compaction first, and the tombstone
+    append and consts overwrite are two commits (stale consts until the
+    second lands; never missing or duplicated tombstones)."""
+    recover(index_dir)
     spark = doc_ids.sparkSession
     ids = doc_ids.select(F.col(id_col).alias("doc")).distinct()
     existing = spark.read.parquet(f"{index_dir}/doclen").select("doc")
@@ -622,34 +626,6 @@ def delete_from_text_index(
     return n
 
 
-def recover_text_index(index_dir: str) -> None:
-    """Adopt a complete `<rel>.compact` left by a compact that crashed
-    between its two renames: if `<rel>` is missing but `<rel>.compact`
-    exists, the compact had fully written the replacement (the .compact
-    write commits before any rename), so renaming it in completes the
-    interrupted swap; a leftover `<rel>.old` beside a live `<rel>` is the
-    post-swap crash window and is just garbage to reap, and so is a
-    `<rel>.compact` beside a live `<rel>`: the compact died before its
-    first rename, so the live relation is still the committed one.
-    Idempotent and cheap (three stats per relation) — compact_text_index
-    runs it first."""
-    import os
-    import shutil
-
-    for rel in ("postings", "doclen"):
-        live, old, tmp = (
-            f"{index_dir}/{rel}",
-            f"{index_dir}/{rel}.old",
-            f"{index_dir}/{rel}.compact",
-        )
-        if not os.path.exists(live) and os.path.exists(tmp):
-            os.rename(tmp, live)
-        if os.path.exists(live):
-            for stray in (old, tmp):
-                if os.path.exists(stray):
-                    shutil.rmtree(stray)
-
-
 def compact_text_index(spark, index_dir: str) -> None:
     """Fold accumulated tombstones into the physical layout: rewrite
     postings and doclen without the tombstoned docs (term sort order
@@ -659,16 +635,15 @@ def compact_text_index(spark, index_dir: str) -> None:
     of the LSM policy — run it when the tombstone set grows past the
     broadcast budget; a delete-free index is a no-op.
 
-    Crash safety: the swap is rename-aside (write `<rel>.compact` →
-    rename `<rel>` to `<rel>.old` → rename `.compact` in → reap `.old`)
-    so the live relation is never deleted before its replacement is
-    fully on disk; any crash window leaves a state `recover_text_index`
-    repairs from the leftovers (ADVICE r10 — the previous rmtree-then-
-    rename ordering could strand the index with no postings at all)."""
-    import os
+    Crash safety: postings and doclen are rebuilt into one staged swap
+    (acid/swap.py `replacing`), so a crash at any point leaves both
+    relations wholly old or wholly new, and the next writer's recovery
+    finishes or discards the swap. The tombstone segment is dropped only
+    after the swap; a crash in between leaves tombstones for docs the
+    relations no longer hold, which the next compact folds again as a
+    no-op."""
     import shutil
 
-    recover_text_index(index_dir)
     tomb = _read_tombstones(spark, index_dir)
     if tomb is None:
         return
@@ -677,11 +652,9 @@ def compact_text_index(spark, index_dir: str) -> None:
     tomb = tomb.localCheckpoint(eager=True)
 
     # The postings and doclen rewrites are independent (own source,
-    # own tmp dir) — run both concurrently (guide §2.6) so the doclen
-    # job back-fills the postings job's tail; the crash-safe rename
-    # swaps stay sequential per relation AFTER both writes commit (same
-    # recover_text_index state machine).
-    def rewrite(rel, order):
+    # own staged dir) — run both concurrently (guide §2.6) so the doclen
+    # job back-fills the postings job's tail.
+    def rewrite(stage, rel, order):
         live = spark.read.parquet(f"{index_dir}/{rel}").join(
             F.broadcast(tomb), "doc", "left_anti"
         )
@@ -689,13 +662,11 @@ def compact_text_index(spark, index_dir: str) -> None:
             live = live.repartitionByRange(8, order).sortWithinPartitions(
                 order
             )
-        live.write.mode("overwrite").parquet(f"{index_dir}/{rel}.compact")
+        live.write.mode("overwrite").parquet(f"{stage}/{rel}")
 
-    run_concurrently(
-        lambda: rewrite("postings", "term"), lambda: rewrite("doclen", None)
-    )
-    for rel in ("postings", "doclen"):
-        os.rename(f"{index_dir}/{rel}", f"{index_dir}/{rel}.old")
-        os.rename(f"{index_dir}/{rel}.compact", f"{index_dir}/{rel}")
-        shutil.rmtree(f"{index_dir}/{rel}.old")
+    with replacing(index_dir) as stage:
+        run_concurrently(
+            lambda: rewrite(stage, "postings", "term"),
+            lambda: rewrite(stage, "doclen", None),
+        )
     shutil.rmtree(f"{index_dir}/tombstones")

@@ -12,9 +12,10 @@
 3. x04 bucket cap: _bucket_pairs(max_bucket_docs=None) must emit pairs
    from a bucket LARGER than the former 10k default cap — the
    adjudicated query enumerates everything the oracle enumerates.
-4. compact_text_index crash safety: a crash between the rename-aside
-   steps leaves a state recover_text_index repairs; the old
-   rmtree-then-rename ordering lost the relation outright.
+4. compact_text_index crash safety: a crash between a relation's
+   set-aside and the rename-in of its replacement leaves a state the
+   swap's recovery finishes; the old rmtree-then-rename ordering lost
+   the relation outright.
 5. g21/x169/g22 moment sums: the regression moments accumulate in
    decimal(38,0) so int64 overflow is structurally impossible where the
    DuckDB oracle would carry HUGEINT.
@@ -144,15 +145,14 @@ def _mk_index(spark, tmp_path):
     return idx
 
 
-def test_compact_recovers_from_mid_swap_crash(spark, tmp_path):
-    import shutil
-
+def test_compact_recovers_from_mid_swap_crash(spark, tmp_path, monkeypatch):
+    from gwasdb_spark.acid.swap import recover
     from gwasdb_spark.operators.search import (
         bm25_topk_indexed,
         compact_text_index,
         delete_from_text_index,
-        recover_text_index,
     )
+    from tests.crash import InjectedCrash, kill_rename
 
     idx = _mk_index(spark, tmp_path)
     before = {
@@ -160,32 +160,25 @@ def test_compact_recovers_from_mid_swap_crash(spark, tmp_path):
         for r in bm25_topk_indexed(spark, idx, ["beta"], k=10).collect()
     }
     assert before == {1, 2}
-    # Simulate the worst crash window of the OLD ordering: the compact
-    # replacement fully written, live relation renamed aside, process
-    # dies before the rename-in. Under the old rmtree-then-rename code
-    # this state had NO postings relation and no recovery path.
     delete_from_text_index(
         spark.createDataFrame([(3,)], "doc_id long"), idx, id_col="doc_id"
     )
-    live = spark.read.parquet(f"{idx}/doclen")
-    tomb = spark.read.parquet(f"{idx}/tombstones").select("doc")
-    live.join(tomb, "doc", "left_anti").write.mode("overwrite").parquet(
-        f"{idx}/doclen.compact"
-    )
-    os.rename(f"{idx}/doclen", f"{idx}/doclen.old")
-    # crash here — then recovery adopts the complete .compact
-    recover_text_index(idx)
-    assert os.path.isdir(f"{idx}/doclen")
-    assert not os.path.exists(f"{idx}/doclen.old")
-    assert not os.path.exists(f"{idx}/doclen.compact")
+    # The worst window of a rename swap: the live relation is set aside,
+    # its complete replacement not yet renamed in. Under the old
+    # rmtree-then-rename code this state had NO relation and no recovery.
+    kill_rename(monkeypatch, dst=f"{idx}/doclen")
+    with pytest.raises(InjectedCrash):
+        compact_text_index(spark, idx)
+    assert not os.path.exists(f"{idx}/doclen")
+    recover(idx)
+    assert not os.path.exists(f"{idx}/_swap.tmp")
     docs_left = {
         r["doc"] for r in spark.read.parquet(f"{idx}/doclen").collect()
     }
     assert docs_left == {1, 2}
-    # and a post-swap crash (leftover .old beside a live relation) reaps
-    shutil.copytree(f"{idx}/doclen", f"{idx}/doclen.old")
-    compact_text_index(spark, idx)  # runs recovery first, then no-ops
-    assert not os.path.exists(f"{idx}/doclen.old")
+    # the tombstones outlived the kill; the next compact folds them again
+    compact_text_index(spark, idx)
+    assert not os.path.exists(f"{idx}/tombstones")
     after = {
         r["doc_id"]
         for r in bm25_topk_indexed(spark, idx, ["beta"], k=10).collect()

@@ -1,11 +1,11 @@
 """Regression fixtures for the round-11 ADVICE items:
 
-1. retrain_codebook_index crash safety: the replacement layout is built
-   aside and swapped in via rename-aside with a commit marker, so the
-   live index is never deleted before its replacement is fully on disk.
-   recover_codebook_index adopts a committed tmp tree and reaps an
-   uncommitted one — the old rmtree-before-build ordering lost the
-   persisted index outright on any failure during retrain.
+1. retrain_codebook_index crash safety: the replacement layout is
+   staged aside and swapped in behind a commit marker (acid/swap.py),
+   so the live index is never deleted before its replacement is fully
+   on disk. Recovery finishes a committed swap and reaps an uncommitted
+   one — the old rmtree-before-build ordering lost the persisted index
+   outright on any failure during retrain.
 2. rename_column back-rename: rename(a->b) then rename(b->a) must land
    back on the physical name (map entry dropped), not trip the
    physical-collision guard on the column's OWN physical.
@@ -37,61 +37,57 @@ def _vec_df(spark, n=60, dim=8, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-def test_retrain_builds_aside_and_survives_recover(spark, tmp_path):
+def test_retrain_builds_aside_and_survives_recover(spark, tmp_path, monkeypatch):
+    from gwasdb_spark.acid import swap
     from gwasdb_spark.operators.ann_index import (
-        build_codebook_index,
-        read_cell_index,
-        recover_codebook_index,
-        retrain_codebook_index,
-    )
-
-    base = os.path.join(str(tmp_path), "cb")
-    vecs = _vec_df(spark)
-    build_codebook_index(vecs, base, n_cells=4, seed=1)
-    retrain_codebook_index(spark, base, n_cells=4, seed=2)
-    # no tmp/.old litter after a clean retrain
-    assert not os.path.exists(os.path.join(base, "_retrain.tmp"))
-    for rel in ("index", "manifest", "codebook"):
-        assert os.path.isdir(os.path.join(base, rel))
-        assert not os.path.exists(os.path.join(base, rel + ".old"))
-    assert read_cell_index(spark, base).count() == 60
-
-    # crash BEFORE commit: an uncommitted tmp tree must be reaped and
-    # the live index left untouched
-    tmp = os.path.join(base, "_retrain.tmp")
-    os.makedirs(os.path.join(tmp, "index"))
-    recover_codebook_index(base)
-    assert not os.path.exists(tmp)
-    assert read_cell_index(spark, base).count() == 60
-
-
-def test_recover_adopts_committed_tmp_and_reaps_old(spark, tmp_path):
-    import shutil
-
-    from gwasdb_spark.operators.ann_index import (
-        build_codebook_index,
         load_codebook,
         read_cell_index,
-        recover_codebook_index,
+        retrain_codebook_index,
+    )
+    from tests.crash import InjectedCrash, kill, untrained_codebook_index
+
+    base = os.path.join(str(tmp_path), "cb")
+    untrained_codebook_index(_vec_df(spark), base, n_cells=4)
+    # killed BEFORE the commit marker: the whole replacement is staged,
+    # the live index untouched — recovery reaps the stage
+    monkeypatch.setattr(swap, "_link_durably", kill)
+    with pytest.raises(InjectedCrash):
+        retrain_codebook_index(spark, base, n_cells=3, seed=2)
+    monkeypatch.undo()
+    for rel in ("index", "manifest", "codebook"):
+        assert os.path.isdir(os.path.join(base, "_swap.tmp", "new", rel))
+    swap.recover(base)
+    assert not os.path.exists(os.path.join(base, "_swap.tmp"))
+    assert read_cell_index(spark, base).count() == 60
+    assert len(load_codebook(spark, base)) == 4
+
+
+def test_recover_adopts_committed_tmp_and_reaps_old(spark, tmp_path, monkeypatch):
+    import shutil
+
+    from gwasdb_spark.acid import swap
+    from gwasdb_spark.operators.ann_index import load_codebook, read_cell_index
+    from tests.crash import (
+        InjectedCrash,
+        kill_rename,
+        untrained_codebook_index,
     )
 
     base = os.path.join(str(tmp_path), "cb2")
-    build_codebook_index(_vec_df(spark), base, n_cells=4, seed=1)
+    untrained_codebook_index(_vec_df(spark), base, n_cells=4)
 
-    # Simulate a crash mid-swap: full replacement committed in tmp,
-    # live `index` already renamed aside, process died before renaming
-    # the tmp relation in.
-    tmp = os.path.join(base, "_retrain.tmp")
-    for rel in ("index", "manifest", "codebook"):
-        shutil.copytree(os.path.join(base, rel), os.path.join(tmp, rel))
-    with open(os.path.join(tmp, "_COMMITTED"), "w") as fh:
-        fh.write("x\n")
-    os.rename(os.path.join(base, "index"), os.path.join(base, "index.old"))
+    # Killed mid-swap: full replacement committed, live `index` already
+    # set aside, the staged index not yet renamed in.
+    kill_rename(monkeypatch, dst=os.path.join(base, "index"))
+    with pytest.raises(InjectedCrash):
+        with swap.replacing(base) as stage:
+            for rel in ("index", "manifest", "codebook"):
+                shutil.copytree(os.path.join(base, rel), os.path.join(stage, rel))
+    assert not os.path.exists(os.path.join(base, "index"))
 
-    recover_codebook_index(base)
+    swap.recover(base)
     assert os.path.isdir(os.path.join(base, "index"))
-    assert not os.path.exists(os.path.join(base, "index.old"))
-    assert not os.path.exists(tmp)
+    assert not os.path.exists(os.path.join(base, "_swap.tmp"))
     assert read_cell_index(spark, base).count() == 60
     assert len(load_codebook(spark, base)) == 4
 

@@ -1,12 +1,11 @@
 """Regression fixtures for the round-12 ADVICE items:
 
-1. recover_codebook_index must FINISH a committed swap for every
-   relation whose tmp subdir still exists — including relations whose
-   live dir is intact because the crash hit BETWEEN per-relation swaps
-   (index already swapped in, manifest/codebook not yet). The old
-   condition ("committed and live missing") would reap the committed
-   tmp and permanently pair the NEW index with the OLD
-   manifest/codebook — serve-path cell routing silently wrong.
+1. Recovery must FINISH a committed swap for every relation still
+   staged — including relations whose live dir is intact because the
+   crash hit BETWEEN per-relation swaps (index already swapped in,
+   manifest not yet). Adopting only where the live dir is missing would
+   reap the committed stage and permanently pair the NEW index with the
+   OLD manifest — serve-path cell routing silently wrong.
 2. x176's stage tag must carry the corpus fingerprint (like x173/c05/
    x171): a corpus regenerated at the same sf_dir must not reuse the
    stale persisted index + graph sidecar. The convention now lives in
@@ -21,8 +20,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
-import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -37,42 +36,38 @@ def _vec_df(spark, n=60, dim=8, seed=7):
 
 
 # ---------------------------------------------------------------- 1 ----
-def test_recover_finishes_cross_relation_committed_swap(spark, tmp_path):
-    """Crash window: retrain committed, `index` swap fully completed
-    (live index is the NEW one), `manifest`/`codebook` still pending in
-    tmp. recover must adopt the pending relations — not skip them
-    because their live dirs exist, then reap the only copy."""
-    from gwasdb_spark.operators.ann_index import (
-        build_codebook_index,
-        load_codebook,
-        read_cell_index,
-        recover_codebook_index,
+def test_recover_finishes_cross_relation_committed_swap(
+    spark, tmp_path, monkeypatch
+):
+    """Crash window: swap committed, `codebook` and `index` swapped in
+    (the live index is the NEW one), `manifest` still staged. recover
+    must adopt the pending relation — not skip it because its live dir
+    exists, then reap the only copy."""
+    from gwasdb_spark.acid import swap
+    from gwasdb_spark.operators.ann_index import load_codebook, read_cell_index
+    from tests.crash import (
+        InjectedCrash,
+        kill_rename,
+        untrained_codebook_index,
     )
 
     base = os.path.join(str(tmp_path), "cbx")
     # OLD layout: 4 cells over 60 vectors
-    build_codebook_index(_vec_df(spark, n=60, seed=1), base, n_cells=4,
-                         seed=1)
-    # NEW layout staged in tmp: 3 cells over 40 vectors (distinguishable
-    # from the old one by both codebook size and row count)
-    tmp = os.path.join(base, "_retrain.tmp")
-    build_codebook_index(_vec_df(spark, n=40, seed=2), tmp, n_cells=3,
-                         seed=2)
-    with open(os.path.join(tmp, "_COMMITTED"), "w") as fh:
-        fh.write("x\n")
-    # Simulate the index swap having COMPLETED (live=new, old reaped,
-    # tmp/index gone) while manifest/codebook never swapped.
-    dead = os.path.join(base, "index.dead")
-    os.rename(os.path.join(base, "index"), dead)
-    os.rename(os.path.join(tmp, "index"), os.path.join(base, "index"))
-    shutil.rmtree(dead)
+    untrained_codebook_index(_vec_df(spark, n=60, seed=1), base, n_cells=4)
+    # NEW layout: 3 cells over 40 vectors (distinguishable from the old
+    # one by both codebook size and row count), killed as the live
+    # manifest is set aside
+    kill_rename(monkeypatch, src=os.path.join(base, "manifest"))
+    with pytest.raises(InjectedCrash):
+        with swap.replacing(base) as stage:
+            untrained_codebook_index(
+                _vec_df(spark, n=40, seed=2), stage, n_cells=3
+            )
+    assert len(load_codebook(spark, base)) == 3
 
-    recover_codebook_index(base)
+    swap.recover(base)
 
-    assert not os.path.exists(tmp)
-    for rel in ("index", "manifest", "codebook"):
-        assert os.path.isdir(os.path.join(base, rel))
-        assert not os.path.exists(os.path.join(base, rel + ".old"))
+    assert not os.path.exists(os.path.join(base, "_swap.tmp"))
     # ALL relations are the new layout — index/manifest/codebook agree
     assert len(load_codebook(spark, base)) == 3
     idx = read_cell_index(spark, base)
@@ -89,27 +84,33 @@ def test_recover_finishes_cross_relation_committed_swap(spark, tmp_path):
     assert diff == 0
 
 
-def test_recover_restores_half_renamed_relation(tmp_path):
-    """Crash between rename(live, old) and rename(tmp, live) with the
-    committed tmp relation already adopted by a PREVIOUS recover pass
-    that then died: an `.old` with no live and no tmp is restored, not
-    stranded."""
-    from gwasdb_spark.operators.ann_index import recover_codebook_index
+def test_recover_restores_half_renamed_relation(tmp_path, monkeypatch):
+    """Killed between setting a live relation aside and renaming its
+    staged replacement in: the relation is missing from the base, but it
+    is never stranded — recovery renames the replacement in, and the
+    set-aside copy leaves with the staging dir."""
+    from gwasdb_spark.acid import swap
+    from tests.crash import InjectedCrash, kill_rename
 
     base = os.path.join(str(tmp_path), "cbr")
-    for rel in ("index", "manifest", "codebook"):
+    rels = ("index", "manifest", "codebook")
+    for rel in rels:
         os.makedirs(os.path.join(base, rel))
         with open(os.path.join(base, rel, "marker"), "w") as fh:
             fh.write(rel)
-    # half-renamed: codebook moved aside, nothing replaced it
-    os.rename(
-        os.path.join(base, "codebook"), os.path.join(base, "codebook.old")
-    )
-    recover_codebook_index(base)
-    assert os.path.isdir(os.path.join(base, "codebook"))
-    assert not os.path.exists(os.path.join(base, "codebook.old"))
-    with open(os.path.join(base, "codebook", "marker")) as fh:
-        assert fh.read() == "codebook"
+    kill_rename(monkeypatch, dst=os.path.join(base, "codebook"))
+    with pytest.raises(InjectedCrash):
+        with swap.replacing(base) as stage:
+            for rel in rels:
+                os.makedirs(os.path.join(stage, rel))
+                with open(os.path.join(stage, rel, "marker"), "w") as fh:
+                    fh.write(rel + " v2")
+    assert not os.path.exists(os.path.join(base, "codebook"))
+    swap.recover(base)
+    assert sorted(os.listdir(base)) == sorted(rels)
+    for rel in rels:
+        with open(os.path.join(base, rel, "marker")) as fh:
+            assert fh.read() == rel + " v2"
 
 
 # ---------------------------------------------------------------- 2 ----

@@ -330,9 +330,9 @@ def test_retrain_swaps_graph_sidecar_atomically(spark, tmp_path):
     retrain_codebook_index(spark, base, n_cells=4, seed=2)
     assert os.path.isdir(os.path.join(base, "graphs"))
     assert sidecar_meta(base) == {"R": 3}
-    assert not os.path.exists(os.path.join(base, "_retrain.tmp"))
-    for rel in ("index", "manifest", "codebook", "graphs"):
-        assert not os.path.exists(os.path.join(base, rel + ".old"))
+    assert sorted(os.listdir(base)) == [
+        "codebook", "graphs", "index", "manifest",
+    ]
 
     # served graphs == graphs rebuilt from scratch over the final index
     probes = spark.createDataFrame(

@@ -393,3 +393,46 @@ def test_upsert_of_nondeterministic_batch_reports_written_rows(spark, tmp_path):
     assert sorted(
         (r["vec_id"], r["cell"]) for r in manifest.filter("vec_id >= 180").collect()
     ) == sorted((r["vec_id"], r["cell"]) for r in written)
+
+
+def test_delete_after_killed_retrain_keeps_index_and_manifest_agreeing(
+    spark, tmp_path, monkeypatch
+):
+    """A retrain killed after its commit marker, with `index` swapped in
+    and `manifest` not, then a delete: the delete first finishes the
+    swap, so index, manifest and codebook all describe the retrained
+    layout minus the deleted ids. Without the writer's recovery the
+    delete probed the old manifest's cells of the new index, and the
+    next recovery adopted a manifest listing 60 vectors beside an index
+    serving 50."""
+    from gwasdb_spark.operators.ann_index import (
+        delete_from_cell_index,
+        load_codebook,
+        retrain_codebook_index,
+    )
+    from tests.crash import (
+        InjectedCrash,
+        kill_rename,
+        untrained_codebook_index,
+    )
+
+    base = str(tmp_path / "cbk")
+    untrained_codebook_index(_corpus(spark, n=60), base, n_cells=4)
+    kill_rename(monkeypatch, src=os.path.join(base, "manifest"))
+    with pytest.raises(InjectedCrash):
+        retrain_codebook_index(spark, base, n_cells=6, seed=2)
+
+    delete_from_cell_index(
+        spark, base, spark.range(10).select(F.col("id").alias("vec_id"))
+    )
+    served = sorted(
+        tuple(r) for r in read_cell_index(spark, base)
+        .select("vec_id", "cell").collect()
+    )
+    listed = sorted(
+        tuple(r) for r in spark.read.parquet(os.path.join(base, "manifest"))
+        .select("vec_id", "cell").collect()
+    )
+    assert served == listed
+    assert [v for v, _ in served] == list(range(10, 60))
+    assert len(load_codebook(spark, base)) == 6

@@ -246,41 +246,76 @@ def test_update_after_delete_scores_live_docs_only(spark, tmp_path):
     assert got == want and len(want) == 6
 
 
-def test_recover_reaps_stray_compact_beside_live(spark, tmp_path):
-    """A pooled compact that dies after writing both `<rel>.compact`
-    dirs but before any rename leaves them beside the live relations;
-    recovery reaps both (the live relations are still the committed
-    ones), serving is unchanged, and the next compact completes."""
+def test_recover_reaps_stray_compact_beside_live(spark, tmp_path, monkeypatch):
+    """A pooled compact killed after staging both replacements but before
+    its commit marker leaves them in the staging dir beside the live
+    relations; recovery reaps the stage (the live relations are still the
+    committed ones), serving is unchanged, and the next compact
+    completes."""
     import os
 
+    from gwasdb_spark.acid import swap
     from gwasdb_spark.operators.search import (
         bm25_topk_indexed,
         build_text_index,
         compact_text_index,
         delete_from_text_index,
-        recover_text_index,
     )
+    from tests.crash import InjectedCrash, kill
 
     df = spark.createDataFrame(_CHURN_DOCS, "doc_id long, text string")
     idx = str(tmp_path / "idx")
     build_text_index(df, idx)
     delete_from_text_index(df.filter("doc_id = 3"), idx)
     before = bm25_topk_indexed(spark, idx, ["hash", "join"], k=8).collect()
-    # the crash state: both replacements written, nothing renamed; the
-    # stray doclen copy is deliberately wrong so adoption would show
-    tomb = spark.read.parquet(f"{idx}/tombstones").select("doc")
-    spark.read.parquet(f"{idx}/postings").join(tomb, "doc", "left_anti").write.parquet(
-        f"{idx}/postings.compact"
-    )
-    spark.read.parquet(f"{idx}/doclen").limit(1).write.parquet(f"{idx}/doclen.compact")
-
-    recover_text_index(idx)
+    monkeypatch.setattr(swap, "_link_durably", kill)
+    with pytest.raises(InjectedCrash):
+        compact_text_index(spark, idx)
+    monkeypatch.undo()
     for rel in ("postings", "doclen"):
-        assert os.path.isdir(f"{idx}/{rel}")
-        assert not os.path.exists(f"{idx}/{rel}.compact")
+        assert os.path.isdir(f"{idx}/_swap.tmp/new/{rel}")
+
+    swap.recover(idx)
+    assert not os.path.exists(f"{idx}/_swap.tmp")
     assert bm25_topk_indexed(spark, idx, ["hash", "join"], k=8).collect() == before
-    recover_text_index(idx)  # idempotent on a clean index
+    swap.recover(idx)  # idempotent on a clean index
 
     compact_text_index(spark, idx)
     assert not os.path.exists(f"{idx}/tombstones")
     assert bm25_topk_indexed(spark, idx, ["hash", "join"], k=8).collect() == before
+
+
+def test_update_after_killed_compact_keeps_base_postings(
+    spark, tmp_path, monkeypatch
+):
+    """A compact killed between setting `postings` aside and renaming its
+    replacement in, then an update: the update finishes the swap before
+    it appends, so the batch lands beside the compacted base postings.
+    Without the writer's recovery the batch created a fresh `postings`
+    dir, the next compact's recovery kept it as live and reaped the
+    staged replacement, and every base posting was lost."""
+    from gwasdb_spark.operators.search import (
+        bm25_topk_indexed,
+        build_text_index,
+        compact_text_index,
+        delete_from_text_index,
+        update_text_index,
+    )
+    from tests.crash import InjectedCrash, kill_rename
+
+    words = ["one", "two", "three", "four", "five"]
+    docs = spark.createDataFrame(
+        [(i, f"alpha {w}") for i, w in enumerate(words, 1)],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "idx")
+    build_text_index(docs.filter("doc_id <= 4"), idx)
+    delete_from_text_index(docs.filter("doc_id = 3"), idx)
+    kill_rename(monkeypatch, dst=f"{idx}/postings")
+    with pytest.raises(InjectedCrash):
+        compact_text_index(spark, idx)
+
+    update_text_index(docs.filter("doc_id = 5"), idx)
+    compact_text_index(spark, idx)
+    served = bm25_topk_indexed(spark, idx, words, k=10).collect()
+    assert sorted(r["doc_id"] for r in served) == [1, 2, 4, 5]
