@@ -17,12 +17,13 @@ gap Delta's bloom-filter indexes cover), so:
   default of 1 MiB per file, and turn dictionary encoding off for the
   bloom columns (a fully dictionary-encoded chunk gets no filter).
 - Probe: `group_admits` answers on the driver in pure Python by
-  seeking into each file: the 8-byte tail, the thrift-compact footer
-  (only each column chunk's type, path and bloom offset/length are
-  used), then the bloom header and bitset. A value is tested with
-  XXH64 (seed 0) of its PLAIN encoding — UTF-8 bytes for strings,
-  4-byte LE for INT32, 8-byte LE for INT64 — against the split-block
-  layout (parquet-format BloomFilter.md). About 0.2 ms per file and a
+  seeking into each file: the footer, read by `acid/footer.py` (the
+  same read that gives a commit its min/max stats; here only each
+  column chunk's type, path and bloom offset/length are used), then
+  the bloom header and bitset. A value is tested with XXH64 (seed 0)
+  of its PLAIN encoding — UTF-8 bytes for strings, 4-byte LE for
+  INT32, 8-byte LE for INT64 — against the split-block layout
+  (parquet-format BloomFilter.md). About 0.2 ms per file and a
   few µs per probe; a JVM round trip per file would cost 12-16 ms.
 
 Soundness mirrors `predicates.Pred.may_match`: the probe may only say
@@ -38,15 +39,21 @@ required lookup at once (the conjunct a matching row must satisfy).
 
 from __future__ import annotations
 
-import os
 import struct
 
 from pyspark.sql.types import StructType
 
+from gwasdb_spark.acid.footer import (
+    BYTE_ARRAY,
+    INT32,
+    INT64,
+    _value,
+    data_files,
+    read_footer,
+)
+
 # Spark types parquet stores as INT32 / INT64 / BYTE_ARRAY — bloom-eligible
 _BLOOM_TYPES = ("byte", "short", "integer", "long", "string")
-
-_INT32, _INT64, _BYTE_ARRAY = 1, 2, 6
 
 
 def write_options(schema: StructType, bloom_cols) -> dict:
@@ -146,91 +153,25 @@ def plain_bytes(ptype: int, value) -> bytes | None:
     """PLAIN encoding of `value` for physical type `ptype`, or None when
     the literal is not of the column's own family (or out of its range):
     such a probe cannot be answered and admits."""
-    if ptype in (_INT32, _INT64):
+    if ptype in (INT32, INT64):
         if not isinstance(value, int) or isinstance(value, bool):
             return None
-        fmt, bits = ("<i", 32) if ptype == _INT32 else ("<q", 64)
+        fmt, bits = ("<i", 32) if ptype == INT32 else ("<q", 64)
         if not -(1 << (bits - 1)) <= value < 1 << (bits - 1):
             return None
         return struct.pack(fmt, value)
-    if ptype == _BYTE_ARRAY and isinstance(value, str):
+    if ptype == BYTE_ARRAY and isinstance(value, str):
         return value.encode("utf-8")
     return None
-
-
-# ---------------------------------------------------- thrift compact --
-def _varint(buf: bytes, i: int) -> tuple[int, int]:
-    out = shift = 0
-    while True:
-        b = buf[i]
-        i += 1
-        out |= (b & 0x7F) << shift
-        if b < 0x80:
-            return out, i
-        shift += 7
-
-
-def _zigzag(buf: bytes, i: int) -> tuple[int, int]:
-    u, i = _varint(buf, i)
-    return (u >> 1) ^ -(u & 1), i
-
-
-def _value(buf: bytes, i: int, t: int):
-    """One thrift-compact value of wire type `t` at `i` → (value, end).
-    Structs decode to {field id: value}, lists/sets to lists; the
-    parquet footer has no maps."""
-    if t in (1, 2):  # bool folded into a field header
-        return t == 1, i
-    if t == 3:
-        return buf[i], i + 1
-    if t in (4, 5, 6):
-        return _zigzag(buf, i)
-    if t == 7:
-        return buf[i:i + 8], i + 8
-    if t == 8:
-        n, i = _varint(buf, i)
-        return buf[i:i + n], i + n
-    if t in (9, 10):
-        head = buf[i]
-        i += 1
-        n, et = head >> 4, head & 0x0F
-        if n == 15:
-            n, i = _varint(buf, i)
-        out = []
-        for _ in range(n):
-            if et in (1, 2):  # list bools are one byte each
-                v, i = buf[i] == 1, i + 1
-            else:
-                v, i = _value(buf, i, et)
-            out.append(v)
-        return out, i
-    if t == 12:
-        out, fid = {}, 0
-        while True:
-            head = buf[i]
-            i += 1
-            if head == 0:
-                return out, i
-            delta, ft = head >> 4, head & 0x0F
-            if delta:
-                fid += delta
-            else:
-                fid, i = _zigzag(buf, i)
-            out[fid], i = _value(buf, i, ft)
-    raise ValueError(f"unknown thrift compact type {t}")
 
 
 # -------------------------------------------------------------- probe --
 def _file_admits(path: str, lookups: list[tuple[str, tuple]]) -> bool:
     """Does some row group of one parquet file admit every lookup?"""
     with open(path, "rb") as fh:
-        fh.seek(-8, os.SEEK_END)
-        tail = fh.read(8)
-        if tail[4:] != b"PAR1":
+        footer = read_footer(fh)
+        if footer is None:
             return True  # encrypted or foreign footer: cannot tell
-        (flen,) = struct.unpack("<I", tail[:4])
-        fh.seek(-8 - flen, os.SEEK_END)
-        footer, _ = _value(fh.read(flen), 0, 12)
 
         def chunk_admits(meta: dict, values: tuple) -> bool:
             off, length = meta.get(14), meta.get(15)
@@ -276,11 +217,7 @@ def group_admits(group_dir: str, lookups: list[tuple[str, tuple]]) -> bool:
     satisfy every (col, candidate values) lookup. Any unreadable file
     or group, or an unencodable string, admits (read it)."""
     try:
-        files = [
-            os.path.join(group_dir, f)
-            for f in os.listdir(group_dir)
-            if f.endswith(".parquet") and f[0] not in "._"
-        ]
+        files = data_files(group_dir)
         return not files or any(_file_admits(p, lookups) for p in files)
     except (OSError, ValueError, IndexError, struct.error):
         return True

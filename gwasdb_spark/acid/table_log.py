@@ -20,11 +20,14 @@ add/remove deltas (and checkpoint compaction) changes nothing below,
 and is the 100 TB metadata path.
 
 File skipping (round 10): every written group records per-column
-min/max/null stats in the manifest (the Delta data-skipping / parquet
-footer design). DML with a sargable `acid.predicates.Pred` reads ONLY
-the groups whose stats admit a match — untouched groups are carried
-into the new manifest verbatim, their files never opened, never
-rewritten (mtime-stable, gated in scripts/stress_scale.py). At 100 TB
+min/max/null stats in the manifest (the Delta data-skipping design).
+They are read from the footers parquet wrote into the group's own
+files (acid/footer.py), on the driver, after the write job: recording
+them costs no aggregate over the rows and no extra Spark job. DML
+with a sargable `acid.predicates.Pred` reads ONLY the groups whose
+stats admit a match — untouched groups are carried into the new
+manifest verbatim, their files never opened, never rewritten
+(mtime-stable, gated in scripts/stress_scale.py). At 100 TB
 this is the difference between a 1-row UPDATE costing one file group
 and costing a full table rewrite. Every DML op runs this one group
 rewrite: a plain Column predicate is not statically analyzable, so it
@@ -93,6 +96,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gwasdb_spark.acid import bloom as _bloom
+from gwasdb_spark.acid import footer as _footer
 from gwasdb_spark.acid.predicates import Pred, required_point_lookups
 
 
@@ -116,40 +120,13 @@ class SchemaMismatch(Exception):
 # and for MultiTableTxn.commit_appends
 _RETRIES = 3
 
-# dtypes whose min/max are meaningful and orderable (decimal too)
-_STAT_TYPE_NAMES = (
-    "byte", "short", "integer", "long", "float", "double",
-    "string", "boolean", "date", "timestamp", "timestamp_ntz",
-)
-
-
-def _json_safe(v):
-    import datetime as _dt
-    import decimal as _dec
-
-    if isinstance(v, _dec.Decimal):
-        return float(v)
-    if isinstance(v, _dt.datetime):
-        return v.isoformat(sep=" ")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return v
-
-
 def _stats_aggs(schema) -> tuple[list[str], list]:
-    """The one stats aggregate: (stat columns, aggregates) giving the
-    row count and each orderable column's min, max and non-null count —
-    the triple parquet footers carry. A bucketed write's `__bucket`
-    column is layout, not data, and gets no stats."""
-    cols = [
-        f.name
-        for f in schema.fields
-        if f.name != "__bucket"
-        and (
-            f.dataType.typeName() in _STAT_TYPE_NAMES
-            or f.dataType.typeName().startswith("decimal")
-        )
-    ]
+    """The re-read stats aggregate behind `AcidTable._group_stats`:
+    (stat columns, aggregates) giving the row count and each orderable
+    column's min, max and non-null count. Commits take the same triple
+    from the footers their write job produced (acid/footer.py); this is
+    the reference it must equal."""
+    cols = [f.name for f in schema.fields if _footer.is_stat_type(f.dataType)]
     aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in cols:
         aggs += [
@@ -166,8 +143,8 @@ def _stats_of(row, cols: list[str]) -> dict:
     rows = int(row["__rows"] or 0)
     return {
         c: [
-            _json_safe(row[f"__min_{c}"]),
-            _json_safe(row[f"__max_{c}"]),
+            _footer.json_safe(row[f"__min_{c}"]),
+            _footer.json_safe(row[f"__max_{c}"]),
             rows - int(row[f"__cnt_{c}"] or 0),
             rows,
         ]
@@ -205,23 +182,6 @@ def _quantile_bucket(value: Column, bounds) -> Column:
     for i, b in enumerate(sorted(set(bounds))):
         bucket = F.when(value > F.lit(b), i + 1).otherwise(bucket)
     return bucket
-
-
-def _read_mapped(spark: SparkSession, schema, column_map: dict, *paths):
-    """Read parquet `paths` under the LOGICAL `schema`. With a
-    `column_map` ({logical: physical}) the files carry physical names:
-    request those, and alias them back in one zero-cost Project."""
-    if not column_map:
-        return spark.read.schema(schema).parquet(*paths)
-    from pyspark.sql.types import StructField, StructType
-
-    fields = [(column_map.get(f.name, f.name), f) for f in schema.fields]
-    physical = StructType(
-        [StructField(p, f.dataType, f.nullable) for p, f in fields]
-    )
-    return spark.read.schema(physical).parquet(*paths).select(
-        *[F.col(p).alias(f.name) for p, f in fields]
-    )
 
 
 def _txn_marker_path(txn: dict) -> str:
@@ -289,10 +249,15 @@ class AcidTable:
         the log rather than leaving reorderable holes. The extra cost
         is one tiny json read per txn-tagged tip manifest; at real
         metadata scale a log checkpoint carries the visibility bit."""
+        return self._latest()[0]
+
+    def _latest(self) -> tuple[int, dict | None]:
+        """(version, manifest) of the highest visible version, read and
+        parsed once; (-1, None) when the table does not exist."""
         for v, m in self._manifests():
             if _txn_visible(m):
-                return v
-        return -1
+                return v, m
+        return -1, None
 
     def _slots(self) -> list[int]:
         """Every version slot taken in `_log`, visible or pending."""
@@ -355,10 +320,10 @@ class AcidTable:
         through: (version, manifest) of `version`, or of the latest
         visible version when None. A path with no committed version
         raises FileNotFoundError naming it."""
-        v = self.latest_version() if version is None else version
+        v, m = self._latest() if version is None else (version, None)
         if v < 0:
             raise FileNotFoundError(f"no committed version at {self.path}")
-        return v, self._visible_manifest(v)
+        return v, self._visible_manifest(v) if m is None else m
 
     # ---------------------------------------------------------- write --
     def _write_groups(
@@ -369,16 +334,14 @@ class AcidTable:
         bloom_cols and column_map) and return [(group, stats)].
 
         Unbucketed, `df` becomes ONE group, written straight to
-        `data/<uuid>`; its stats ride the write job as observed metrics
-        (no re-read of the just-written files).
-        Bucketed, every row carries an int `__bucket`: ONE
-        `partitionBy("__bucket")` staging write, ONE grouped aggregate
-        over the staged tree for every bucket's stats (explicit schema,
-        so an empty staging tree reads as empty instead of failing
-        schema inference), then each bucket directory is renamed into
-        place as its own group. Either way the stats are the min/max/
-        null-count triple parquet footers carry, over exactly the rows
-        on disk, keyed by LOGICAL names (pruning predicates speak them).
+        `data/<uuid>`. Bucketed, every row carries an int `__bucket`:
+        ONE `partitionBy("__bucket")` staging write, then each bucket
+        directory is renamed into place as its own group. Either way
+        the write is the statement's only job: each group's stats (the
+        min/max/null-count triple, keyed by LOGICAL names, which pruning
+        predicates speak) come from the footers parquet wrote into the
+        group's own files (acid/footer.py), so no aggregate runs over
+        the rows and nothing is read back.
 
         When the table carries a `column_map` (RENAME COLUMN history —
         {logical: physical}), the batch arrives with logical names and
@@ -387,21 +350,19 @@ class AcidTable:
         column-mapping invariant; mixed per-group names would make the
         single read schema null-fill the newer groups silently).
 
-        CHECK constraints are observed on the write job too: any
-        violation removes what was written and aborts the statement
-        BEFORE a manifest could name it. Bloom columns get their
-        parquet bloom filters in every file footer from the same job."""
-        from pyspark.sql import Observation
-
+        A table with CHECK constraints observes one violation count per
+        CHECK on the write job (no observation otherwise): any violation
+        removes what was written and aborts the statement BEFORE a
+        manifest could name it. Bloom columns get their parquet bloom
+        filters in every file footer from the same job."""
         checks = m.get("checks") or {}
         cmap = m.get("column_map") or {}
-        stat_cols, aggs = _stats_aggs(df.schema)
-        obs = Observation()
-        # bucketed stats come from the staged tree: observe only the
-        # row count (aggs[0]) beside the CHECKs
-        out = df.observe(
-            obs, *(aggs[:1] if bucketed else aggs), *_check_aggs(checks)
-        )
+        out = df
+        if checks:
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            out = df.observe(obs, *_check_aggs(checks))
         if cmap:
             out = out.select(
                 *[F.col(c).alias(cmap.get(c, c)) for c in df.columns]
@@ -417,8 +378,7 @@ class AcidTable:
             (writer.partitionBy("__bucket") if bucketed else writer).parquet(
                 path
             )
-            row = obs.get
-            bad = _violations(row, checks)
+            bad = _violations(obs.get, checks) if checks else {}
             if bad:
                 raise CheckViolation(
                     "CHECK constraint(s) violated, statement aborted: "
@@ -428,21 +388,17 @@ class AcidTable:
                     )
                 )
             if not bucketed:
-                return [(group, _stats_of(row, stat_cols))]
-            staged = _read_mapped(self.spark, df.schema, cmap, path)
-            by_bucket = {
-                str(r["__bucket"]): r
-                for r in staged.groupBy("__bucket").agg(*aggs).collect()
-            }  # one row per bucket — bounded collect
+                return [(group, _footer.group_stats(path, df.schema, cmap))]
             written = []
             for name in sorted(os.listdir(path)):
                 if name.startswith("__bucket="):
                     g = uuid.uuid4().hex
-                    os.rename(
-                        os.path.join(path, name), os.path.join(self._data, g)
+                    dest = os.path.join(self._data, g)
+                    os.rename(os.path.join(path, name), dest)
+                    # `__bucket` is not in the files and gets no entry
+                    written.append(
+                        (g, _footer.group_stats(dest, df.schema, cmap))
                     )
-                    st = _stats_of(by_bucket[name.split("=", 1)[1]], stat_cols)
-                    written.append((g, st))
             return written
         except CheckViolation:
             shutil.rmtree(path, ignore_errors=True)
@@ -452,33 +408,12 @@ class AcidTable:
                 shutil.rmtree(path, ignore_errors=True)
 
     def _group_stats(self, path: str) -> dict:
+        """Stats of the files under `path` by re-reading them with one
+        Spark aggregate, keyed by the names in the files: the reference
+        the footer stats of a commit are checked against."""
         back = self.spark.read.parquet(path)
-        cols = [
-            f.name
-            for f in back.schema.fields
-            if f.dataType.typeName() in (
-                "byte", "short", "integer", "long", "float", "double",
-                "string", "boolean", "date", "timestamp", "timestamp_ntz",
-            ) or f.dataType.typeName().startswith("decimal")
-        ]
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in cols:
-            aggs += [
-                F.min(c).alias(f"__min_{c}"),
-                F.max(c).alias(f"__max_{c}"),
-                F.count(c).alias(f"__cnt_{c}"),
-            ]
-        row = back.agg(*aggs).collect()[0]  # 1-row bounded collect
-        rows = row["__rows"]
-        return {
-            c: [
-                _json_safe(row[f"__min_{c}"]),
-                _json_safe(row[f"__max_{c}"]),
-                rows - row[f"__cnt_{c}"],
-                rows,
-            ]
-            for c in cols
-        }
+        cols, aggs = _stats_aggs(back.schema)
+        return _stats_of(back.agg(*aggs).collect()[0], cols)  # 1-row collect
 
     @staticmethod
     def _meta_of(manifest: dict) -> dict:
@@ -576,13 +511,18 @@ class AcidTable:
         paths = [os.path.join(self._data, g) for g in groups]
         if not manifest.get("schema"):
             return self.spark.read.parquet(*paths)
-        from pyspark.sql.types import StructType
+        from pyspark.sql.types import StructField, StructType
 
-        return _read_mapped(
-            self.spark,
-            StructType.fromJson(manifest["schema"]),
-            manifest.get("column_map") or {},
-            *paths,
+        schema = StructType.fromJson(manifest["schema"])
+        cmap = manifest.get("column_map") or {}
+        if not cmap:
+            return self.spark.read.schema(schema).parquet(*paths)
+        fields = [(cmap.get(f.name, f.name), f) for f in schema.fields]
+        physical = StructType(
+            [StructField(p, f.dataType, f.nullable) for p, f in fields]
+        )
+        return self.spark.read.schema(physical).parquet(*paths).select(
+            *[F.col(p).alias(f.name) for p, f in fields]
         )
 
     def read(self, version: int | None = None) -> DataFrame:

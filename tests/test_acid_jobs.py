@@ -2,13 +2,14 @@
 
 Every op of the transaction log runs a fixed number of Spark jobs on a
 fixed table. Every data write goes through one writer
-(`_write_groups`): a single-group write is one job (stats and CHECKs
-ride it as observed metrics, and parquet writes the bloom columns'
-footer filters inside it); a relayout (`cluster_by`,
-`cluster_by_zorder`) adds its quantile passes, one bucketed staging
-write and one grouped stats aggregate over the staged tree. A merge
-adds its key-box aggregate. Bloom probes read footers on the driver and
-run no job. A change that adds a re-read, a count or a per-group loop
+(`_write_groups`): a single-group write is one job (CHECKs ride it as
+observed metrics, and parquet writes the bloom columns' footer filters
+inside it); a relayout (`cluster_by`, `cluster_by_zorder`) is its
+quantile passes plus one bucketed staging write. Each new group's
+min/max/null-count stats are read from the footers of the files the
+write produced, on the driver, so stats cost no job on either path. A
+merge adds its key-box aggregate. Bloom probes read footers on the
+driver and run no job. A change that adds a re-read, a count or a per-group loop
 moves one of these figures and fails here; a refactor of the commit
 path must leave all of them as they are.
 
@@ -98,7 +99,7 @@ def test_jobs_per_acid_op(spark, tmp_path):
     ]
     assert got == {
         "create": 1,
-        "cluster_by_zorder": 7,
+        "cluster_by_zorder": 5,
         "append": 1,
         "commit_appends": 1,
         "merge": 4,
@@ -110,5 +111,5 @@ def test_jobs_per_acid_op(spark, tmp_path):
         "rename_column": 0,
         "restore": 0,
         "read_where(point)": 1,
-        "cluster_by": 5,
+        "cluster_by": 3,
     }

@@ -226,3 +226,24 @@ def test_uncommitted_path_raises_named_not_found(spark, tmp_path, op):
     with pytest.raises(FileNotFoundError, match="no committed version at"):
         calls[op]()
     assert not os.path.exists(t.path)
+
+
+def test_latest_snapshot_reads_the_tip_manifest_once(
+    spark, tmp_path, monkeypatch
+):
+    """Resolving the latest snapshot parses the tip manifest once (the
+    same parse that found it visible); an explicit version still
+    resolves through its own read."""
+    t = _mk(spark, tmp_path)
+    t.append(
+        spark.createDataFrame([(4, "d", 40.0)], "id long, name string, val double")
+    )
+    reads = []
+    real = AcidTable._manifest
+    monkeypatch.setattr(
+        AcidTable, "_manifest", lambda self, v: reads.append(v) or real(self, v)
+    )
+    v, m = t._snapshot()
+    assert (v, reads) == (1, [1]) and m["version"] == 1
+    reads.clear()
+    assert t._snapshot(0)[1]["version"] == 0 and reads == [0]
