@@ -6,10 +6,12 @@ DataFrame — collect stays at the caller, exactly like `collect()` in app.R
 and `pos` ranges (row-group skipping on the pos-sorted layout).
 
 The queries are driver-bound (a few small pruned scans each), so each is
-shaped to one Spark job per step: tables come from the warehouse's
-resolved-relation memo, the locus-window anchor is one `collect`, and
-results bounded by their pushed predicates sort in a single partition
-instead of paying a global sort's range-sampling job and exchange.
+shaped to one Spark job (an unanchored probe keeps its global sort):
+tables come from the warehouse's resolved-relation memo, the
+locus-window anchor is a driver-side probe of the marker index
+(`Warehouse.lookup`, no job), and results bounded by their pushed
+predicates sort in a single partition instead of paying a global sort's
+range-sampling job and exchange.
 """
 
 from __future__ import annotations
@@ -103,24 +105,30 @@ def locus_window(
     """FLAGSHIP (gwasDB/app.R:124-154): click a marker → look up its
     position → ±flank window on `combined` for the Manhattan plot.
 
-    Two-step lifecycle preserved: the anchor lookup is a tiny pruned scan;
-    the window query binds chr + pos BETWEEN, so partition pruning + row-
+    Two-step lifecycle preserved: the anchor lookup is a point probe; the
+    window query binds chr + pos BETWEEN, so partition pruning + row-
     group skipping leave a few MB scanned regardless of warehouse size.
     The app's post-collect `filter(name %in% studies)` (app.R:176) is
     folded into the plan (SURVEY.md §3 note).
 
-    The anchor is one `collect` of the pushed-down kgp_id equality: kgp_id
-    is the PK, so at most one row comes back, and `first()` would instead
-    run a take that scans one partition and then grows (1-3 jobs)."""
-    anchor = (
-        _marker_source(wh)
-        .filter(F.col("kgp_id") == kgp_id)
-        .select("chr", "pos")
-        .collect()
-    )
+    With the marker index built, the anchor is `Warehouse.lookup` on the
+    driver: footer min/max pick the one row group that can hold the
+    name, and pyarrow reads it, so the window is the only Spark job.
+    Without it, the anchor is one `collect` of the kgp_id equality pushed
+    to b37 (kgp_id is the PK, so at most one row; `first()` would run a
+    take that scans one partition and then grows, 1-3 jobs)."""
+    if wh.has_table("marker_index"):
+        anchor = wh.lookup("marker_index", "kgp_id", kgp_id, ["chr", "pos"])
+    else:
+        anchor = (
+            wh.read("b37")
+            .filter(F.col("kgp_id") == kgp_id)
+            .select("chr", "pos")
+            .collect()
+        )
     if not anchor:
         return wh.read("combined").limit(0)
-    chrom, pos = anchor[0]["chr"], anchor[0]["pos"]
+    chrom, pos = anchor[0]
     out = wh.read("combined").filter(
         (F.col("chr") == chrom) & F.col("pos").between(pos - flank, pos + flank)
     )

@@ -81,12 +81,9 @@ def pivot_hwe(hwe: DataFrame) -> DataFrame:
         .agg(*[F.first(c).alias(c) for c in HWE_VALUE_COLS])
     )
     # normalize names to the reference's {value}_{test-lowered} convention
-    renames = {
-        f"{t}_{c}": f"{c}_{t.lower()}" for t in HWE_TESTS for c in HWE_VALUE_COLS
-    }
-    for old, new in renames.items():
-        piv = piv.withColumnRenamed(old, new)
-    return piv
+    return piv.withColumnsRenamed(
+        {f"{t}_{c}": f"{c}_{t.lower()}" for t in HWE_TESTS for c in HWE_VALUE_COLS}
+    )
 
 
 def ingest_study(

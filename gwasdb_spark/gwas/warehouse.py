@@ -28,19 +28,32 @@ builds — first recovers an interrupted swap under the root, so a
 writer must not run beside a build in flight on the same root (the
 swap's single-coordinator contract).
 
+Point probe: `lookup` serves an equality probe of a table sorted by the
+probed column (the marker index) on the driver, with no Spark job. It
+lists the files the memoized relation lists (`inputFiles()`), reads each
+file's footer once, and then reads only the row groups whose min/max
+admit the key. `build_marker_index` writes row groups of at most
+`INDEX_ROW_GROUP_BYTES`, so at 93M markers a probe reads one ~1 MiB row
+group rather than a file's single ~1.5M-row group.
+
 Invalidation contract (the one Spark's catalog file-status cache has):
-every `Warehouse` method that changes a table drops its memo entry once
-the write has finished — `write`, `append`, `build_marker_index` and
-`build_combined`. A writer that changes a table's files out of band
-(another process, another `Warehouse` on the same root, a manual `rm`)
-must call `refresh(name)` before this instance reads that table again,
-as Spark requires a `REFRESH TABLE` after an external write.
+the memo holds each table's resolved relation and, once probed, its
+file list and footers. Every `Warehouse` method that changes a table
+drops that table's memo entries once the write has finished — `write`,
+`append`, `build_marker_index` and `build_combined`. A writer that
+changes a table's files out of band (another process, another
+`Warehouse` on the same root, a manual `rm`) must call `refresh(name)`
+before this instance reads or probes that table again, as Spark
+requires a `REFRESH TABLE` after an external write.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,6 +61,9 @@ from gwasdb_spark.acid.swap import recover, replacing
 
 SILVER_TABLES = ("b37", "marker", "study", "gwas", "no_gwas_result")
 CHR_PARTITIONED = {"b37", "gwas", "combined"}
+# parquet-java's row-group size for the marker index, set per writer:
+# ~80-100k markers a group, so a `lookup` reads one small group at any scale
+INDEX_ROW_GROUP_BYTES = 1 << 20
 
 
 class Warehouse:
@@ -58,6 +74,8 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self._relations: dict[str, DataFrame] = {}
+        # {table: {column: [(path, footer, [(min, max) | None per row group])]}}
+        self._footers: dict[str, dict[str, list]] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -79,6 +97,8 @@ class Warehouse:
         if name in CHR_PARTITIONED and "chr" in df.columns:
             df = df.sortWithinPartitions("chr", "pos") if "pos" in df.columns else df
             writer = df.write.mode(mode).partitionBy("chr")
+        if name == "marker_index":
+            writer = writer.option("parquet.block.size", INDEX_ROW_GROUP_BYTES)
         try:
             writer.parquet(self.path(name))
         finally:
@@ -108,8 +128,49 @@ class Warehouse:
         return df
 
     def refresh(self, name: str) -> None:
-        """Drop `name`'s resolved relation; the next read re-lists it."""
+        """Drop `name`'s resolved relation and probed footers; the next
+        read or lookup re-lists it."""
         self._relations.pop(name, None)
+        self._footers.pop(name, None)
+
+    def lookup(self, name: str, col: str, key, cols: list[str]) -> list[tuple]:
+        """`cols` of every row of `name` whose `col` equals `key`, read on
+        the driver without a Spark job: what
+        `read(name).filter(col == key).select(*cols).collect()` returns, as
+        tuples. Only row groups whose footer min/max admit `key` are read;
+        a row group without stats always is. `col` and `cols` must be
+        stored in the files (not partition columns)."""
+        hits = []
+        for path, footer, bounds in self._probe_footers(name, col):
+            groups = [
+                i for i, b in enumerate(bounds) if b is None or b[0] <= key <= b[1]
+            ]
+            if not groups:
+                continue
+            with pq.ParquetFile(path, metadata=footer) as f:
+                t = f.read_row_groups(groups, columns=list({col, *cols}))
+            t = t.filter(pc.equal(t[col], key))
+            hits += zip(*(t[c].to_pylist() for c in cols))
+        return hits
+
+    def _probe_footers(self, name: str, col: str) -> list:
+        """Each file of `name`'s relation, with its footer and every row
+        group's `col` min/max, read on the first probe only."""
+        by_col = self._footers.setdefault(name, {})
+        if col not in by_col:
+            files = []
+            for uri in self.read(name).inputFiles():
+                path = unquote(urlparse(uri).path)
+                footer = pq.read_metadata(path)
+                j = footer.schema.names.index(col)
+                bounds = []
+                for i in range(footer.num_row_groups):
+                    st = footer.row_group(i).column(j).statistics
+                    has = st is not None and st.has_min_max
+                    bounds.append((st.min, st.max) if has else None)
+                files.append((path, footer, bounds))
+            by_col[col] = files
+        return by_col[col]
 
     def register_views(self) -> None:
         """Expose every table to SQL-text queries (entry-point 3)."""
@@ -135,8 +196,11 @@ class Warehouse:
         row-group min/max stats, so an equality or prefix probe pushed to
         the scan skips every non-overlapping row group: at 93M rows a
         lookup touches ~one file's worth of footer reads plus one row
-        group. Delta/Iceberg z-order+bloom is the transactional upgrade;
-        no Delta jar ships in this container (documented ROADMAP.md)."""
+        group. Row groups are bounded at `INDEX_ROW_GROUP_BYTES` (~80-100k
+        markers), so that row group stays small however many markers a
+        file holds, and `lookup` reads just it on the driver.
+        Delta/Iceberg z-order+bloom is the transactional upgrade; no
+        Delta jar ships in this container (documented ROADMAP.md)."""
         recover(self.root)
         idx = self.read("b37").select("kgp_id", "chr", "pos")
         return self._replace(

@@ -62,20 +62,18 @@ def read_delim(
     else:
         reader = reader.option("inferSchema", False)
     df = reader.csv(path)
-    if col_names is not None:
-        df = df.toDF(*col_names)
+    names = df.columns if col_names is None else col_names
     if clean:
-        df = clean_names(df)
-    # Defensive null normalization for every remaining NA-ish string column.
-    for field in df.schema.fields:
+        names = [snake_case(c) for c in names]
+    # one projection renames every column and nulls the remaining NA-ish
+    # strings (the reader's nullValue takes only the first)
+    cols = []
+    for field, name in zip(df.schema.fields, names, strict=True):
+        c = F.col("`" + field.name.replace("`", "``") + "`")
         if isinstance(field.dataType, T.StringType) and len(na_strings) > 1:
-            df = df.withColumn(
-                field.name,
-                F.when(F.col(field.name).isin(*na_strings), None).otherwise(
-                    F.col(field.name)
-                ),
-            )
-    return df
+            c = F.when(c.isin(*na_strings), None).otherwise(c)
+        cols.append(c.alias(name))
+    return df.select(cols)
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:

@@ -16,8 +16,12 @@ changes, else HEAD~1: the commit the change under test sits on.
 Prints one row per metric of the result line (the end-to-end metrics, or
 the per-layer ones with `--trace 1`): median and interquartile range of
 each side, the change of the median, and the pairs the working tree won
-by the metric's `better` direction in BENCHMARK.json. Then failed /
-attempted operations of each side, and a last JSON line with every run.
+by the metric's `better` direction in BENCHMARK.json. A second table does
+the same for the workload's figures from the detail line
+(`locus_window_p50_ms`, `commit_p50_ms`, ...), so a change to one op kind
+shows; a figure's direction comes from its name (`_per_s` higher; `_ms`,
+`_s`, `_amp` lower; none otherwise). Then failed / attempted operations
+of each side, and a last JSON line with every run.
 """
 
 from __future__ import annotations
@@ -54,18 +58,30 @@ def directions(tree: str) -> dict[str, str]:
     }
 
 
+def figure_direction(name: str) -> str | None:
+    """The `better` direction of a detail-line figure, from its unit."""
+    if name.endswith("_per_s"):
+        return "higher"
+    if name.endswith(("_ms", "_s", "_amp")):
+        return "lower"
+    return None
+
+
 def run_once(tree: str, workload: str, seed: int, trace: int):
-    """The result line of one perfbench run from `tree`, or None (its
-    stderr tail is printed) when the run fails."""
+    """The result line of one perfbench run from `tree`, with the detail
+    line's `figures` added, or None (its stderr tail is printed) when the
+    run fails."""
     cmd = [
         sys.executable, "perfbench/run.py", "--workload", workload,
         "--seed", str(seed), "--trace", str(trace),
     ]
     proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
-    if proc.returncode == 0 and lines:
+    if proc.returncode == 0 and len(lines) > 1:
         try:
-            return json.loads(lines[-1])
+            result = json.loads(lines[-1])
+            result["figures"] = json.loads(lines[-2]).get("figures") or {}
+            return result
         except ValueError:
             pass
     print(f"run failed ({tree}, seed {seed}, exit {proc.returncode}):",
@@ -81,25 +97,40 @@ def spread(xs: list[float]) -> tuple[float, float, float]:
     return q2, q1, q3
 
 
-def report(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> None:
-    names = sorted({k for a, b in pairs for k in a["metrics"]} & {
-        k for a, b in pairs for k in b["metrics"]
-    })
-    print(f"{'metric':44} {'base median [IQR]':>28} {'tree median [IQR]':>28}"
+def table(title: str, values: dict[str, list[tuple[float, float]]], better) -> None:
+    """One row per name of {name: [(base, tree) per pair]}: each side's
+    median [IQR], the change of the median, and the pairs the tree won by
+    `better(name)` ("lower", "higher" or None)."""
+    print(f"{title:44} {'base median [IQR]':>28} {'tree median [IQR]':>28}"
           f" {'change':>8} {'won':>6}")
-    for name in names:
-        both = [(a["metrics"][name]["value"], b["metrics"][name]["value"])
-                for a, b in pairs
-                if name in a["metrics"] and name in b["metrics"]]
+    for name, both in sorted(values.items()):
         base, tree = [x for x, _ in both], [y for _, y in both]
         (bm, b1, b3), (tm, t1, t3) = spread(base), spread(tree)
         change = f"{(tm - bm) / bm:+.1%}" if bm else "-"
-        way = better.get(name)
+        way = better(name)
         won = "-" if way is None else "%d/%d" % (sum(
             (y < x) if way == "lower" else (y > x) for x, y in both
         ), len(both))
         print(f"{name:44} {f'{bm:.4g} [{b1:.4g}-{b3:.4g}]':>28}"
               f" {f'{tm:.4g} [{t1:.4g}-{t3:.4g}]':>28} {change:>8} {won:>6}")
+
+
+def paired(pairs: list[tuple[dict, dict]], section: str, value) -> dict:
+    """{name: [(base, tree)]} over the pairs where both sides report a
+    number for `name` in `section` of their result lines."""
+    out: dict[str, list[tuple[float, float]]] = {}
+    for a, b in pairs:
+        for name in a[section].keys() & b[section].keys():
+            x, y = value(a[section][name]), value(b[section][name])
+            if isinstance(x, (int, float)) and isinstance(y, (int, float)):
+                out.setdefault(name, []).append((x, y))
+    return out
+
+
+def report(pairs: list[tuple[dict, dict]], better: dict[str, str]) -> None:
+    table("metric", paired(pairs, "metrics", lambda m: m["value"]), better.get)
+    print()
+    table("figure", paired(pairs, "figures", lambda v: v), figure_direction)
     for side, i in (("base", 0), ("tree", 1)):
         failed = sum(p[i]["failed"] for p in pairs)
         attempted = sum(p[i]["attempted"] for p in pairs)

@@ -7,15 +7,24 @@ interactive `gwas.api` query runs one Spark job per step.
    `build_marker_index` make their tables' next read see the new files.
 2. Job counts on a warm warehouse, read from the DAG scheduler's job-id
    counter: a region, point or anchored-probe query is one job (plan plus
-   collect) and the two-step locus window is two. A regression that adds
-   a sampling sort, a take that grows, or a per-call schema inference
-   fails here.
+   collect), and so is the two-step locus window, whose anchor is the
+   driver-side marker-index probe. A regression that adds a sampling
+   sort, a take that grows, a Spark anchor query or a per-call schema
+   inference fails here.
 3. The single-partition sorts return the same rows in the same order as
    a global `orderBy`.
+4. `Warehouse.lookup` returns what the Spark anchor query returns, for
+   known and unknown names, follows a rebuilt index, and reads one row
+   group of a file that holds several.
 """
 
 from __future__ import annotations
 
+import os
+from urllib.parse import urlparse
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -90,7 +99,11 @@ def test_build_marker_index_switches_the_marker_source(spark, tmp_path_factory):
     assert src.columns == ["kgp_id", "chr", "pos"]
     assert all("marker_index" in f for f in src.inputFiles())
     assert api.marker_exact(w, some_id).collect() == before and len(before) == 1
+    assert w.lookup("marker_index", "kgp_id", some_id, ["chr", "pos"]) == [
+        (before[0].chr, before[0].pos)
+    ]
     # a rebuild over a grown b37 replaces the index files the memo listed
+    # and the footers the probe read
     new_id = "2:999999_A_G"
     w.append(
         "b37",
@@ -102,6 +115,9 @@ def test_build_marker_index_switches_the_marker_source(spark, tmp_path_factory):
     w.build_marker_index(n_files=3)
     assert [tuple(r) for r in api.marker_exact(w, new_id).collect()] == [
         (2, 999_999, new_id)
+    ]
+    assert w.lookup("marker_index", "kgp_id", new_id, ["chr", "pos"]) == [
+        (2, 999_999)
     ]
     assert api.marker_exact(w, some_id).collect() == before
 
@@ -132,8 +148,8 @@ def test_browse_queries_take_one_job_per_step(spark, wh):
         "marker_exact": 1,
         "markers_by_region": 1,
         "markers_by_probe": 1,
-        "locus_window": 2,
-        "locus_window_studies": 2,
+        "locus_window": 1,
+        "locus_window_studies": 1,
     }
 
 
@@ -162,3 +178,99 @@ def test_locus_window_with_unknown_anchor_is_empty(wh):
     res = api.locus_window(wh, "99:1_A_C")
     assert res.columns == wh.read("combined").columns
     assert res.collect() == []
+
+
+def _spark_anchor(wh, key):
+    return [
+        tuple(r)
+        for r in wh.read("marker_index")
+        .filter(F.col("kgp_id") == key)
+        .select("chr", "pos")
+        .collect()
+    ]
+
+
+def _count_row_groups_read(monkeypatch) -> list[int]:
+    """Row groups each `ParquetFile.read_row_groups` call reads."""
+    reads = []
+    real = pq.ParquetFile.read_row_groups
+
+    def counting(self, row_groups, *args, **kwargs):
+        reads.append(len(row_groups))
+        return real(self, row_groups, *args, **kwargs)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", counting)
+    return reads
+
+
+def test_lookup_matches_the_spark_anchor(wh, monkeypatch):
+    # what the anchor query returns for every name, from one index scan
+    want = {}
+    for r in wh.read("marker_index").collect():
+        want.setdefault(r.kgp_id, []).append((r.chr, r.pos))
+    snps = wh.fixture_facts["snps"]
+    assert len(want) == len(snps)
+    for snp in snps:
+        k = snp["kgp_id"]
+        got = wh.lookup("marker_index", "kgp_id", k, ["chr", "pos"])
+        assert got == want[k] == [(snp["chr"], snp["pos"])]
+    for snp in snps[::40]:
+        k = snp["kgp_id"]
+        assert wh.lookup("marker_index", "kgp_id", k, ["chr", "pos"]) == (
+            _spark_anchor(wh, k)
+        )
+    # unknown names: below every file, above every file, between two files
+    ranges = sorted(
+        (md.row_group(0).column(0).statistics.min,
+         md.row_group(md.num_row_groups - 1).column(0).statistics.max)
+        for md in (
+            pq.read_metadata(urlparse(f).path)
+            for f in wh.read("marker_index").inputFiles()
+        )
+        if md.num_rows
+    )
+    assert len(ranges) > 1
+    below, above = ranges[0][0][:-1], ranges[-1][1] + "~"
+    gap = ranges[0][1] + "~"
+    assert below < ranges[0][0] and ranges[0][1] < gap < ranges[1][0]
+    reads = _count_row_groups_read(monkeypatch)
+    for k in (below, above, gap, "99:1_A_C"):
+        assert wh.lookup("marker_index", "kgp_id", k, ["chr", "pos"]) == []
+        assert _spark_anchor(wh, k) == []
+    assert reads == []  # no row group admits a name outside every range
+
+
+def test_lookup_reads_one_row_group(spark, tmp_path, monkeypatch):
+    n = 300_000  # two files of ~150k markers; a 1 MiB row group holds ~97k
+    w = Warehouse(spark, str(tmp_path / "wh"))
+    w.write(
+        "b37",
+        spark.range(n).select(
+            F.format_string("1:%d_A_G", F.col("id")).alias("kgp_id"),
+            F.lit(1).alias("chr"),
+            F.col("id").cast("int").alias("pos"),
+            F.lit("A").alias("ref"),
+            F.lit("G").alias("alt"),
+        ),
+    )
+    w.build_marker_index(n_files=2)
+    files = [urlparse(f).path for f in w.read("marker_index").inputFiles()]
+    assert len(files) == 2
+    assert all(pq.read_metadata(f).num_row_groups > 1 for f in files)
+    reads = _count_row_groups_read(monkeypatch)
+    for pos in (0, 77_777, n - 1):
+        k = f"1:{pos}_A_G"
+        assert w.lookup("marker_index", "kgp_id", k, ["chr", "pos"]) == [(1, pos)]
+    assert reads == [1, 1, 1]
+
+
+def test_lookup_reads_row_groups_without_stats(spark, tmp_path):
+    w = Warehouse(spark, str(tmp_path / "wh"))
+    os.makedirs(w.path("marker_index"))
+    t = pa.table({"kgp_id": ["1:5_A_G", "1:9_C_T"], "chr": [1, 1], "pos": [5, 9]})
+    pq.write_table(
+        t, os.path.join(w.path("marker_index"), "part-0.parquet"),
+        write_statistics=False,
+    )
+    assert w.lookup("marker_index", "kgp_id", "1:9_C_T", ["chr", "pos"]) == [(1, 9)]
+    assert w.lookup("marker_index", "kgp_id", "1:7_A_G", ["chr", "pos"]) == []
