@@ -1,17 +1,25 @@
-"""Query API — the Shiny app's surface (gwasDB/app.R) as lazy DataFrames.
+"""Query API — the Shiny app's surface (gwasDB/app.R) as DataFrames.
 
-Every function mirrors one reactive query in the app; each returns a LAZY
-DataFrame — collect stays at the caller, exactly like `collect()` in app.R
+Every function mirrors one reactive query in the app and returns a
+DataFrame; collect stays at the caller, exactly like `collect()` in app.R
 (SURVEY.md §3 entry-point 1). All predicates bind `chr` (partition pruning)
 and `pos` ranges (row-group skipping on the pos-sorted layout).
 
-The queries are driver-bound (a few small pruned scans each), so each is
-shaped to one Spark job (an unanchored probe keeps its global sort):
-tables come from the warehouse's resolved-relation memo, the
-locus-window anchor is a driver-side probe of the marker index
-(`Warehouse.lookup`, no job), and results bounded by their pushed
-predicates sort in a single partition instead of paying a global sort's
-range-sampling job and exchange.
+Keyed probes — `marker_exact`, an ^-anchored `markers_by_probe` with the
+marker index built, and the `combined` window of `locus_window` — answer a
+few dozen rows, so they run no Spark job: at call time they read the row
+groups the warehouse's memoized footers admit (`Warehouse.key_range`) on
+the driver and return a local relation (`Warehouse.local`). The rows are
+resolved when the function is called, under the same snapshot-until-
+`refresh` contract as the warehouse's relation memo; the regex and the
+study filter stay Spark Columns, which the optimizer folds into the local
+relation on the driver, so Java-regex and SQL-null semantics hold.
+
+Region scans (`combined_region`, `markers_by_region`), an unanchored probe
+and the probes without a marker index stay lazy Spark scans of one job
+each (an unanchored probe keeps its global sort); results bounded by
+their pushed predicates sort in a single partition instead of paying a
+global sort's range-sampling job and exchange.
 """
 
 from __future__ import annotations
@@ -35,16 +43,20 @@ def markers_by_region(wh: Warehouse, chrom: int, start: int, end: int) -> DataFr
 
 
 _REGEX_META = set(r".*+?[](){}|\^$")
+_MARKER_COLS = ["chr", "pos", "kgp_id"]
 
 
 def _literal_prefix(pattern: str) -> str:
-    """Longest literal prefix of an ^-anchored regex ('' if unanchored).
-    'rs123\\d+' probes get a sargable prefix; '.*foo' gets none."""
-    if not pattern.startswith("^"):
+    """Longest ASCII literal prefix every match of an ^-anchored regex
+    starts with ('' if unanchored or alternated). 'rs123\\d+' probes get a
+    sargable prefix; '.*foo' and '^ab|cd' get none, and '^ab*' gets 'a'."""
+    if not pattern.startswith("^") or "|" in pattern:
         return ""
     out = []
     for ch in pattern[1:]:
-        if ch in _REGEX_META:
+        if ch in _REGEX_META or not ch.isascii():
+            if ch in "*?{" and out:  # the quantifier makes its char optional
+                out.pop()
             break
         out.append(ch)
     return "".join(out)
@@ -58,26 +70,37 @@ def _marker_source(wh: Warehouse) -> DataFrame:
     return wh.read("b37")
 
 
+def _index_range(wh: Warehouse, lo: str, hi: str):
+    """Marker-index rows with kgp_id in [lo, hi], read on the driver."""
+    return wh.key_range("marker_index", "kgp_id", lo, hi, cols=_MARKER_COLS)
+
+
 def markers_by_probe(wh: Warehouse, probe_regex: str) -> DataFrame:
     """Probe-mode marker search (gwasDB/app.R:97-101): regex over kgp_id,
     sorted by (chr, pos).
 
-    Served from the name-sorted `marker_index` when built: an ^-anchored
-    probe contributes a literal-prefix `startswith` predicate that pushes
-    to the parquet scan (StringStartsWith), so min/max name stats skip
-    every non-overlapping row group — the b-tree-probe replacement
-    (R/gwas_ddl.sql:5). Unanchored regexes still scan, but only the
-    skinny 3-column index, not wide b37.
-
-    An anchored probe's result is bounded by its pushed prefix and sorts
-    in one partition; an unanchored one scans the whole index in parallel
-    and keeps the global sort."""
-    src = _marker_source(wh)
+    An ^-anchored probe with a literal prefix P, with the name-sorted
+    `marker_index` built, is a keyed probe (module docstring): the index
+    rows in [P, P'] (P' = P with its last char incremented, the least
+    name above every name that starts with P) come off the driver, sorted
+    in Arrow, and the regex filters them as a Spark Column — the
+    b-tree-probe replacement (R/gwas_ddl.sql:5). Without the index the
+    prefix is a `startswith` pushed to the b37 scan (StringStartsWith);
+    the result is bounded by it and sorts in one partition. Unanchored
+    regexes scan, but only the skinny 3-column index when built, and keep
+    the global sort."""
     cond = F.col("kgp_id").rlike(probe_regex)
     prefix = _literal_prefix(probe_regex)
+    if prefix and wh.has_table("marker_index"):
+        upper = prefix[:-1] + chr(ord(prefix[-1]) + 1)
+        rows = _index_range(wh, prefix, upper).sort_by(
+            [("chr", "ascending"), ("pos", "ascending")]
+        )
+        return wh.local("marker_index", rows).filter(cond)
+    src = _marker_source(wh)
     if prefix:
         cond = F.col("kgp_id").startswith(prefix) & cond
-    out = src.filter(cond).select("chr", "pos", "kgp_id")
+    out = src.filter(cond).select(*_MARKER_COLS)
     if prefix:
         return out.coalesce(1).sortWithinPartitions("chr", "pos")
     return out.orderBy("chr", "pos")
@@ -85,13 +108,12 @@ def markers_by_probe(wh: Warehouse, probe_regex: str) -> DataFrame:
 
 def marker_exact(wh: Warehouse, kgp_id: str) -> DataFrame:
     """Exact marker-name point lookup — the interactive single-id path.
-    Equality on the sorted index's kgp_id pushes to the scan and skips
-    all but the one matching name range."""
-    return (
-        _marker_source(wh)
-        .filter(F.col("kgp_id") == kgp_id)
-        .select("chr", "pos", "kgp_id")
-    )
+    With the marker index built it is a keyed probe (module docstring):
+    footer min/max pick the row group that can hold the name. Without it,
+    equality on kgp_id pushes to the b37 scan."""
+    if wh.has_table("marker_index"):
+        return wh.local("marker_index", _index_range(wh, kgp_id, kgp_id))
+    return wh.read("b37").filter(F.col("kgp_id") == kgp_id).select(*_MARKER_COLS)
 
 
 def empty_markers(wh: Warehouse) -> DataFrame:
@@ -106,19 +128,20 @@ def locus_window(
     position → ±flank window on `combined` for the Manhattan plot.
 
     Two-step lifecycle preserved: the anchor lookup is a point probe; the
-    window query binds chr + pos BETWEEN, so partition pruning + row-
-    group skipping leave a few MB scanned regardless of warehouse size.
-    The app's post-collect `filter(name %in% studies)` (app.R:176) is
-    folded into the plan (SURVEY.md §3 note).
+    window binds chr + pos BETWEEN. The app's post-collect
+    `filter(name %in% studies)` (app.R:176) is folded into the result
+    (SURVEY.md §3 note).
 
-    With the marker index built, the anchor is `Warehouse.lookup` on the
-    driver: footer min/max pick the one row group that can hold the
-    name, and pyarrow reads it, so the window is the only Spark job.
+    The window is a keyed probe (module docstring): the `chr=` partition's
+    footers admit the few row groups whose pos min/max meet the window,
+    and the study filter folds into the local relation. With the marker
+    index built, so is the anchor, and the call runs no Spark job.
     Without it, the anchor is one `collect` of the kgp_id equality pushed
     to b37 (kgp_id is the PK, so at most one row; `first()` would run a
     take that scans one partition and then grows, 1-3 jobs)."""
     if wh.has_table("marker_index"):
-        anchor = wh.lookup("marker_index", "kgp_id", kgp_id, ["chr", "pos"])
+        t = _index_range(wh, kgp_id, kgp_id)
+        anchor = list(zip(t["chr"].to_pylist(), t["pos"].to_pylist()))
     else:
         anchor = (
             wh.read("b37")
@@ -129,8 +152,9 @@ def locus_window(
     if not anchor:
         return wh.read("combined").limit(0)
     chrom, pos = anchor[0]
-    out = wh.read("combined").filter(
-        (F.col("chr") == chrom) & F.col("pos").between(pos - flank, pos + flank)
+    out = wh.local(
+        "combined",
+        wh.key_range("combined", "pos", pos - flank, pos + flank, chrom=chrom),
     )
     if studies:
         out = out.filter(F.col("name").isin(studies))

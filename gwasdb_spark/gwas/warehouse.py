@@ -28,23 +28,28 @@ builds — first recovers an interrupted swap under the root, so a
 writer must not run beside a build in flight on the same root (the
 swap's single-coordinator contract).
 
-Point probe: `lookup` serves an equality probe of a table sorted by the
-probed column (the marker index) on the driver, with no Spark job. It
-lists the files the memoized relation lists (`inputFiles()`), reads each
-file's footer once, and then reads only the row groups whose min/max
-admit the key. `build_marker_index` writes row groups of at most
-`INDEX_ROW_GROUP_BYTES`, so at 93M markers a probe reads one ~1 MiB row
-group rather than a file's single ~1.5M-row group.
+Keyed probes: `key_range` serves a key-range probe — equality is
+`lo == hi` — of a table sorted by the probed column on the driver, with
+no Spark job: the marker index by name, and a `chr=` partition of
+`combined` by pos. It groups the files the memoized relation lists
+(`inputFiles()`) by partition directory, reads the footers of a
+partition on its first probe only, and then reads only the row groups
+whose min/max meet the range, cutting the range in Arrow. `local` turns
+the result into a DataFrame over a local relation: collecting it, or
+a filter or projection on it, runs on the driver without a job.
+`marker_index` and `combined` are written in row groups of at most
+`PROBE_ROW_GROUP_BYTES`, so at 93M markers a probe reads about one
+~1 MiB row group per file rather than a file's single ~1.5M-row group.
 
 Invalidation contract (the one Spark's catalog file-status cache has):
-the memo holds each table's resolved relation and, once probed, its
-file list and footers. Every `Warehouse` method that changes a table
-drops that table's memo entries once the write has finished — `write`,
-`append`, `build_marker_index` and `build_combined`. A writer that
-changes a table's files out of band (another process, another
-`Warehouse` on the same root, a manual `rm`) must call `refresh(name)`
-before this instance reads or probes that table again, as Spark
-requires a `REFRESH TABLE` after an external write.
+the memo holds each table's resolved relation and, once probed, its file
+list and the footers of each probed partition. Every `Warehouse` method
+that changes a table drops that table's memo entries once the write has
+finished — `write`, `append`, `build_marker_index` and `build_combined`.
+A writer that changes a table's files out of band (another process,
+another `Warehouse` on the same root, a manual `rm`) must call
+`refresh(name)` before this instance reads or probes that table again,
+as Spark requires a `REFRESH TABLE` after an external write.
 """
 
 from __future__ import annotations
@@ -52,18 +57,22 @@ from __future__ import annotations
 import os
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from gwasdb_spark.acid.swap import recover, replacing
 
 SILVER_TABLES = ("b37", "marker", "study", "gwas", "no_gwas_result")
 CHR_PARTITIONED = {"b37", "gwas", "combined"}
-# parquet-java's row-group size for the marker index, set per writer:
-# ~80-100k markers a group, so a `lookup` reads one small group at any scale
-INDEX_ROW_GROUP_BYTES = 1 << 20
+# parquet-java's row-group size for the tables `key_range` probes, set per
+# writer: ~80-100k markers a group, so a probe reads small groups at any scale
+PROBED_TABLES = ("marker_index", "combined")
+PROBE_ROW_GROUP_BYTES = 1 << 20
 
 
 class Warehouse:
@@ -74,8 +83,11 @@ class Warehouse:
         self.spark = spark
         self.root = root
         self._relations: dict[str, DataFrame] = {}
-        # {table: {column: [(path, footer, [(min, max) | None per row group])]}}
-        self._footers: dict[str, dict[str, list]] = {}
+        # {table: {chr partition value | None: [path]}}
+        self._files: dict[str, dict] = {}
+        # {table: {(partition, column): [(path, footer, [(min, max) | None
+        # per row group])]}}
+        self._footers: dict[str, dict] = {}
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -97,8 +109,8 @@ class Warehouse:
         if name in CHR_PARTITIONED and "chr" in df.columns:
             df = df.sortWithinPartitions("chr", "pos") if "pos" in df.columns else df
             writer = df.write.mode(mode).partitionBy("chr")
-        if name == "marker_index":
-            writer = writer.option("parquet.block.size", INDEX_ROW_GROUP_BYTES)
+        if name in PROBED_TABLES:
+            writer = writer.option("parquet.block.size", PROBE_ROW_GROUP_BYTES)
         try:
             writer.parquet(self.path(name))
         finally:
@@ -128,39 +140,73 @@ class Warehouse:
         return df
 
     def refresh(self, name: str) -> None:
-        """Drop `name`'s resolved relation and probed footers; the next
-        read or lookup re-lists it."""
+        """Drop `name`'s resolved relation, file list and probed footers;
+        the next read or probe re-lists it."""
         self._relations.pop(name, None)
+        self._files.pop(name, None)
         self._footers.pop(name, None)
 
-    def lookup(self, name: str, col: str, key, cols: list[str]) -> list[tuple]:
-        """`cols` of every row of `name` whose `col` equals `key`, read on
+    def key_range(
+        self, name: str, col: str, lo, hi, *, chrom=None, cols=None
+    ) -> pa.Table:
+        """The rows of `name` whose `col` lies in [lo, hi], and for a
+        chr-partitioned table whose partition is `chr = chrom`, read on
         the driver without a Spark job: what
-        `read(name).filter(col == key).select(*cols).collect()` returns, as
-        tuples. Only row groups whose footer min/max admit `key` are read;
-        a row group without stats always is. `col` and `cols` must be
-        stored in the files (not partition columns)."""
-        hits = []
-        for path, footer, bounds in self._probe_footers(name, col):
+        `read(name).filter(chr == chrom & col BETWEEN lo AND hi)` holds,
+        as an Arrow table of `cols` (default: every column, in the
+        relation's order). Rows come in file order, each file's in
+        stored order. Only row groups whose footer min/max meet [lo, hi]
+        are read; a row group without stats always is. `col` must be
+        stored in the files, not be the partition column."""
+        target = to_arrow_schema(self._schema(name, cols))
+        part = str(chrom) if name in CHR_PARTITIONED else None
+        stored = pa.schema([f for f in target if part is None or f.name != "chr"])
+        tables = []
+        for path, footer, bounds in self._probe_footers(name, part, col):
             groups = [
-                i for i, b in enumerate(bounds) if b is None or b[0] <= key <= b[1]
+                i for i, b in enumerate(bounds)
+                if b is None or (b[0] <= hi and lo <= b[1])
             ]
             if not groups:
                 continue
             with pq.ParquetFile(path, metadata=footer) as f:
-                t = f.read_row_groups(groups, columns=list({col, *cols}))
-            t = t.filter(pc.equal(t[col], key))
-            hits += zip(*(t[c].to_pylist() for c in cols))
-        return hits
+                t = f.read_row_groups(groups, columns=list({col, *stored.names}))
+            t = t.filter((pc.field(col) >= lo) & (pc.field(col) <= hi))
+            tables.append(t.select(stored.names).cast(stored))
+        out = pa.concat_tables(tables) if tables else stored.empty_table()
+        if len(stored) < len(target):  # the chr partition column
+            field = target.field("chr")
+            out = out.add_column(
+                target.names.index("chr"), field,
+                pa.repeat(pa.scalar(chrom, field.type), out.num_rows),
+            )
+        return out
 
-    def _probe_footers(self, name: str, col: str) -> list:
-        """Each file of `name`'s relation, with its footer and every row
-        group's `col` min/max, read on the first probe only."""
-        by_col = self._footers.setdefault(name, {})
-        if col not in by_col:
+    def local(self, name: str, table: pa.Table) -> DataFrame:
+        """`table` (rows of `name`, e.g. from `key_range`) as a DataFrame
+        over a local relation, typed as `read(name)` types its columns.
+        Collecting it runs no Spark job, and the optimizer folds a filter
+        or projection on it into the relation on the driver."""
+        # one chunk: Spark's Arrow reader drops every row after a
+        # zero-row record batch, as a range cut leaves when a file or
+        # row group holds no row in the range
+        return self.spark.createDataFrame(
+            table.combine_chunks(), schema=self._schema(name, table.column_names)
+        )
+
+    def _schema(self, name: str, cols) -> StructType:
+        schema = self.read(name).schema
+        return schema if cols is None else StructType([schema[c] for c in cols])
+
+    def _probe_footers(self, name: str, part, col: str) -> list:
+        """Each file of `name`'s relation in partition directory `part`
+        (`chr=<part>`; None for an unpartitioned table), with its footer
+        and every row group's `col` min/max, read on the first probe of
+        that partition only."""
+        by_part = self._footers.setdefault(name, {})
+        if (part, col) not in by_part:
             files = []
-            for uri in self.read(name).inputFiles():
-                path = unquote(urlparse(uri).path)
+            for path in self._partition_files(name).get(part, []):
                 footer = pq.read_metadata(path)
                 j = footer.schema.names.index(col)
                 bounds = []
@@ -169,8 +215,23 @@ class Warehouse:
                     has = st is not None and st.has_min_max
                     bounds.append((st.min, st.max) if has else None)
                 files.append((path, footer, bounds))
-            by_col[col] = files
-        return by_col[col]
+            by_part[(part, col)] = files
+        return by_part[(part, col)]
+
+    def _partition_files(self, name: str) -> dict:
+        """The files the memoized relation lists, sorted and grouped by
+        their `chr=` partition value (all under None when `name` is not
+        chr-partitioned)."""
+        files = self._files.get(name)
+        if files is None:
+            files = self._files[name] = {}
+            for uri in sorted(self.read(name).inputFiles()):
+                path = unquote(urlparse(uri).path)
+                part = None
+                if name in CHR_PARTITIONED:
+                    part = os.path.basename(os.path.dirname(path)).partition("chr=")[2]
+                files.setdefault(part, []).append(path)
+        return files
 
     def register_views(self) -> None:
         """Expose every table to SQL-text queries (entry-point 3)."""
@@ -196,9 +257,9 @@ class Warehouse:
         row-group min/max stats, so an equality or prefix probe pushed to
         the scan skips every non-overlapping row group: at 93M rows a
         lookup touches ~one file's worth of footer reads plus one row
-        group. Row groups are bounded at `INDEX_ROW_GROUP_BYTES` (~80-100k
+        group. Row groups are bounded at `PROBE_ROW_GROUP_BYTES` (~80-100k
         markers), so that row group stays small however many markers a
-        file holds, and `lookup` reads just it on the driver.
+        file holds, and `key_range` reads just it on the driver.
         Delta/Iceberg z-order+bloom is the transactional upgrade; no
         Delta jar ships in this container (documented ROADMAP.md)."""
         recover(self.root)
@@ -221,8 +282,9 @@ class Warehouse:
         WHERE impute_score >= 0.3, with `stat` aliased `or`.
 
         The study side broadcasts; the gwas⋈b37 join co-partitions on chr
-        when both sides carry it. Persisted chr-partitioned/pos-sorted so
-        the app's locus windows stay pruned."""
+        when both sides carry it. Persisted chr-partitioned/pos-sorted in
+        row groups of at most `PROBE_ROW_GROUP_BYTES`, so a locus window
+        (`key_range` on pos) reads about one small row group per file."""
         recover(self.root)
         # drop gwas's derived chr partition column — b37 is authoritative
         # for coordinates in the view definition

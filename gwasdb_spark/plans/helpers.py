@@ -10,7 +10,10 @@ TIMESTAMP) to sidestep tz-awareness drift between engines.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import Column
@@ -21,11 +24,21 @@ def stage_dir(name: str) -> str:
     """Per-process staging directory for sink→source round-trip queries.
     PID-scoped so two concurrent harness runs on one machine can never
     interleave an overwrite with a read-back; within one process the path
-    is stable, so repeated runs reuse (mode=overwrite) instead of
-    littering tmp."""
-    return os.path.join(
-        tempfile.gettempdir(), f"gwasdb_spark_stage_{os.getpid()}", name
-    )
+    is stable, so repeated runs reuse (mode=overwrite). The process's
+    tree is removed when its interpreter exits."""
+    return os.path.join(_stage_root(os.getpid()), name)
+
+
+@functools.cache
+def _stage_root(pid: int) -> str:
+    root = os.path.join(tempfile.gettempdir(), f"gwasdb_spark_stage_{pid}")
+    atexit.register(_remove_stage_root, root, pid)
+    return root
+
+
+def _remove_stage_root(root: str, pid: int) -> None:
+    if os.getpid() == pid:  # not in a forked child that inherited the hook
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def cents(col: Column) -> Column:

@@ -196,17 +196,29 @@ def test_locus_window_prunes_partitions(wh):
 
 def test_marker_index_point_lookup(wh):
     """The name-sorted marker index must (a) answer exact and anchored-
-    prefix probes identically to the b37 scan path, and (b) push the
-    sargable name predicate into the parquet scan so sorted min/max
-    stats can skip row groups — the PK-b-tree replacement for the
-    interactive probe (gwasDB/app.R:97-101, R/gwas_ddl.sql:5)."""
+    prefix probes identically to the b37 scan path, and (b) serve them
+    on the driver as a local relation — the PK-b-tree replacement for
+    the interactive probe (gwasDB/app.R:97-101, R/gwas_ddl.sql:5) —
+    where the b37 path pushes the sargable name predicate into the
+    parquet scan so sorted min/max stats can skip row groups."""
     from gwasdb_spark.gwas.api import marker_exact, markers_by_probe
 
-    # baseline answers from the b37 path (index not built yet)
+    def executed(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    # baseline answers from the b37 path (index not built yet), whose
+    # sargable predicates reach the scan: equality for the point lookup,
+    # StartsWith for the anchored regex
     assert not wh.has_table("marker_index")
     some_id = wh.read("b37").select("kgp_id").first()["kgp_id"]
     before_exact = marker_exact(wh, some_id).collect()
     before_probe = {r.kgp_id for r in markers_by_probe(wh, "^rs").collect()}
+    pushed = [ln for ln in executed(marker_exact(wh, some_id)).splitlines()
+              if "PushedFilters" in ln]
+    assert any("EqualTo(kgp_id" in ln for ln in pushed), pushed
+    pushed = [ln for ln in executed(markers_by_probe(wh, "^rs")).splitlines()
+              if "PushedFilters" in ln]
+    assert any("StringStartsWith(kgp_id,rs" in ln for ln in pushed), pushed
 
     wh.build_marker_index(n_files=4)
 
@@ -216,14 +228,10 @@ def test_marker_index_point_lookup(wh):
     probe = markers_by_probe(wh, "^rs")
     assert {r.kgp_id for r in probe.collect()} == before_probe
 
-    # sargable predicates reach the scan: equality for the point lookup,
-    # StartsWith for the anchored regex
-    exact_plan = marker_exact(wh, some_id)._jdf.queryExecution().executedPlan().toString()
-    pushed = [ln for ln in exact_plan.splitlines() if "PushedFilters" in ln]
-    assert any("EqualTo(kgp_id" in ln for ln in pushed), pushed
-    probe_plan = probe._jdf.queryExecution().executedPlan().toString()
-    pushed = [ln for ln in probe_plan.splitlines() if "PushedFilters" in ln]
-    assert any("StringStartsWith(kgp_id,rs" in ln for ln in pushed), pushed
+    # with the index, both are local relations: no parquet scan to plan
+    for df in (marker_exact(wh, some_id), probe):
+        plan = executed(df)
+        assert "LocalTableScan" in plan and "FileScan" not in plan, plan
 
 
 def test_literal_prefix_extraction():
@@ -234,6 +242,12 @@ def test_literal_prefix_extraction():
     assert _literal_prefix("^Affx[-_]") == "Affx"
     assert _literal_prefix("rs123") == ""      # unanchored: full regex scan
     assert _literal_prefix("^(rs|Aff)") == ""  # alternation: no literal prefix
+    assert _literal_prefix("^ab|cd") == ""  # 'xcd' matches
+    # a quantifier that allows zero of the last char drops it
+    assert _literal_prefix("^ab*") == _literal_prefix("^ab?c") == "a"
+    assert _literal_prefix("^ab{0,2}") == "a"
+    assert _literal_prefix("^ab+") == "ab"
+    assert _literal_prefix("^é1") == ""  # ASCII only
 
 
 def test_update_set_evaluates_against_pre_update_row(spark):
