@@ -24,6 +24,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, TimestampType
 
 
 def _rows(df):
@@ -229,6 +230,112 @@ def test_timestamp_storage_types(spark, tmp_path, stored):
         assert st["ts"][2:] == [1, 3]
     hit = t.read_where(P.Eq("ts", dt.datetime(1960, 6, 1))).collect()
     assert [r["k"] for r in hit] == [2]
+
+
+def _group(tmp_path, *tables, **write_kw) -> str:
+    """A file group directory holding one pyarrow-written file per table."""
+    import pyarrow.parquet as pq
+
+    gdir = tmp_path / "g"
+    gdir.mkdir()
+    for i, t in enumerate(tables):
+        pq.write_table(t, str(gdir / f"part-{i}.parquet"), **write_kw)
+    return str(gdir)
+
+
+def _schema(**types):
+    """A Spark schema of the named columns ({name: DataType})."""
+    from pyspark.sql.types import StructField, StructType
+
+    return StructType([StructField(c, t) for c, t in types.items()])
+
+
+def test_nanosecond_timestamps_get_no_stats_entry(tmp_path):
+    """A timestamp stored in nanoseconds is not a unit Spark reads back
+    exactly: the column gets no entry, never a guess."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from gwasdb_spark.acid.footer import group_stats
+
+    ts = [dt.datetime(2020, 1, 1), None, dt.datetime(1960, 6, 1)]
+    gdir = _group(
+        tmp_path,
+        pa.table({"k": [1, 2, 3], "ts": pa.array(ts, pa.timestamp("ns"))}),
+    )
+    assert group_stats(gdir, _schema(k=LongType(), ts=TimestampType())) == {
+        "k": [1, 3, 0, 3]
+    }
+
+
+def test_column_missing_from_one_file_gets_no_stats_entry(tmp_path):
+    """A column one file of the group lacks reads back as NULL there,
+    which no footer vouches for: no entry."""
+    import pyarrow as pa
+
+    from gwasdb_spark.acid.footer import group_stats
+
+    gdir = _group(
+        tmp_path,
+        pa.table({"k": [1, 2], "v": [10, 20]}),
+        pa.table({"k": [3]}),
+    )
+    assert group_stats(gdir, _schema(k=LongType(), v=LongType())) == {"k": [1, 3, 0, 3]}
+
+
+def test_truncated_file_gives_no_stats(tmp_path):
+    """A group with a file whose footer cannot be read has no stats at
+    all (always admitted, size unknown)."""
+    import pyarrow as pa
+
+    from gwasdb_spark.acid.footer import group_stats
+
+    gdir = _group(
+        tmp_path,
+        pa.table({"k": [1, 2]}),
+        pa.table({"k": [3, 4]}),
+    )
+    path = os.path.join(gdir, "part-1.parquet")
+    with open(path, "rb") as fh:
+        data = fh.read()
+    with open(path, "wb") as fh:
+        fh.write(data[: len(data) // 2])
+    assert group_stats(gdir, _schema(k=LongType())) == {}
+
+
+def test_all_null_row_group_beside_valued_ones(tmp_path):
+    """An all-null chunk carries no bounds: min/max come from the valued
+    chunks of the group, and every chunk's nulls are counted."""
+    import pyarrow as pa
+
+    from gwasdb_spark.acid.footer import group_stats
+
+    gdir = _group(
+        tmp_path,
+        pa.table({"v": pa.array([None, None, 7, -2, None, 5], pa.int64())}),
+        pa.table({"v": pa.array([None, 40], pa.int64())}),
+        row_group_size=2,
+    )
+    assert group_stats(gdir, _schema(v=LongType())) == {"v": [-2, 40, 4, 8]}
+
+
+def test_valued_chunk_without_bounds_gets_no_stats_entry(tmp_path):
+    """A chunk that holds values but carries only a null count (pyarrow
+    writes no min/max past a 4 KiB string) bounds nothing: its column
+    gets no entry, never bounds taken from the group's other chunks."""
+    import pyarrow as pa
+
+    from gwasdb_spark.acid.footer import group_stats
+
+    gdir = _group(
+        tmp_path,
+        pa.table({"k": [1, 2, 3, 4], "s": ["a", "b", "y" * 5000, None]}),
+        row_group_size=2,
+    )
+    assert group_stats(gdir, _schema(k=LongType(), s=StringType())) == {
+        "k": [1, 4, 0, 4]
+    }
 
 
 def test_writes_without_checks_never_observe(spark, tmp_path, monkeypatch):
