@@ -17,10 +17,11 @@ gap Delta's bloom-filter indexes cover), so:
   default of 1 MiB per file, and turn dictionary encoding off for the
   bloom columns (a fully dictionary-encoded chunk gets no filter).
 - Probe: `group_admits` answers on the driver in pure Python by
-  seeking into each file: the footer, read by `acid/footer.py` (the
-  same read that gives a commit its min/max stats; here only each
-  column chunk's type, path and bloom offset/length are used), then
-  the bloom header and bitset. A value is tested with XXH64 (seed 0)
+  seeking into each file: the footer, decoded by
+  `acid/footer.read_footer` (pyarrow, which reads every min/max stat,
+  does not expose a chunk's bloom offset and length; only each column
+  chunk's type, path and bloom offset/length are used), then the bloom
+  header and bitset. A value is tested with XXH64 (seed 0)
   of its PLAIN encoding — UTF-8 bytes for strings, 4-byte LE for
   INT32, 8-byte LE for INT64 — against the split-block layout
   (parquet-format BloomFilter.md). About 0.2 ms per file and a

@@ -1,26 +1,29 @@
-"""Parquet file footers, read on the driver in pure Python.
+"""Parquet file footers, read on the driver.
 
-A parquet file ends with its metadata (thrift compact protocol), a
-4-byte little-endian length and the magic `PAR1`. parquet-java writes,
-for every column chunk of every row group, the chunk's null count and
-its min/max (Statistics fields 3, 6 and 5), and every row group's row
-count. That is exactly the per-column [min, max, null_count, rows]
-triple an AcidTable manifest records for file skipping, so a commit
-takes its stats from the footers of the files its own write job just
-produced instead of aggregating the rows a second time:
+parquet-java writes, for every column chunk of every row group, the
+chunk's null count and its min/max, and every row group's row count.
+That is exactly the per-column [min, max, null_count, rows] an AcidTable
+manifest records for file skipping, so a commit takes its stats from
+the footers of the files its own write job just produced instead of
+aggregating the rows a second time. The warehouse's keyed probes
+(gwas/warehouse.py) admit row groups on the same statistics.
 
-- `read_footer` seeks the 8-byte tail and decodes the footer with a
-  generic thrift-compact decoder (`_value`); `acid/bloom.py` uses the
-  same read to find each chunk's bloom filter.
-- `group_stats` folds the footers of one file group into the
-  manifest's {logical column: [min, max, null_count, rows]}. Values are
-  decoded by Spark type (INT32: byte, short, int, date, decimal <= 9
-  digits; INT64: long, timestamp, timestamp_ntz, decimal <= 18;
-  FIXED_LEN_BYTE_ARRAY: wider decimals, big-endian; FLOAT and DOUBLE;
-  BYTE_ARRAY: UTF-8 strings; BOOLEAN) into the Python value Spark's own
-  `collect` returns and rendered by `json_safe`, so a footer stat is
-  the value a re-read `min`/`max` aggregate gives. The deprecated signed
-  min/max fields (1, 2) are never read.
+- `row_group_stats` is the one reader of column-chunk statistics. From
+  a footer pyarrow parsed (`pq.read_metadata`) it gives each row
+  group's (min, max, null_count, num_values) of one top-level column,
+  min and max as Spark's own `collect` returns them. It renders the raw
+  statistics (`Statistics.min_raw`/`max_raw`) by Spark type: decimals
+  by their scale, dates by ordinal, timestamps by the unit of their
+  logical type, strings by UTF-8 decode. pyarrow's rendered
+  `Statistics.min` raises for INT32/INT64 decimals and returns
+  UTC-aware datetimes.
+- `group_stats` folds it across the files of one file group into the
+  manifest's {logical column: [min, max, null_count, rows]}, rendered
+  by `json_safe`, so a footer stat is the value a re-read `min`/`max`
+  aggregate gives.
+- `read_footer` decodes a footer with a generic thrift-compact decoder
+  (`_value`) for the one thing pyarrow does not expose: each chunk's
+  bloom-filter offset and length, which `acid/bloom.py` probes.
 
 Soundness (predicates.Pred.may_match prunes on these stats):
 - A chunk that holds non-null values but carries no min/max (an INT96
@@ -30,29 +33,46 @@ Soundness (predicates.Pred.may_match prunes on these stats):
   never written as [None, None, ...], which reads as an all-NULL group.
 - Combining chunks, NaN sorts greatest, as it does in Spark's ordering
   and in parquet-java's float comparator.
-- A file that cannot be read, a column missing from a row group, a
-  timestamp stored as INT96 or in nanoseconds: no entry (or no stats
-  at all for an unreadable group), never a guess.
+- A file that cannot be read, a column missing from a row group or
+  without a null count, a timestamp stored as INT96 or in nanoseconds:
+  no entry (or no stats at all for an unreadable group), never a guess.
+
+INT96 timestamps: Spark's default `outputTimestampType` is INT96 (only
+`session.get_spark` sets TIMESTAMP_MICROS), so an AcidTable written in
+a session that keeps the default has no timestamp stats and no
+timestamp predicate prunes it. No per-writer option changes that: on
+Spark 4.1.2, in an INT96 session, a write with
+`.option(k, "TIMESTAMP_MICROS")` still stored INT96 for each of
+`spark.sql.parquet.outputTimestampType`, `parquet.outputTimestampType`
+and `outputTimestampType`. A fix needs the session's setting.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import decimal as _dec
+import json
 import os
 import struct
 
-# parquet physical types (parquet.thrift `Type`)
-BOOLEAN, INT32, INT64, FLOAT, DOUBLE, BYTE_ARRAY, FIXED = 0, 1, 2, 4, 5, 6, 7
-# SchemaElement.converted_type of INT64 timestamps → microseconds per unit
-_TS_MICROS = {9: 1000, 10: 1}  # TIMESTAMP_MILLIS, TIMESTAMP_MICROS
+import pyarrow as pa
+import pyarrow.parquet as pq
 
-# Spark types whose min/max are meaningful and orderable (decimals too)
-STAT_TYPES = (
-    "byte", "short", "integer", "long", "float", "double",
-    "string", "boolean", "date", "timestamp", "timestamp_ntz",
-)
+# parquet physical types (parquet.thrift `Type`) the bloom probe encodes
+INT32, INT64, BYTE_ARRAY = 1, 2, 6
+
+# Spark types whose min/max are meaningful and orderable (decimals too),
+# each with the physical type its stats are read from
+_PHYSICAL = {
+    "byte": "INT32", "short": "INT32", "integer": "INT32", "date": "INT32",
+    "long": "INT64", "timestamp": "INT64", "timestamp_ntz": "INT64",
+    "float": "FLOAT", "double": "DOUBLE", "string": "BYTE_ARRAY",
+    "boolean": "BOOLEAN",
+}
+STAT_TYPES = tuple(_PHYSICAL)
 _EPOCH_ORDINAL = _dt.date(1970, 1, 1).toordinal()
+# microseconds per unit of an INT64 timestamp's logical type
+_TS_MICROS = {"milliseconds": 1000, "microseconds": 1}
 
 
 def is_stat_type(dtype) -> bool:
@@ -159,107 +179,83 @@ def data_files(group_dir: str) -> list[str]:
 
 
 # ------------------------------------------------------------- stats --
-def _le(raw: bytes) -> int:
-    return int.from_bytes(raw, "little", signed=True)
+def _renderer(dtype, column):
+    """The function turning a raw statistic of `column` (a pyarrow
+    ColumnSchema) into what Spark's `collect` returns for Spark type
+    `dtype`, or None for a pairing this module does not read."""
+    name, ptype = dtype.typeName(), column.physical_type
+    if name.startswith("decimal"):
+        if ptype not in ("INT32", "INT64", "FIXED_LEN_BYTE_ARRAY", "BYTE_ARRAY"):
+            return None
 
+        def unscaled(raw):
+            if isinstance(raw, bytes):
+                raw = int.from_bytes(raw, "big", signed=True)
+            # the string form is exact at any precision
+            return _dec.Decimal(f"{raw}E-{dtype.scale}")
 
-def _be(raw: bytes) -> int:
-    return int.from_bytes(raw, "big", signed=True)
-
-
-def _same(v):
-    return v
-
-
-def _codec(dtype, ptype: int, converted):
-    """(decode, render) for a chunk of Spark type `dtype` stored as
-    physical `ptype`: decode turns a stats field into a value that
-    orders like the column, render turns that into what Spark's
-    `collect` returns. None for a pairing this module does not read."""
-    name = dtype.typeName()
-    if name in ("byte", "short", "integer") and ptype == INT32:
-        return _le, _same
-    if name == "long" and ptype == INT64:
-        return _le, _same
-    if name == "date" and ptype == INT32:
-        return _le, lambda d: _dt.date.fromordinal(d + _EPOCH_ORDINAL)
-    if name in ("timestamp", "timestamp_ntz") and ptype == INT64:
-        unit = _TS_MICROS.get(converted)
-        if unit is None:
+        return unscaled
+    if _PHYSICAL.get(name) != ptype:
+        return None
+    if name == "date":
+        return lambda d: _dt.date.fromordinal(d + _EPOCH_ORDINAL)
+    if name in ("timestamp", "timestamp_ntz"):
+        unit = json.loads(column.logical_type.to_json()).get("timeUnit")
+        if unit not in _TS_MICROS:
             return None
         # Spark's TimestampType / TimestampNTZType.fromInternal
         tz = None if name == "timestamp" else _dt.timezone.utc
 
-        def render(us):
+        def timestamp(raw):
+            us = raw * _TS_MICROS[unit]
             ts = _dt.datetime.fromtimestamp(us // 1_000_000, tz)
             return ts.replace(microsecond=us % 1_000_000, tzinfo=None)
 
-        return (lambda raw: _le(raw) * unit), render
-    if name.startswith("decimal"):
-        decode = {INT32: _le, INT64: _le, FIXED: _be, BYTE_ARRAY: _be}.get(ptype)
-        if decode is None:
-            return None
-        # the string form is exact at any precision
-        return decode, lambda u: _dec.Decimal(f"{u}E-{dtype.scale}")
-    if name == "float" and ptype == FLOAT:
-        return (lambda raw: struct.unpack("<f", raw)[0]), _same
-    if name == "double" and ptype == DOUBLE:
-        return (lambda raw: struct.unpack("<d", raw)[0]), _same
-    if name == "string" and ptype == BYTE_ARRAY:
+        return timestamp
+    if name == "string":
         # unsigned byte order of UTF-8 is code point order
-        return _same, lambda raw: raw.decode("utf-8")
-    if name == "boolean" and ptype == BOOLEAN:
-        return (lambda raw: raw[0] != 0), _same
-    return None
+        return lambda raw: raw.decode("utf-8")
+    return lambda v: v
+
+
+def row_group_stats(footer: pq.FileMetaData, col: str, dtype) -> list:
+    """Each row group's (min, max, null_count, num_values) of top-level
+    column `col`, of Spark type `dtype`, in a footer pyarrow read: min
+    and max as Spark's `collect` returns them, (None, None, ...) for an
+    all-null chunk, and None where the footer cannot vouch for the
+    chunk's values (see the module doc)."""
+    schema = footer.schema
+    j = next(
+        (j for j in range(footer.num_columns)
+         if schema.column(j).path == schema.column(j).name == col),
+        None,
+    )
+    if j is None:
+        return [None] * footer.num_row_groups
+    render = _renderer(dtype, schema.column(j))
+    out = []
+    for i in range(footer.num_row_groups):
+        rg = footer.row_group(i)
+        chunk = rg.column(j)
+        st, n = chunk.statistics, chunk.num_values
+        if st is None or not st.has_null_count or n != rg.num_rows:
+            out.append(None)
+        elif st.null_count == n:
+            out.append((None, None, n, n))
+        elif not st.has_min_max or render is None:
+            out.append(None)  # values without bounds, e.g. INT96
+        else:
+            try:
+                lo, hi = render(st.min_raw), render(st.max_raw)
+                out.append((lo, hi, st.null_count, n))
+            except (ValueError, OverflowError, OSError):
+                out.append(None)  # e.g. a date outside Python's range
+    return out
 
 
 def _nan_last(v):
     """Sort key putting NaN above every number (Spark's float order)."""
     return (v != v, v)
-
-
-def _column_stats(dtype, chunks: list, n_row_groups: int, rows: int):
-    """[min, max, null_count, rows] of one column from its chunks'
-    (ColumnMetaData, the column's converted_type), or None when the footers cannot
-    vouch for every value (see the module doc)."""
-    if len(chunks) != n_row_groups:
-        return None  # the column is missing from some row group
-    nulls, values, render = 0, [], None
-    for meta, converted in chunks:
-        st = meta.get(12) or {}
-        if 3 not in st:
-            return None
-        nulls += st[3]
-        if meta.get(5, 0) <= st[3]:
-            continue  # an all-null chunk: no bounds to fold
-        if 5 not in st or 6 not in st:
-            return None  # no min/max for these values (e.g. INT96)
-        codec = _codec(dtype, meta.get(1), converted)
-        if codec is None:
-            return None
-        decode, render = codec
-        values += [decode(st[6]), decode(st[5])]
-    if sum(meta.get(5, 0) for meta, _ in chunks) != rows:
-        return None  # not a flat column: counts do not add up
-    if not values:
-        return [None, None, nulls, rows]
-    key = _nan_last if dtype.typeName() in ("float", "double") else None
-    lo, hi = min(values, key=key), max(values, key=key)
-    return [json_safe(render(lo)), json_safe(render(hi)), nulls, rows]
-
-
-def _top_level(schema: list) -> dict:
-    """{top-level column name: SchemaElement} of a footer's schema, a
-    depth-first list whose element 0 is the root."""
-    out, i = {}, 1
-    while i < len(schema):
-        out[schema[i][4].decode()] = schema[i]
-        below = schema[i].get(5, 0)  # descendants still to pass over
-        i += 1
-        while below:
-            below += schema[i].get(5, 0) - 1
-            i += 1
-    return out
 
 
 def group_stats(group_dir: str, schema, column_map: dict | None = None) -> dict:
@@ -270,36 +266,22 @@ def group_stats(group_dir: str, schema, column_map: dict | None = None) -> dict:
     footers cannot vouch for gets no entry; an unreadable group gets {}
     (always admitted, size unknown)."""
     cmap = column_map or {}
-    fields = {
-        cmap.get(f.name, f.name): f for f in schema.fields if is_stat_type(f.dataType)
-    }
-    chunks = {p: [] for p in fields}
-    rows = n_row_groups = 0
     try:
-        for path in data_files(group_dir):
-            with open(path, "rb") as fh:
-                footer = read_footer(fh)
-            if footer is None:
-                return {}
-            top = _top_level(footer.get(2, []))
-            for rg in footer.get(4, []):
-                rows += rg.get(3, 0)
-                n_row_groups += 1
-                for c in rg.get(1, []):
-                    meta = c.get(3) or {}
-                    col_path = meta.get(3) or []
-                    if len(col_path) == 1:
-                        name = col_path[0].decode()
-                        if name in chunks:
-                            chunks[name].append((meta, top[name].get(6)))
-    except (OSError, ValueError, IndexError, struct.error):
+        footers = [pq.read_metadata(p) for p in data_files(group_dir)]
+    except (OSError, pa.ArrowException):
         return {}
+    rows = sum(f.num_rows for f in footers)
     out = {}
-    for phys, f in fields.items():
-        try:
-            st = _column_stats(f.dataType, chunks[phys], n_row_groups, rows)
-        except (ValueError, OverflowError, OSError, struct.error):
-            st = None  # e.g. a timestamp outside Python's datetime range
-        if st is not None:
-            out[f.name] = st
+    for f in schema.fields:
+        if not is_stat_type(f.dataType):
+            continue
+        phys = cmap.get(f.name, f.name)
+        chunks = [s for ft in footers for s in row_group_stats(ft, phys, f.dataType)]
+        if None in chunks:
+            continue
+        values = [v for lo, hi, _, _ in chunks if lo is not None for v in (lo, hi)]
+        key = _nan_last if f.dataType.typeName() in ("float", "double") else None
+        lo, hi = min(values, key=key, default=None), max(values, key=key, default=None)
+        nulls = sum(c[2] for c in chunks)
+        out[f.name] = [json_safe(lo), json_safe(hi), nulls, rows]
     return out

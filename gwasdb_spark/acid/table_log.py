@@ -22,12 +22,13 @@ and is the 100 TB metadata path.
 File skipping (round 10): every written group records per-column
 min/max/null stats in the manifest (the Delta data-skipping design).
 They are read from the footers parquet wrote into the group's own
-files (acid/footer.py), on the driver, after the write job: recording
-them costs no aggregate over the rows and no extra Spark job. DML
-with a sargable `acid.predicates.Pred` reads ONLY the groups whose
-stats admit a match — untouched groups are carried into the new
-manifest verbatim, their files never opened, never rewritten
-(mtime-stable, gated in scripts/stress_scale.py). At 100 TB
+files, on the driver, after the write job, by pyarrow through
+`acid/footer.py`'s one stats reader (the one the warehouse's keyed
+probes use): recording them costs no aggregate over the rows and no
+extra Spark job. DML with a sargable `acid.predicates.Pred` reads ONLY
+the groups whose stats admit a match — untouched groups are carried
+into the new manifest verbatim, their files never opened, never
+rewritten (mtime-stable, gated in scripts/stress_scale.py). At 100 TB
 this is the difference between a 1-row UPDATE costing one file group
 and costing a full table rewrite. Every DML op runs this one group
 rewrite: a plain Column predicate is not statically analyzable, so it
@@ -119,37 +120,6 @@ class SchemaMismatch(Exception):
 # OCC retries after the first attempt, for every single-table writer
 # and for MultiTableTxn.commit_appends
 _RETRIES = 3
-
-def _stats_aggs(schema) -> tuple[list[str], list]:
-    """The re-read stats aggregate behind `AcidTable._group_stats`:
-    (stat columns, aggregates) giving the row count and each orderable
-    column's min, max and non-null count. Commits take the same triple
-    from the footers their write job produced (acid/footer.py); this is
-    the reference it must equal."""
-    cols = [f.name for f in schema.fields if _footer.is_stat_type(f.dataType)]
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for c in cols:
-        aggs += [
-            F.min(c).alias(f"__min_{c}"),
-            F.max(c).alias(f"__max_{c}"),
-            F.count(c).alias(f"__cnt_{c}"),
-        ]
-    return cols, aggs
-
-
-def _stats_of(row, cols: list[str]) -> dict:
-    """A `_stats_aggs` result row → the manifest's per-group
-    {col: [min, max, null_count, row_count]}."""
-    rows = int(row["__rows"] or 0)
-    return {
-        c: [
-            _footer.json_safe(row[f"__min_{c}"]),
-            _footer.json_safe(row[f"__max_{c}"]),
-            rows - int(row[f"__cnt_{c}"] or 0),
-            rows,
-        ]
-        for c in cols
-    }
 
 
 def _check_aggs(checks: dict) -> list:
@@ -406,14 +376,6 @@ class AcidTable:
         finally:
             if bucketed:
                 shutil.rmtree(path, ignore_errors=True)
-
-    def _group_stats(self, path: str) -> dict:
-        """Stats of the files under `path` by re-reading them with one
-        Spark aggregate, keyed by the names in the files: the reference
-        the footer stats of a commit are checked against."""
-        back = self.spark.read.parquet(path)
-        cols, aggs = _stats_aggs(back.schema)
-        return _stats_of(back.agg(*aggs).collect()[0], cols)  # 1-row collect
 
     @staticmethod
     def _meta_of(manifest: dict) -> dict:

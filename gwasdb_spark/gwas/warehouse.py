@@ -34,7 +34,10 @@ no Spark job: the marker index by name, and a `chr=` partition of
 `combined` by pos. It groups the files the memoized relation lists
 (`inputFiles()`) by partition directory, reads the footers of a
 partition on its first probe only, and then reads only the row groups
-whose min/max meet the range, cutting the range in Arrow. `local` turns
+whose min/max meet the range, cutting the range in Arrow. The row-group
+min/max come from `acid/footer.row_group_stats`, the one reader of
+column-chunk stats, which also gives AcidTable manifests theirs: a row
+group it cannot vouch for is read, an all-null one is not. `local` turns
 the result into a DataFrame over a local relation: collecting it, or
 a filter or projection on it, runs on the driver without a job.
 `marker_index` and `combined` are written in row groups of at most
@@ -65,6 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from gwasdb_spark.acid.footer import row_group_stats
 from gwasdb_spark.acid.swap import recover, replacing
 
 SILVER_TABLES = ("b37", "marker", "study", "gwas", "no_gwas_result")
@@ -85,8 +89,8 @@ class Warehouse:
         self._relations: dict[str, DataFrame] = {}
         # {table: {chr partition value | None: [path]}}
         self._files: dict[str, dict] = {}
-        # {table: {(partition, column): [(path, footer, [(min, max) | None
-        # per row group])]}}
+        # {table: {(partition, column): [(path, footer, footer's
+        # row_group_stats of the column)]}}
         self._footers: dict[str, dict] = {}
 
     def path(self, name: str) -> str:
@@ -156,16 +160,16 @@ class Warehouse:
         as an Arrow table of `cols` (default: every column, in the
         relation's order). Rows come in file order, each file's in
         stored order. Only row groups whose footer min/max meet [lo, hi]
-        are read; a row group without stats always is. `col` must be
-        stored in the files, not be the partition column."""
+        are read; a row group the footer cannot vouch for always is.
+        `col` must be stored in the files, not be the partition column."""
         target = to_arrow_schema(self._schema(name, cols))
         part = str(chrom) if name in CHR_PARTITIONED else None
         stored = pa.schema([f for f in target if part is None or f.name != "chr"])
         tables = []
-        for path, footer, bounds in self._probe_footers(name, part, col):
+        for path, footer, stats in self._probe_footers(name, part, col):
             groups = [
-                i for i, b in enumerate(bounds)
-                if b is None or (b[0] <= hi and lo <= b[1])
+                i for i, s in enumerate(stats)
+                if s is None or (s[0] is not None and s[0] <= hi and lo <= s[1])
             ]
             if not groups:
                 continue
@@ -201,20 +205,16 @@ class Warehouse:
     def _probe_footers(self, name: str, part, col: str) -> list:
         """Each file of `name`'s relation in partition directory `part`
         (`chr=<part>`; None for an unpartitioned table), with its footer
-        and every row group's `col` min/max, read on the first probe of
-        that partition only."""
+        and every row group's `col` stats (`row_group_stats`, the
+        reader AcidTable manifests take theirs from), read on the first
+        probe of that partition only."""
         by_part = self._footers.setdefault(name, {})
         if (part, col) not in by_part:
+            dtype = self._schema(name, [col])[col].dataType
             files = []
             for path in self._partition_files(name).get(part, []):
                 footer = pq.read_metadata(path)
-                j = footer.schema.names.index(col)
-                bounds = []
-                for i in range(footer.num_row_groups):
-                    st = footer.row_group(i).column(j).statistics
-                    has = st is not None and st.has_min_max
-                    bounds.append((st.min, st.max) if has else None)
-                files.append((path, footer, bounds))
+                files.append((path, footer, row_group_stats(footer, col, dtype)))
             by_part[(part, col)] = files
         return by_part[(part, col)]
 

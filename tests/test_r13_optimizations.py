@@ -3,10 +3,12 @@ pins an invariant the optimization RELIES on, so a later refactor that
 breaks the assumption fails here rather than (only) in a driver hash.
 
 1. `_write_groups` stats (read from the parquet footers of the files
-   the write produced) == a re-read aggregate of those files (the old
-   two-pass truth source), for every stat type, on the single-group
-   path and on the bucketed (relayout) path; and a write on a table
-   without CHECKs observes nothing.
+   the write produced) == a re-read aggregate of those files
+   (`_group_stats`, the old two-pass truth source, kept here as the
+   reference), for every stat type, on the single-group path and on
+   the bucketed (relayout) path; the footer reader's soundness rules
+   for files it cannot vouch for; and a write on a table without
+   CHECKs observes nothing.
 2. `upsert_cell_index`'s derived manifest (column slice of the merged
    index) stays exactly the index's (vec_id, cell) projection —
    including after an upsert that MOVES rows between cells and empties
@@ -31,6 +33,48 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _stats_aggs(schema) -> tuple[list[str], list]:
+    """(stat columns, aggregates) giving the row count and each
+    orderable column's min, max and non-null count."""
+    from gwasdb_spark.acid.footer import is_stat_type
+
+    cols = [f.name for f in schema.fields if is_stat_type(f.dataType)]
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in cols:
+        aggs += [
+            F.min(c).alias(f"__min_{c}"),
+            F.max(c).alias(f"__max_{c}"),
+            F.count(c).alias(f"__cnt_{c}"),
+        ]
+    return cols, aggs
+
+
+def _stats_of(row, cols: list[str]) -> dict:
+    """A `_stats_aggs` result row → the manifest's per-group
+    {col: [min, max, null_count, row_count]}."""
+    from gwasdb_spark.acid.footer import json_safe
+
+    rows = int(row["__rows"] or 0)
+    return {
+        c: [
+            json_safe(row[f"__min_{c}"]),
+            json_safe(row[f"__max_{c}"]),
+            rows - int(row[f"__cnt_{c}"] or 0),
+            rows,
+        ]
+        for c in cols
+    }
+
+
+def _group_stats(spark, path: str) -> dict:
+    """Stats of the files under `path` by re-reading them with one
+    Spark aggregate, keyed by the names in the files: the reference the
+    footer stats of a commit are checked against."""
+    back = spark.read.parquet(path)
+    cols, aggs = _stats_aggs(back.schema)
+    return _stats_of(back.agg(*aggs).collect()[0], cols)  # 1-row collect
+
+
 def _as_json(stats) -> str:
     # NaN != NaN: compare the manifest rendering (json writes NaN)
     return json.dumps(stats)
@@ -41,7 +85,7 @@ def _assert_stats_match_reread(t, m) -> None:
     (keyed back from physical to logical names)."""
     logical = {p: c for c, p in (m.get("column_map") or {}).items()}
     for g in m["file_groups"]:
-        ref = t._group_stats(os.path.join(t._data, g))
+        ref = _group_stats(t.spark, os.path.join(t._data, g))
         ref = {logical.get(c, c): v for c, v in ref.items()}
         assert _as_json(m["stats"][g]) == _as_json(ref), g
 
@@ -112,7 +156,7 @@ def test_write_group_observed_stats_match_reread(spark, tmp_path):
     (group,) = m["file_groups"]
     st = m["stats"][group]
     # re-read the written files and recompute the same aggregate
-    expected = t._group_stats(os.path.join(t._data, group))
+    expected = _group_stats(t.spark, os.path.join(t._data, group))
     assert st == expected
     assert st["k"] == [1, 3, 0, 3]
     assert st["x"] == [-4.25, 10.5, 1, 3]
@@ -190,7 +234,7 @@ def test_oversized_string_gets_no_stats_entry(spark, tmp_path):
     m = t._manifest(t.latest_version())
     (group,) = m["file_groups"]
     assert m["stats"][group] == {"k": [1, 3, 0, 3]}
-    assert t._group_stats(os.path.join(t._data, group))["s"][1] == big
+    assert _group_stats(t.spark, os.path.join(t._data, group))["s"][1] == big
     assert [r["k"] for r in t.read_where(P.Eq("s", big)).collect()] == [1]
     assert t.scan_groups(P.Eq("s", big)) == (1, 1)
 
@@ -336,6 +380,41 @@ def test_valued_chunk_without_bounds_gets_no_stats_entry(tmp_path):
     assert group_stats(gdir, _schema(k=LongType(), s=StringType())) == {
         "k": [1, 4, 0, 4]
     }
+
+
+class _Override:
+    """`obj` with some of its attributes replaced."""
+
+    def __init__(self, obj, **attrs):
+        self._obj, self._attrs = obj, attrs
+
+    def __getattr__(self, name):
+        return self._attrs[name] if name in self._attrs else getattr(self._obj, name)
+
+
+def test_chunk_without_null_count_is_not_vouched_for(tmp_path):
+    """Statistics with min/max but no null count cannot bound IS NULL:
+    such a row group gets no stats. parquet-java and pyarrow always
+    write the count, so the footer here is doctored."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gwasdb_spark.acid.footer import row_group_stats
+
+    path = str(tmp_path / "f.parquet")
+    v = pa.array([1, None, 3, 4], pa.int64())
+    pq.write_table(pa.table({"v": v}), path, row_group_size=2)
+    real = pq.read_metadata(path)
+    assert row_group_stats(real, "v", LongType()) == [(1, 1, 1, 2), (3, 4, 0, 2)]
+
+    def no_count(i):
+        rg = real.row_group(i)
+        chunk = rg.column(0)
+        st = _Override(chunk.statistics, has_null_count=False, null_count=0)
+        return _Override(rg, column=lambda j: _Override(chunk, statistics=st))
+
+    doctored = _Override(real, row_group=no_count)
+    assert row_group_stats(doctored, "v", LongType()) == [None, None]
 
 
 def test_writes_without_checks_never_observe(spark, tmp_path, monkeypatch):

@@ -285,6 +285,25 @@ def test_lookup_reads_row_groups_without_stats(spark, tmp_path):
     assert _lookup(w, "1:7_A_G") == []
 
 
+def test_lookup_skips_all_null_row_groups(spark, tmp_path, monkeypatch):
+    """A row group whose probed column is all NULL holds no row in any
+    range: it is not read."""
+    w = Warehouse(spark, str(tmp_path / "wh"))
+    os.makedirs(w.path("marker_index"))
+    t = pa.table({
+        "kgp_id": [None, None, "1:5_A_G", "1:9_C_T"],
+        "chr": [1, 1, 1, 1],
+        "pos": [1, 2, 5, 9],
+    })
+    pq.write_table(
+        t, os.path.join(w.path("marker_index"), "part-0.parquet"),
+        row_group_size=2,
+    )
+    reads = _count_row_groups_read(monkeypatch)
+    assert _lookup(w, "1:9_C_T") == [(1, 9)]
+    assert reads == [1]
+
+
 @pytest.fixture(scope="module")
 def big(spark, tmp_path_factory):
     """A warehouse whose `combined` chr=1 partition is two interleaved
